@@ -1214,7 +1214,7 @@ def _minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from qizner_spark.operators.dedup import minhash_dedup_pairs
 
     out = minhash_dedup_pairs(_documents(spark, sf_dir), threshold=0.5)
-    _rotate_persisted("minhash_dedup", getattr(out, "_qizner_persisted", None))
+    _rotate_persisted("minhash_dedup", out._qizner_persisted.unpersist)
     return out
 
 
@@ -1222,7 +1222,7 @@ def _simhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from qizner_spark.operators.dedup import simhash_near_pairs, simhash_signatures
 
     out = simhash_near_pairs(simhash_signatures(_documents(spark, sf_dir)), max_hamming=10)
-    _rotate_persisted("simhash_dedup", getattr(out, "_qizner_persisted", None))
+    _rotate_persisted("simhash_dedup", out._qizner_persisted.unpersist)
     return out
 
 
@@ -1356,24 +1356,24 @@ def _flat_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _detect_full(spark, sf_dir, flat=True)
 
 
-#: persisted-intermediate handles from the PREVIOUS invocation of each
-#: repeatable query, released on the next call. The engine's persists
-#: (mentions, ent_pre, minhash signatures) are documented as
-#: caller-owned lineage; a long-lived session re-running queries
-#: (bench sweeps, notebooks) would otherwise accumulate cached blocks
-#: until LRU pressure. This releases MEMORY between invocations — it
-#: never carries results across runs (each call rebuilds its plan from
-#: the parquet inputs).
-_PERSIST_REGISTRY: dict[str, list] = {}
+#: release callbacks for the caches of the PREVIOUS invocation of each
+#: repeatable query, run on the next call. The engine's persists (the
+#: KG build's ``KGStages``, the dedup signatures) are caller-owned; a
+#: long-lived session re-running queries (bench sweeps, notebooks)
+#: would otherwise accumulate cached blocks until LRU pressure. This
+#: releases MEMORY between invocations — it never carries results
+#: across runs (each call rebuilds its plan from the parquet inputs).
+_PERSIST_REGISTRY: dict[str, Callable[[], None]] = {}
 
 
-def _rotate_persisted(key: str, *handles) -> None:
-    for h in _PERSIST_REGISTRY.get(key, []):
+def _rotate_persisted(key: str, release: Callable[[], None]) -> None:
+    previous = _PERSIST_REGISTRY.get(key)
+    if previous is not None:
         try:
-            h.unpersist()
+            previous()
         except Exception:
             pass  # session gone / already released
-    _PERSIST_REGISTRY[key] = [h for h in handles if h is not None]
+    _PERSIST_REGISTRY[key] = release
 
 
 def _kg_single_factory():
@@ -1401,11 +1401,8 @@ def _kg_build_triples(spark: SparkSession, sf_dir: str, factory, reg_key: str) -
     stages = build_kg_from_sf_dir(spark, sf_dir, scorer_factory=factory,
                                   broadcast_alias=True,
                                   max_entities_per_doc=COMENTION_CAP)
-    t = stages["triples"]
-    extra = getattr(t, "_qizner_persisted", None) or []
-    extra = extra if isinstance(extra, list) else [extra]
-    _rotate_persisted(reg_key, stages["mentions"], *extra)
-    return t.select(
+    _rotate_persisted(reg_key, stages.release)
+    return stages["triples"].select(
         "subj", "pred", "obj", "url",
         F.col("warc_ts").cast("long").alias("warc_ts"),
         F.round(F.col("prob").cast("double"), 6).alias("prob"),
@@ -1500,8 +1497,8 @@ def _kg_stream_increments(spark: SparkSession, sf_dir: str) -> DataFrame:
         assemble_kw=dict(broadcast_alias=True,
                          max_entities_per_doc=COMENTION_CAP),
     )
-    t = out["triples"]
-    return t.select(
+    _rotate_persisted("kg_stream_increments", out.release)
+    return out["triples"].select(
         "subj", "pred", "obj", "url",
         F.col("warc_ts").cast("long").alias("warc_ts"),
         F.round(F.col("prob").cast("double"), 6).alias("prob"),

@@ -46,7 +46,7 @@ def kg_stages(spark, sf_dir):
     force(spark, "kg: components (incl CC job)", stages["components"])
     force(spark, "kg: triples (full assembly)", stages["triples"])
     print(f"kg total-after-detection wall: {time.time()-t0:.3f}s")
-    stages["mentions"].unpersist()
+    stages.release()
 
 
 def kg_whole(spark, sf_dir):
@@ -174,7 +174,7 @@ def kg_branches(spark, sf_dir):
              F.min(F.least("a.prob", "b.prob")).alias("prob")))
     force(spark, "branch: canon_edges (selfjoin+agg)", canon_edges)
     force(spark, "branch: full triples", stages["triples"])
-    mentions.unpersist()
+    stages.release()
 
 
 TARGETS["kg_branches"] = kg_branches

@@ -235,15 +235,14 @@ def lsh_candidate_pairs(
 def minhash_dedup_pairs(
     docs: DataFrame, threshold: float = 0.8, num_hashes: int = 64, bands: int = 16,
     k: int = 3, id_col: str = "doc_id", text_col: str = "text",
-    persist_signatures: bool = True,
 ) -> DataFrame:
     """LSH candidates verified by the SIGNATURE Jaccard estimate
     (fraction of agreeing minhashes).
 
     The signature table is referenced THREE times (banding + both
     verification sides); without persistence each action re-runs the
-    shingle/md5/minhash Arrow pass per reference. ``persist_signatures``
-    materializes it once (MEMORY_AND_DISK) — the production analog is
+    shingle/md5/minhash Arrow pass per reference, so it is
+    materialized once (MEMORY_AND_DISK) — the production analog is
     writing signatures to a staging table between phases, which is
     what a 100 TB pipeline does anyway.
 
@@ -251,21 +250,19 @@ def minhash_dedup_pairs(
     The result DataFrame's ``_qizner_persisted`` attribute holds the
     persisted signature handle — long-lived sessions (benches,
     notebooks) that call this repeatedly should
-    ``df._qizner_persisted.unpersist()`` after materializing results,
-    or pass ``persist_signatures=False``; otherwise cached blocks
-    accumulate until LRU eviction pressure."""
-    sigs = minhash_signatures(docs, num_hashes, k, id_col, text_col)
-    if persist_signatures:
-        from pyspark import StorageLevel
+    ``df._qizner_persisted.unpersist()`` after materializing results;
+    otherwise cached blocks accumulate until LRU eviction pressure."""
+    from pyspark import StorageLevel
 
-        sigs = sigs.persist(StorageLevel.MEMORY_AND_DISK)
-        # materialization barrier: the banding subtree and both
-        # verification sides otherwise race concurrent stage futures
-        # into the uncached relation and re-run the signature Arrow
-        # pass per reference (same defect class as the KG pipeline's
-        # round-6 barriers; cache population coordinates only after a
-        # writer finishes a partition)
-        sigs.count()
+    sigs = minhash_signatures(docs, num_hashes, k, id_col, text_col) \
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    # materialization barrier: the banding subtree and both
+    # verification sides otherwise race concurrent stage futures
+    # into the uncached relation and re-run the signature Arrow
+    # pass per reference (same defect class as the KG pipeline's
+    # round-6 barriers; cache population coordinates only after a
+    # writer finishes a partition)
+    sigs.count()
     cands = lsh_candidate_pairs(sigs, bands, num_hashes=num_hashes)
     sa = sigs.withColumnRenamed("doc_id", "id_a").withColumnRenamed("sig", "sig_a")
     sb = sigs.withColumnRenamed("doc_id", "id_b").withColumnRenamed("sig", "sig_b")
@@ -280,8 +277,7 @@ def minhash_dedup_pairs(
         .where(F.col("est_jaccard") >= threshold)
         .select("id_a", "id_b", F.round("est_jaccard", 6).alias("est_jaccard"))
     )
-    if persist_signatures:
-        out._qizner_persisted = sigs  # caller owns the cached lineage
+    out._qizner_persisted = sigs  # caller owns the cached lineage
     return out
 
 
@@ -340,24 +336,22 @@ def simhash_chunk_bounds(max_hamming: int, n_bits: int = 64) -> list[tuple[int, 
     return bounds
 
 
-def simhash_near_pairs(signatures: DataFrame, max_hamming: int = 3,
-                       persist_signatures: bool = True) -> DataFrame:
+def simhash_near_pairs(signatures: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Near-dup pairs with Hamming distance <= max_hamming. Blocking:
     ``max_hamming + 1`` bit-chunks — a qualifying pair shares at least
     one chunk exactly, so the bucketed join is lossless AND never a
     cross join. Output therefore equals the all-pairs filter.
 
-    ``persist_signatures`` (default True) materializes the signature
-    input once: the chunk self-join references it from BOTH sides, and
-    without the persist each side re-runs the full signature Arrow
-    pass (at 10^12 docs: the entire corpus hashed twice). Caller owns
-    the cached lineage via the result's ``_qizner_persisted`` handle,
-    mirroring minhash_dedup_pairs."""
-    if persist_signatures:
-        from pyspark import StorageLevel
+    The signature input is materialized once: the chunk self-join
+    references it from BOTH sides, and without the persist each side
+    re-runs the full signature Arrow pass (at 10^12 docs: the entire
+    corpus hashed twice). Caller owns the cached lineage via the
+    result's ``_qizner_persisted`` handle, mirroring
+    minhash_dedup_pairs."""
+    from pyspark import StorageLevel
 
-        signatures = signatures.persist(StorageLevel.MEMORY_AND_DISK)
-        signatures.count()  # barrier — see minhash_dedup_pairs
+    signatures = signatures.persist(StorageLevel.MEMORY_AND_DISK)
+    signatures.count()  # barrier — see minhash_dedup_pairs
     chunk_exprs = ", ".join(
         f"named_struct('chunk', {c}, 'val', shiftright(simhash, {lo}) & {(1 << width) - 1}L)"
         for c, (lo, width) in enumerate(simhash_chunk_bounds(max_hamming))
@@ -390,8 +384,7 @@ def simhash_near_pairs(signatures: DataFrame, max_hamming: int = 3,
         .distinct()
         .where(F.col("hamming") <= max_hamming)
     )
-    if persist_signatures:
-        out._qizner_persisted = signatures  # caller owns the cached lineage
+    out._qizner_persisted = signatures  # caller owns the cached lineage
     return out
 
 

@@ -195,10 +195,10 @@ def connected_components(
     if not probe:
         out = spark.createDataFrame([], "node string, component string")
         # marker for callers: the map was solved driver-side, so it is
-        # a LocalRelation with EXACT size statistics — the planner can
-        # (and will, under the broadcast threshold) pick a broadcast
-        # join against it natively, no hint needed. Bounded by
-        # construction: <= 2 * driver_threshold nodes.
+        # bounded by construction (<= 2 * driver_threshold nodes).
+        # createDataFrame(list) goes through parallelize, so it plans
+        # as a Scan ExistingRDD with no size statistics: a join against
+        # it broadcasts only once AQE has measured it at runtime.
         out._qizner_local_rows = 0
         return out
     if len(probe) <= driver_threshold:
@@ -351,7 +351,7 @@ def cooccurrence_jaccard(
     the two size re-attach joins are UNHINTED equi-joins on the item
     key (the item dimension is corpus-unbounded — AQE broadcasts only
     when runtime stats say it's genuinely small, same doctrine as
-    ``broadcast_components``). Output is bounded by the pair count of
+    the KG components join). Output is bounded by the pair count of
     the capped self-join, not |items|^2. The ``inter`` stage computes
     the same per-pair shared-key count as
     ``plans.pipeline.comention_edges(...).groupBy(src, dst).count()``

@@ -6,8 +6,9 @@ scale that dictionary is the dimension table the KG linking stage
 joins against the big mentions table. The dictionary built from an
 OPEN corpus is Zipfian-unbounded (10^12-doc webtext easily yields
 10^8+ distinct surfaces), so the join strategy is a caller decision
-(`broadcast_alias`) exactly like ``broadcast_components`` in the
-flagship plan — never an unconditional broadcast hint.
+(``broadcast_alias``) — never an unconditional broadcast hint. (The
+KG triples skip this join: they link by the :func:`entity_id_col`
+projection.)
 """
 
 from __future__ import annotations
@@ -173,11 +174,6 @@ def count_unlabeled_occurrences(docs: DataFrame, alias: DataFrame,
     )
 
 
-def _fallback_entity_id() -> F.Column:
-    return F.concat(F.lit("kb:"), F.col("ent_type"), F.lit(":"),
-                    F.regexp_replace(F.lower(F.col("mention")), r"\s+", "_"))
-
-
 def link_mentions(mentions: DataFrame, alias: DataFrame,
                   broadcast_alias: bool | int = False) -> DataFrame:
     """Attach ``entity_id`` to every mention row via an equi-join on
@@ -226,5 +222,5 @@ def link_mentions(mentions: DataFrame, alias: DataFrame,
                    .join(cold, keys, "left")
         linked = hit.unionByName(miss)
     return linked.withColumn(
-        "entity_id", F.coalesce("entity_id", _fallback_entity_id())
+        "entity_id", F.coalesce("entity_id", entity_id_col())
     )

@@ -135,8 +135,8 @@ def quantile_buckets_approx(
     strata, UNBOUNDED for domain-/url-like strata, so the re-attach
     join is UNHINTED by default (AQE broadcasts exactly when runtime
     stats say the side is genuinely small — same doctrine as
-    ``broadcast_components`` / ``broadcast_alias``). Pass True only
-    for a KNOWN-bounded stratum dimension.
+    ``broadcast_alias``). Pass True only for a KNOWN-bounded stratum
+    dimension.
     """
     probs = [i / n_buckets for i in range(1, n_buckets)]
     bounds = df.groupBy(strata_col).agg(

@@ -258,6 +258,8 @@ def run_resumable(
     """One resumable increment of the flagship pipeline:
     recover -> filter-to-pending -> build KG -> stage -> commit
     manifest -> publish. Crash/rerun safe at every step boundary.
+    Every cache the build persisted is released before the call
+    returns or raises (:meth:`~qizner_spark.plans.pipeline.KGStages.release`).
 
     ``crash_after`` ('stage' | 'commit') raises :class:`SimulatedCrash`
     at the corresponding point — test hook for the crash-injection
@@ -286,37 +288,44 @@ def run_resumable(
         triples = stages["triples"].withColumn(
             "subj_bucket", F.pmod(F.xxhash64("subj"), F.lit(64))
         ).persist()
-        n_new = triples.count()
-        # per-partition lineage for THIS increment (north_rule: one
-        # row per subj_bucket x run_id with triple + source-url
-        # counts). Aggregated to the driver NOW — <= 64 rows — and
-        # written only after publish: the manifest append below
-        # invalidates every cached plan that READS the manifest path
-        # (triples' lineage does, through the resume anti-join), so a
-        # lazy lineage aggregate evaluated after the commit would
-        # recompute against the new manifest and see an empty todo.
-        lineage = None
-        if metrics_path:
-            lineage = (
-                triples.groupBy("subj_bucket")
-                .agg(F.count(F.lit(1)).alias("n_triples"),
-                     F.countDistinct("url").alias("n_source_urls"))
-                .collect()
-            )
-        # 1. STAGE (invisible: underscore prefix hides it from reads)
-        staging = posixpath.join(sink_path, "_staging", run_id)
-        triples.write.mode("overwrite").partitionBy("subj_bucket").parquet(staging)
-        if crash_after == "stage":
-            raise SimulatedCrash("crashed after staging, before manifest commit")
-        # 2. COMMIT: single-file manifest append = one atomic rename.
-        #    Covers zero-triple urls too, so nothing ever reprocesses.
-        todo.select("url").distinct().withColumn(
-            "run_id", F.lit(run_id)
-        ).coalesce(1).write.mode("append").parquet(f"{sink_path}_processed")
-        if crash_after == "commit":
-            raise SimulatedCrash("crashed after manifest commit, before publish")
-        # 3. PUBLISH: one directory rename
-        fs.rename(staging, posixpath.join(sink_path, f"run_id={run_id}"))
+        try:
+            n_new = triples.count()
+            # per-partition lineage for THIS increment (north_rule: one
+            # row per subj_bucket x run_id with triple + source-url
+            # counts). Aggregated to the driver NOW — <= 64 rows — and
+            # written only after publish: the manifest append below
+            # invalidates every cached plan that READS the manifest path
+            # (triples' lineage does, through the resume anti-join), so a
+            # lazy lineage aggregate evaluated after the commit would
+            # recompute against the new manifest and see an empty todo.
+            lineage = None
+            if metrics_path:
+                lineage = (
+                    triples.groupBy("subj_bucket")
+                    .agg(F.count(F.lit(1)).alias("n_triples"),
+                         F.countDistinct("url").alias("n_source_urls"))
+                    .collect()
+                )
+            # 1. STAGE (invisible: underscore prefix hides it from reads)
+            staging = posixpath.join(sink_path, "_staging", run_id)
+            triples.write.mode("overwrite").partitionBy("subj_bucket").parquet(staging)
+            if crash_after == "stage":
+                raise SimulatedCrash("crashed after staging, before manifest commit")
+            # 2. COMMIT: single-file manifest append = one atomic rename.
+            #    Covers zero-triple urls too, so nothing ever reprocesses.
+            todo.select("url").distinct().withColumn(
+                "run_id", F.lit(run_id)
+            ).coalesce(1).write.mode("append").parquet(f"{sink_path}_processed")
+            if crash_after == "commit":
+                raise SimulatedCrash("crashed after manifest commit, before publish")
+            # 3. PUBLISH: one directory rename
+            fs.rename(staging, posixpath.join(sink_path, f"run_id={run_id}"))
+        finally:
+            # no cache outlives the call: a cached plan is matched by the
+            # root paths it reads, not their listing, so a later call over
+            # the same landed path would otherwise read this call's files
+            triples.unpersist()
+            stages.release()
         metrics = {
             "n_pending": n_pending,
             "n_new_triples": n_new,
@@ -334,7 +343,6 @@ def run_resumable(
                 "subj_bucket long, n_triples long, n_source_urls long, "
                 "run_id string, ts long",
             ).coalesce(1).write.mode("append").json(f"{metrics_path}_partitions")
-        triples.unpersist()
     if metrics_path:
         spark.createDataFrame([metrics]).write.mode("append").json(metrics_path)
     return metrics

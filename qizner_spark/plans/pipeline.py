@@ -10,41 +10,31 @@ the KG stages (north_star):
       -> detect_mentions                           # one mapInPandas:
              tokenize (T1/T2) -> segment (D3) -> score -> decode (L6)
              -> in-worker segment merge (D5, NO shuffle) -> flatten (L10)
-      -> link entities (guarded alias join)        # E5 dictionary
-      -> co-mention edges per url                  # self-join per doc
-      -> connected components (large/small-star)   # canonicalization
+      -> (url, entity) rollup, linked by projection # ent_pre, cached
+      -> co-mention pairs per url                  # sorted-array enumeration
+      -> connected components (driver union-find or large/small-star)
       -> triples (subj, pred, obj, url, warc_ts, prob)
 
 Shuffle inventory (the whole point at 100 TB):
-  1. alias-dictionary build: one groupBy(mention, ent_type) over the
-     (small) mention table — map-side combined;
-  2. co-mention edge build: mentions re-keyed by url (narrow if
-     detection output is already url-clustered, which it is — no
-     repartitioning happened since);
-  3. connected components: O(log n) bounded rounds;
+  1. the ``ent_pre`` rollup: one map-side-combined groupBy plus one
+     repartition(url), shared by every downstream consumer;
+  2. the CC edge probe (distinct edges) — and, on graphs above the
+     driver threshold, O(log n) bounded large/small-star rounds;
+  3. the components re-attach (see the comments in ``assemble_kg``);
   4. final write, partitioned by bucket(subj).
 The html binary never crosses a stage boundary. Everything before
 detection is whole-stage codegen; detection is one Arrow pass.
 
-SortMergeJoin disposition (audited on the executed sf0.001 plan,
-locked in by tests/test_plan_shape.py): the initial physical plan
-contains 5 SMJs — the nodes ⟕ components left join inside
-``assign_components`` (appearing once per assembly branch that
-references ``canon``) and the per-url co-mention self-join in
-``canon_edges``. At sandbox scale AQE's runtime statistics convert
-every one of them to BroadcastHashJoin (final plan: 0 SMJ, 0
-CartesianProduct, 0 BroadcastNestedLoopJoin). At 100 TB the url
-self-join and the entity/components joins legitimately STAY
-sort-merge — both sides are large, the url key is already clustered
-from detection (no extra shuffle for the sort), and pinning a
-broadcast there is exactly the OOM the ``broadcast_components``
-guard exists to prevent. No action needed; the plan picks the right
-strategy at each scale because the joins are unhinted equi-joins.
+Cache ownership: :func:`build_kg` and :func:`assemble_kg` return a
+:class:`KGStages` — the named stages plus the DataFrames the build
+persisted. The caller calls ``release()`` once every action over the
+stages has run (:func:`~qizner_spark.plans.checkpoint.run_resumable`
+does so in a ``finally``). Spark matches a cached plan by the root
+paths it reads, not by their file listing, so a cache left behind
+would serve a stale listing to the next build over the same path.
 """
 
 from __future__ import annotations
-
-import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -155,45 +145,52 @@ def comention_edges(linked: DataFrame,
     )
 
 
+class KGStages(dict):
+    """The KG build's named stages (``stages["triples"]``, ...) and the
+    owner of the caches the build persisted (``mentions``, ``ent_pre``
+    and, on the large-graph path, ``pre_canon``). A ``dict`` so stage
+    lookups and ``**stages`` read as before; ``release()`` unpersists
+    every owned cache, after the last action over the stages."""
+
+    def __init__(self, stages: dict, persisted: list[DataFrame]):
+        super().__init__(stages)
+        self.persisted = persisted
+
+    def release(self) -> None:
+        for df in self.persisted:
+            df.unpersist()
+        self.persisted = []
+
+
 def build_kg(
     spark: SparkSession,
     pages: DataFrame,
     scorer_factory=None,
     max_seg_len: int = 512,
-    flat: bool = True,
     decode_threshold: float = 0.5,
-    persist_intermediates: bool = True,
     salt_buckets: int | None = None,
-    broadcast_components: bool = False,
     broadcast_alias: bool | int = False,
     max_entities_per_doc: int | None = DEFAULT_MAX_ENTITIES_PER_DOC,
-) -> dict[str, DataFrame]:
+) -> KGStages:
     """Run the full DAG; returns every intermediate plus ``triples``.
 
-    ``persist_intermediates`` materializes the mentions table once
-    (MEMORY_AND_DISK): the triples plan references it from five
-    branches (alias build, linking, provenance, edges, components),
-    and without persistence each action re-runs the Arrow detection
-    stage per branch. Production equivalent: write mentions to a
-    staging Iceberg table between phases.
+    The mentions table is materialized once (MEMORY_AND_DISK) under
+    its own job, so every reader — the ``ent_pre`` rollup, the public
+    ``alias``/``linked`` stages, a caller's count — shares one run of
+    the Arrow detection stage. Production equivalent: write mentions
+    to a staging Iceberg table between phases. The returned
+    :class:`KGStages` owns that cache — call ``release()`` when done.
 
-    ``broadcast_components`` (default False): the entity->canonical
-    map is UNBOUNDED — on 10^12-doc webtext the canonical-entity
-    vocabulary is easily 10^8+ rows, and an unconditional
-    ``F.broadcast`` hint there OOMs the driver/executors. Left
-    unhinted, AQE's runtime size statistics convert the join to
-    broadcast-hash exactly when the side is genuinely under
-    spark.sql.autoBroadcastJoinThreshold — the correct size estimate
-    at every scale. Pass True only when the caller KNOWS the entity
-    dimension is bounded-small (e.g. a closed dictionary).
-
-    ``broadcast_alias`` (default False): same doctrine for the alias
-    dictionary — the mention-surface vocabulary of an open corpus is
-    Zipfian-unbounded, so the link join is unhinted by default (AQE
-    decides); True force-broadcasts a KNOWN-bounded curated
-    dictionary; an int ``f`` takes the hybrid hot/cold path (see
-    :func:`~qizner_spark.operators.linking.link_mentions`)."""
+    ``broadcast_alias`` (default False): the mention-surface
+    vocabulary of an open corpus is Zipfian-unbounded, so the public
+    ``linked`` stage's join is unhinted by default (AQE decides); True
+    force-broadcasts a KNOWN-bounded curated dictionary; an int ``f``
+    takes the hybrid hot/cold path (see
+    :func:`~qizner_spark.operators.linking.link_mentions`). The
+    triples link by projection and do not read it."""
     scorer_factory = scorer_factory or default_scorer_factory
+
+    from pyspark import StorageLevel
 
     from qizner_spark.session import ensure_scan_parallelism
 
@@ -212,40 +209,34 @@ def build_kg(
     # replaces is a full mention-table shuffle at 10^12 docs.
     mentions = detect_mentions(
         docs, scorer_factory, key_col="url", text_col="text", lang_col="lang",
-        max_seg_len=max_seg_len, flat=flat, threshold=decode_threshold,
+        max_seg_len=max_seg_len, threshold=decode_threshold,
         passthrough_cols=["warc_ts"],
-    ).withColumnRenamed("doc_key", "url")
-    if persist_intermediates:
-        from pyspark import StorageLevel
-
-        mentions = mentions.persist(StorageLevel.MEMORY_AND_DISK)
-        # Materialization BARRIER (round 6): build the cache under one
-        # controlled job before anything references it. The alias
-        # broadcast future and the link-join probe side otherwise
-        # race to materialize the same uncached relation concurrently
-        # — Spark stages coordinate per cached PARTITION only after
-        # one writer finishes, so the whole detection pass executed
-        # 2-3x inside the first job (observed as multiple 64-task
-        # documents-scan stages in one kg action). Production analog:
-        # writing the staging table IS this barrier.
-        mentions.count()
+    ).withColumnRenamed("doc_key", "url").persist(StorageLevel.MEMORY_AND_DISK)
+    # Materialization BARRIER (round 6): build the cache under one
+    # controlled job before anything references it. Concurrent stage
+    # futures otherwise race to materialize the same uncached
+    # relation — Spark stages coordinate per cached PARTITION only
+    # after one writer finishes, so the whole detection pass ran 2-3x
+    # inside one job (observed as multiple 64-task documents-scan
+    # stages in one kg action). Production analog: writing the
+    # staging table IS this barrier.
+    mentions.count()
 
     assembled = assemble_kg(
         mentions, salt_buckets=salt_buckets,
-        broadcast_components=broadcast_components,
         broadcast_alias=broadcast_alias,
         max_entities_per_doc=max_entities_per_doc,
     )
-    return {"docs": docs, "mentions": mentions, **assembled}
+    return KGStages({"docs": docs, "mentions": mentions, **assembled},
+                    [mentions, *assembled.persisted])
 
 
 def assemble_kg(
     mentions: DataFrame,
     salt_buckets: int | None = None,
-    broadcast_components: bool = False,
     broadcast_alias: bool | int = False,
     max_entities_per_doc: int | None = DEFAULT_MAX_ENTITIES_PER_DOC,
-) -> dict[str, DataFrame]:
+) -> KGStages:
     """Corpus-GLOBAL compaction half of the KG DAG — alias dictionary
     -> linking -> co-mention edges -> connected components -> triple
     assembly — over an already-materialized mention table.
@@ -276,8 +267,8 @@ def assemble_kg(
         keys), the cap window (url partition), the co-mention
         self-join (url key) and its pair-fold groupBy all plan ZERO
         further exchanges;
-      * ``ent_pre`` is persisted: the eager CC phase and the triples
-        action both read it, and (measured, round 6) per-branch column
+      * ``ent_pre`` is persisted (the returned :class:`KGStages` owns
+        it): the eager CC phase and the triples action both read it, and (measured, round 6) per-branch column
         pruning otherwise specializes each branch's copy of the
         subtree so exchange reuse NEVER fires — the previous
         "shared" canon exchange really ran four times, shuffling the
@@ -398,23 +389,24 @@ def assemble_kg(
         .withColumnRenamed("component", "canonical_id")
     )
 
-    persisted: list[DataFrame]
-    if getattr(comp, "_qizner_local_rows", None) is not None and not broadcast_components:
-        # Common path (round 6, revised): the component map was solved
-        # by driver-side union-find, so ``comp`` is a LocalRelation
-        # with EXACT size statistics (bounded by construction at
-        # <= 2 x driver_threshold nodes) — the planner natively picks
-        # a broadcast hash join against it whenever it is genuinely
-        # under the broadcast threshold, no hint and no doctrine
-        # violation (the guard exists for UNKNOWN-size dimensions).
-        # A broadcast left join preserves the streamed side's
-        # url partitioning, so the canonicalized rollup needs NO
-        # repartition, NO second persist and NO count barrier: every
-        # triple branch re-attaches canonical ids from the broadcast
-        # against the already-cached ent_pre inside the one triples
-        # action (concurrent subtree reads of a FULLY materialized
-        # cache are safe — the race is only on population). Two
-        # sequential jobs replace the previous four.
+    if getattr(comp, "_qizner_local_rows", None) is not None:
+        # Common path: the component map was solved by driver-side
+        # union-find, so the canonicalized rollup needs NO second
+        # persist and NO count barrier: every triple branch
+        # re-attaches canonical ids against the already-cached
+        # ent_pre inside the one triples action (concurrent subtree
+        # reads of a FULLY materialized cache are safe — the race is
+        # only on population). Two sequential jobs replace the
+        # previous four.
+        # The map has no size statistics: ``createDataFrame(list)``
+        # goes through ``parallelize``, so ``comp`` plans as a
+        # ``Scan ExistingRDD``, and this join starts as a sort-merge
+        # join. Each branch then exchanges the cached rollup on
+        # entity_id (and the map itself) before AQE converts the join
+        # to broadcast-hash from runtime sizes, and the branches'
+        # url-keyed aggregations exchange the joined rows again
+        # (plans/r06/kg_triples_after.txt: Exchanges (39), (45), (62),
+        # then (54), (72)).
         cmap = (comp.withColumnRenamed("node", "entity_id")
                     .withColumnRenamed("component", "_canon"))
         pre_canon = (
@@ -434,10 +426,11 @@ def assemble_kg(
         # The explicit repartition inside the cached plan guarantees
         # the cache reports url hash-partitioning at EVERY scale, so
         # the branch aggregations, the pair enumeration and the
-        # pair-fold groupBy all plan zero further exchanges.
-        comp_side = F.broadcast(components) if broadcast_components else components
+        # pair-fold groupBy all plan zero further exchanges. The join
+        # is unhinted: the canonical-entity map is unbounded on an
+        # open corpus, and AQE broadcasts it only when it is small.
         pre_canon = (
-            ent_pre.join(comp_side, "entity_id")
+            ent_pre.join(components, "entity_id")
             .repartition(F.col("url"))
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
@@ -548,20 +541,16 @@ def assemble_kg(
                     F.col("obj"), "url", "warc_ts", "prob")
         )
     triples = type_alias_triples.unionByName(canon_edges)
-    # the persisted rollups' lineage belongs to the CALLER, mirroring
-    # minhash_dedup_pairs / build_kg's mentions persist
-    triples._qizner_persisted = persisted
-
-    return {
+    return KGStages({
         "alias": alias,
         "linked": linked,
         "edges": edges,
         "components": components,
         "triples": triples,
-    }
+    }, persisted)
 
 
-def build_kg_from_sf_dir(spark: SparkSession, sf_dir: str, **kw) -> dict[str, DataFrame]:
+def build_kg_from_sf_dir(spark: SparkSession, sf_dir: str, **kw) -> KGStages:
     # widen=True: the full-corpus entry takes no limit slices, so the
     # narrow document rows repartition BEFORE the html wrap — the
     # wrap/extract/validate projections run at full parallelism on an
@@ -569,65 +558,3 @@ def build_kg_from_sf_dir(spark: SparkSession, sf_dir: str, **kw) -> dict[str, Da
     # task (see pages_from_documents; build_kg's own widen then
     # becomes a planning-time no-op).
     return build_kg(spark, pages_from_documents(spark, sf_dir, widen=True), **kw)
-
-
-def write_triples(
-    triples: DataFrame, path: str, n_buckets: int = 64, mode: str = "overwrite"
-) -> None:
-    """Partitioned triple sink: deterministic bucket of subj (Iceberg
-    partition transform stand-in; parquet in the sandbox)."""
-    (
-        triples.withColumn("subj_bucket", F.pmod(F.xxhash64("subj"), F.lit(n_buckets)))
-        .write.mode(mode)
-        .partitionBy("subj_bucket")
-        .parquet(path)
-    )
-
-
-def run_with_metrics(
-    spark: SparkSession, pages: DataFrame, out_path: str | None = None,
-    n_buckets: int = 64, **kw,
-) -> dict:
-    """Execute the DAG, recording wall-clock + row counts (the
-    per-run metrics rows the north_rule requires; written alongside
-    the sink as ``_metrics`` when a path is given).
-
-    Lineage is logged PER PARTITION (north_rule: "lineage and
-    throughput metrics logged per partition"): one row per
-    subj_bucket with its triple count and distinct source-url count,
-    written to ``{out_path}_metrics_partitions``. One extra groupBy
-    on the already-persisted triples — at 10^12 docs this is a
-    64-row aggregate, not a second pass over the data."""
-    t0 = time.time()
-    stages = build_kg(spark, pages, **kw)  # mentions already persisted inside
-    stages["triples"] = stages["triples"].persist()
-    n_docs = stages["docs"].count()
-    n_mentions = stages["mentions"].count()
-    n_triples = stages["triples"].count()
-    wall = time.time() - t0
-    metrics = {
-        "n_docs": n_docs,
-        "n_mentions": n_mentions,
-        "n_triples": n_triples,
-        "wall_sec": round(wall, 3),
-        "docs_per_sec": round(n_docs / wall, 2) if wall > 0 else None,
-        "ts": int(time.time()),
-    }
-    if out_path:
-        write_triples(stages["triples"], out_path, n_buckets=n_buckets)
-        spark.createDataFrame([metrics]).write.mode("append").json(f"{out_path}_metrics")
-        per_part = (
-            stages["triples"]
-            .withColumn("subj_bucket",
-                        F.pmod(F.xxhash64("subj"), F.lit(n_buckets)))
-            .groupBy("subj_bucket")
-            .agg(F.count(F.lit(1)).alias("n_triples"),
-                 F.countDistinct("url").alias("n_source_urls"),
-                 F.min("warc_ts").alias("min_warc_ts"),
-                 F.max("warc_ts").alias("max_warc_ts"))
-            .withColumn("wall_sec", F.lit(round(wall, 3)))
-            .withColumn("ts", F.lit(int(time.time())))
-        )
-        per_part.coalesce(1).write.mode("append").json(
-            f"{out_path}_metrics_partitions")
-    return {"stages": stages, "metrics": metrics}

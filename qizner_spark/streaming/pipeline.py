@@ -273,9 +273,11 @@ def stream_kg_increments(
     the ``kg_stream_increments`` driver oracle (which is literally
     the ``kg_triples`` batch oracle).
 
-    Returns ``{"mentions", "triples", ..., "n_batches"}`` where
-    ``n_batches`` counts non-empty micro-batches (tests pin > 1 so
-    the increment path is actually exercised)."""
+    Returns the compaction's :class:`~qizner_spark.plans.pipeline.KGStages`
+    (``"triples"``, ...) with ``"mentions"`` and ``"n_batches"`` added;
+    ``n_batches`` counts non-empty micro-batches (tests pin > 1 so the
+    increment path is actually exercised). The caller calls
+    ``release()`` once done with the stages."""
     import posixpath
 
     from pyspark.sql import functions as F
@@ -317,8 +319,9 @@ def stream_kg_increments(
     # no persist: the staging sink IS the materialization — each
     # compaction branch re-scans cheap columnar parquet, exactly the
     # production staging-table pattern build_kg documents.
-    assembled = assemble_kg(accumulated, **(assemble_kw or {}))
-    return {"mentions": accumulated, "n_batches": n_batches, **assembled}
+    stages = assemble_kg(accumulated, **(assemble_kw or {}))
+    stages.update(mentions=accumulated, n_batches=n_batches)
+    return stages
 
 
 def stream_dedup_pages(

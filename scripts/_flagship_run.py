@@ -73,7 +73,9 @@ def main() -> None:
     n_input_parts = int(os.environ.get("QIZNER_INPUT_PARTITIONS", "64"))
     pages = synthetic_pages(spark, n_pages, words_per_page=words).repartition(n_input_parts)
     # warmup: JVM + python workers + codegen on a small slice
-    build_kg(spark, pages.limit(64), **kw)["triples"].write.format("noop").mode("overwrite").save()
+    warm = build_kg(spark, pages.limit(64), **kw)
+    warm["triples"].write.format("noop").mode("overwrite").save()
+    warm.release()
 
     phases = os.environ.get("QIZNER_SCALING_PHASES") == "1"
     t0 = time.time()
@@ -93,6 +95,7 @@ def main() -> None:
         stages["triples"].write.format("noop").mode("overwrite").save()
     wall = time.time() - t0
     n_triples = stages["triples"].count()
+    stages.release()
     print(json.dumps({
         "mode": mode, "n_pages": n_pages, "words_per_page": words, "cpus": cpus,
         "wall_sec": round(wall, 3), "docs_per_sec": round(n_pages / wall, 2),

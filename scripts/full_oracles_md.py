@@ -2,7 +2,8 @@
 
 Writes BENCH/FULL_ORACLES.md: one `ok`/`FAIL` line per declared query
 from scripts/check_oracles.py at the given sf dir, with the HEAD
-commit recorded — the per-round full-sweep evidence
+commit recorded (``-dirty`` when the swept tree had uncommitted
+changes) — the per-round full-sweep evidence
 (tests/test_contract.py asserts every queries() name has a green row).
 
 Usage: python scripts/full_oracles_md.py [sf_dir]
@@ -19,7 +20,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    head = subprocess.run(["git", "-C", REPO, "rev-parse", "--short", "HEAD"],
+    head = subprocess.run(["git", "-C", REPO, "describe", "--always", "--dirty", "--abbrev=7"],
                           capture_output=True, text=True).stdout.strip()
     out = subprocess.run(
         [sys.executable, os.path.join(REPO, "scripts", "check_oracles.py"), sf_dir],

@@ -19,7 +19,8 @@ from qizner_spark.operators.evalops import (
     evaluate_mentions_df,
 )
 from qizner_spark.operators.mentions import detect_mentions
-from qizner_spark.plans.pipeline import build_kg_from_sf_dir, run_with_metrics
+from qizner_spark.plans.checkpoint import run_resumable
+from qizner_spark.plans.pipeline import build_kg_from_sf_dir
 from qizner_spark.sources.corpus import read_corpus_jsonl
 from qizner_spark.sources.pages import pages_from_documents
 
@@ -108,7 +109,8 @@ def kg_stages(spark, sf_dir):
     stages = build_kg_from_sf_dir(spark, sf_dir)
     for name in ("mentions", "components", "triples"):
         stages[name] = stages[name].cache()
-    return stages
+    yield stages
+    stages.release()
 
 
 class TestKgPipeline:
@@ -132,16 +134,18 @@ class TestKgPipeline:
         # every linked entity got a canonical id
         assert comp.where(F.col("canonical_id").isNull()).count() == 0
 
-    def test_run_with_metrics(self, spark, sf_dir, tmp_path):
-        out = run_with_metrics(spark, pages_from_documents(spark, sf_dir),
-                               out_path=str(tmp_path / "triples"))
-        m = out["metrics"]
-        assert m["n_docs"] > 0 and m["n_triples"] > 0 and m["docs_per_sec"] > 0
-        back = spark.read.parquet(str(tmp_path / "triples"))
-        assert back.count() == m["n_triples"]
+    def test_resumable_metrics_row(self, spark, sf_dir, tmp_path):
+        sink, mpath = str(tmp_path / "triples"), str(tmp_path / "metrics")
+        m = run_resumable(spark, pages_from_documents(spark, sf_dir), sink,
+                          metrics_path=mpath)
+        assert m["n_pending"] > 0 and m["n_new_triples"] > 0 and m["wall_sec"] > 0
+        back = spark.read.parquet(sink)
+        assert back.count() == m["n_new_triples"]
         assert "subj_bucket" in back.columns
-        metrics_back = spark.read.json(str(tmp_path / "triples_metrics"))
-        assert metrics_back.count() == 1
+        rows = spark.read.json(mpath).collect()
+        assert len(rows) == 1
+        assert rows[0]["run_id"] == m["run_id"]
+        assert rows[0]["n_new_triples"] == m["n_new_triples"]
 
 
 class TestComentionCap:
@@ -199,16 +203,14 @@ class TestComentionCap:
 
 
 def test_triple_sink_partition_pruning(spark, sf_dir, tmp_path):
-    """The subj_bucket-partitioned sink must prune at read time: a
-    bucket-filtered scan shows the predicate in PartitionFilters (so
-    at 10^12 triples a single-entity provenance lookup reads 1/64 of
-    the files), and partition pruning composes with column pruning
-    (ReadSchema carries only the projected columns)."""
-    from qizner_spark.plans.pipeline import build_kg_from_sf_dir, write_triples
-
-    triples = build_kg_from_sf_dir(spark, sf_dir)["triples"]
+    """The run_resumable sink (run_id=/subj_bucket= layout) must prune
+    at read time: a bucket-filtered scan shows the predicate in
+    PartitionFilters (so at 10^12 triples a single-entity provenance
+    lookup reads 1/64 of the files), and partition pruning composes
+    with column pruning (ReadSchema carries only the projected
+    columns)."""
     path = str(tmp_path / "sink")
-    write_triples(triples, path)
+    run_resumable(spark, pages_from_documents(spark, sf_dir), path)
     back = spark.read.parquet(path)
     q = back.where(F.col("subj_bucket") == 7).select("subj", "obj")
     plan = q._jdf.queryExecution().executedPlan().toString()

@@ -10,10 +10,11 @@ Rules encoded here:
     must be equi-join only.
   * Small-dimension joins the code hints (ANN query side) must
     actually plan as ``BroadcastHashJoin``.
-  * The components join AND the alias-dictionary join are UNHINTED by
-    default (AQE decides); their ``broadcast_*`` flags must actually
-    add the hint when forced (no dead flags), and the hybrid alias
-    hot/cold path must stay equi-join only.
+  * The components join is UNHINTED on both assembly paths, and the
+    alias-dictionary join is UNHINTED by default (AQE decides); its
+    ``broadcast_alias`` flag must actually add the hint when forced
+    (no dead flag), and the hybrid alias hot/cold path must stay
+    equi-join only.
 
 Plans are inspected AFTER an action so AQE's runtime replanning is
 final (the string still contains the initial plan as a subtree, so
@@ -150,9 +151,9 @@ def _alias_fixture(spark, sf_dir):
 
 
 class TestAliasBroadcastGuard:
-    """Mirror of TestComponentsBroadcastGuard for the alias
-    dictionary: an open-corpus surface vocabulary is Zipfian-unbounded,
-    so link_mentions must not carry an unconditional broadcast hint."""
+    """Broadcast guard for the alias dictionary: an open-corpus surface
+    vocabulary is Zipfian-unbounded, so link_mentions must not carry
+    an unconditional broadcast hint."""
 
     def test_parity_across_strategies(self, spark, sf_dir):
         from qizner_spark.operators.linking import link_mentions
@@ -193,17 +194,15 @@ class TestAliasBroadcastGuard:
         hot/cold must emit the same triples as the unhinted default."""
         from qizner_spark.plans.pipeline import build_kg_from_sf_dir
 
-        cols = ["subj", "pred", "obj", "url"]
-        base = build_kg_from_sf_dir(
-            spark, sf_dir, persist_intermediates=False
-        )["triples"].select(cols)
+        def triples(**kw):
+            stages = build_kg_from_sf_dir(spark, sf_dir, **kw)
+            rows = sorted(stages["triples"].select("subj", "pred", "obj", "url").collect())
+            stages.release()
+            return rows
+
+        base = triples()
         for strategy in (True, 2):
-            other = build_kg_from_sf_dir(
-                spark, sf_dir, persist_intermediates=False,
-                broadcast_alias=strategy,
-            )["triples"].select(cols)
-            assert base.exceptAll(other).count() == 0, strategy
-            assert other.exceptAll(base).count() == 0, strategy
+            assert triples(broadcast_alias=strategy) == base, strategy
 
     def test_hybrid_plans_no_bnlj_and_default_still_broadcasts_via_aqe(self, spark, sf_dir):
         from qizner_spark.operators.linking import link_mentions
@@ -217,42 +216,45 @@ class TestAliasBroadcastGuard:
         assert "CartesianProduct" not in hybrid_plan
 
 
-class TestComponentsBroadcastGuard:
-    def test_default_is_unhinted_and_parity_with_hinted(self, spark, sf_dir):
-        """The entity->canonical join must not carry an unconditional
-        broadcast hint (unbounded dimension at webtext scale); forcing
-        the hint must not change the result."""
+class TestComponentsLargeGraphPath:
+    def test_distributed_path_matches_driver_path_unhinted_and_released(
+            self, spark, sf_dir, monkeypatch):
+        """Force the large-graph assembly (distributed connected
+        components, materialized ``pre_canon``): it must emit the
+        driver path's triples, join the unbounded entity->canonical
+        map WITHOUT a broadcast hint (AQE may still broadcast it from
+        runtime sizes), and ``release()`` must free ``pre_canon`` along
+        with the other caches."""
+        from pyspark import StorageLevel
+
+        from qizner_spark.operators import graph
         from qizner_spark.plans.pipeline import build_kg_from_sf_dir
 
-        t_default = build_kg_from_sf_dir(
-            spark, sf_dir, persist_intermediates=False
-        )["triples"]
-        t_hinted = build_kg_from_sf_dir(
-            spark, sf_dir, persist_intermediates=False, broadcast_components=True
-        )["triples"]
-        cols = ["subj", "pred", "obj", "url"]
-        assert t_default.select(cols).exceptAll(t_hinted.select(cols)).count() == 0
-        assert t_hinted.select(cols).exceptAll(t_default.select(cols)).count() == 0
+        cols = ["subj", "pred", "obj", "url", "warc_ts", "prob"]
+        driver = build_kg_from_sf_dir(spark, sf_dir)
+        want = sorted(driver["triples"].select(cols).collect())
+        driver.release()
 
-    def test_no_broadcast_hint_in_default_logical_plan(self, spark, sf_dir):
-        """ResolvedHint on the components side would mean the guard
-        regressed to an unconditional broadcast; AQE choosing a
-        broadcast at runtime (size-based) remains fine. The default
-        plan still carries the alias-dictionary hints (replicated per
-        assembly branch), so compare default vs forced rather than
-        asserting zero."""
-        from qizner_spark.plans.pipeline import build_kg_from_sf_dir
+        solved = []
+        cc = graph.connected_components
 
-        def hints(bc: bool) -> int:
-            t = build_kg_from_sf_dir(
-                spark, sf_dir, persist_intermediates=False, broadcast_components=bc
-            )["triples"]
-            return t._jdf.queryExecution().analyzed().toString().count("ResolvedHint")
+        def distributed(edges, **kw):
+            solved.append(cc(edges, driver_threshold=0, **kw))
+            return solved[-1]
 
-        assert hints(False) < hints(True), (
-            "broadcast_components=True added no hint — the flag is dead — "
-            "or the default plan already hints the components join"
-        )
+        monkeypatch.setattr(graph, "connected_components", distributed)
+        stages = build_kg_from_sf_dir(spark, sf_dir)
+        assert solved and not hasattr(solved[-1], "_qizner_local_rows"), \
+            "the build did not take the distributed components path"
+        triples = stages["triples"]
+        assert sorted(triples.select(cols).collect()) == want
+        assert "ResolvedHint" not in triples._jdf.queryExecution().analyzed().toString()
+
+        owned = list(stages.persisted)
+        assert len(owned) == 3  # mentions, ent_pre, pre_canon
+        assert all(df.storageLevel != StorageLevel.NONE for df in owned)
+        stages.release()
+        assert all(df.storageLevel == StorageLevel.NONE for df in owned)
 
 
 class TestAnnQueryBroadcastGuard:

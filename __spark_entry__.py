@@ -216,7 +216,7 @@ def _hyperplane_bucket_sql(vec: str, dim: int = 64, n_planes: int = 4, seed: int
 
 
 # per-doc distinct-entity cap for every co-mention pairing (the
-# O(k^2) self-join bound; see plans/pipeline.py
+# O(k^2) per-doc pair bound; see plans/pipeline.py
 # DEFAULT_MAX_ENTITIES_PER_DOC). 12 BITES at sf0.01 — ~370 of 425
 # pages carry more than 12 distinct entities — so the capped path is
 # what the oracles actually hash-verify. Shared by the kg_triples
@@ -538,15 +538,16 @@ def _per_doc_entity_array(spark: SparkSession, sf_dir: str,
     """Capped per-doc DISTINCT entity set as ONE native projection:
     ``slice(sort_array(array_intersect(tokens, gazetteer)), 1, cap)``.
 
-    Row-for-row identical to routing the relational gazetteer
-    mentions through ``per_doc_entity_set(m, cap)`` — that path has
-    no prob column, so the pipeline's rank (max prob DESC, entity_id
-    ASC) degenerates to entity_id ASC, which is exactly the sorted
-    array's first ``cap`` elements. The rewrite replaces the token
-    explode + dictionary join + url exchange + groupBy + rank window
-    (four shuffling operators over the token/mention tables) with a
-    zero-shuffle narrow projection (guide §2.4 "remove shuffles
-    outright"); the closed gazetteer inlines as an array literal.
+    The relational gazetteer mentions have no prob column, so the KG
+    pipeline's cap rank (max prob DESC, entity_id ASC) degenerates to
+    entity_id ASC — exactly the sorted array's first ``cap`` elements
+    (``_COMENTION_SQL``'s row_number window encodes the same rank).
+    The projection replaces a token explode + dictionary join + url
+    exchange + groupBy + rank window (four shuffling operators over
+    the token/mention tables) with a zero-shuffle narrow projection
+    (guide §2.4 "remove shuffles outright"); the closed gazetteer
+    inlines as an array literal. The sorted distinct array is the
+    input :func:`~qizner_spark.operators.pairs.ordered_pairs` expects.
     Only valid for the PROBLESS relational demos — the kg_* DAGs rank
     by detection prob and keep the operator path."""
     gaz = ", ".join(f"'{m}'" for m in sorted(GAZETTEER_SINGLE))
@@ -558,28 +559,17 @@ def _per_doc_entity_array(spark: SparkSession, sf_dir: str,
     )
 
 
-def _entity_pair_rows(ents: DataFrame) -> DataFrame:
-    """(url, src, dst) with src < dst — the per-doc co-mention pairs,
-    enumerated from the sorted entity array with nested transforms
-    (same rows as the per_doc self-join on url, no join needed)."""
-    pairs = (
-        "flatten(transform(_ents, (x, i) -> "
-        "transform(slice(_ents, i + 2, size(_ents)), y -> "
-        "struct(x AS src, y AS dst))))"
-    )
-    return ents.select("url", F.explode(F.expr(pairs)).alias("_p")) \
-        .select("url", "_p.src", "_p.dst")
-
-
 def _comention_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Co-mention pair counting over the capped per-doc entity set
     (no prob column -> rank degenerates to entity_id ASC, i.e. the
     first COMENTION_CAP mentions alphabetically per doc). Pairs per
     doc are distinct by construction, so the count per (src, dst) is
     the distinct-doc count."""
+    from qizner_spark.operators.pairs import ordered_pairs
+
     return (
-        _entity_pair_rows(_per_doc_entity_array(spark, sf_dir))
-        .groupBy("src", "dst")
+        ordered_pairs(_per_doc_entity_array(spark, sf_dir), "_ents")
+        .groupBy(F.col("a").alias("src"), F.col("b").alias("dst"))
         .agg(F.count(F.lit(1)).alias("n_docs"))
     )
 
@@ -592,10 +582,7 @@ def _entity_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     membership = _per_doc_entity_array(spark, sf_dir).select(
         "url", F.explode("_ents").alias("entity_id")
     )
-    return cooccurrence_jaccard(
-        membership, "url", "entity_id",
-        assume_distinct=True,  # array elements are distinct per url
-    )
+    return cooccurrence_jaccard(membership, "url", "entity_id")
 
 
 _COMENTION_SQL = f"""
@@ -877,9 +864,10 @@ def _comention_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     literal — they differ in the last ulp). Global rank window is
     fine at 24 nodes; at scale rank per partition or top-k."""
     from qizner_spark.operators.graph import pagerank
+    from qizner_spark.operators.pairs import ordered_pairs
 
-    edges = _entity_pair_rows(_per_doc_entity_array(spark, sf_dir)) \
-        .select("src", "dst").distinct()
+    edges = ordered_pairs(_per_doc_entity_array(spark, sf_dir), "_ents") \
+        .select(F.col("a").alias("src"), F.col("b").alias("dst")).distinct()
     pr = pagerank(edges, damping=0.85, iterations=3)
     w = Window.orderBy(F.desc("pr"), F.asc("node"))
     return pr.select(

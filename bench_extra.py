@@ -93,13 +93,8 @@ def tfidf_stages(spark, sf_dir):
 
 def pagerank_stages(spark, sf_dir):
     import __spark_entry__ as em
-    from qizner_spark.plans.pipeline import comention_edges
 
-    m = em._ner_mentions(spark, sf_dir).select(
-        F.col("doc_id").alias("url"), F.col("mention").alias("entity_id"))
-    force(spark, "pagerank: mentions", m)
-    edges = comention_edges(m, max_entities_per_doc=em.COMENTION_CAP) \
-        .select("src", "dst").distinct()
+    edges = em._comention_edges(spark, sf_dir).select("src", "dst")
     force(spark, "pagerank: edges", edges)
     q = em.queries()["comention_pagerank"]
     force(spark, "pagerank: full", q(spark, sf_dir))
@@ -132,52 +127,6 @@ def main():
         TARGETS[n](spark, sf_dir)
     spark.stop()
 
-
-
-
-def kg_branches(spark, sf_dir):
-    """Attribute the triples-assembly time branch by branch."""
-    import __spark_entry__ as em
-    from qizner_spark.operators.linking import build_alias_dictionary, link_mentions
-    from qizner_spark.plans.pipeline import (
-        DEFAULT_MAX_ENTITIES_PER_DOC, build_kg_from_sf_dir,
-    )
-    from pyspark.sql import Window
-
-    stages = build_kg_from_sf_dir(
-        spark, sf_dir, scorer_factory=em._kg_single_factory,
-        broadcast_alias=True, max_entities_per_doc=em.COMENTION_CAP)
-    mentions, linked, components = stages["mentions"], stages["linked"], stages["components"]
-    force(spark, "branch: mentions materialize", mentions)
-    canon = linked.join(components, "entity_id").repartition(F.col("url"))
-    force(spark, "branch: canon (join+url exchange)", canon)
-    type_triples = canon.groupBy("url", "canonical_id", "ent_type").agg(
-        F.min("warc_ts").alias("warc_ts"), F.min("prob").alias("prob"))
-    force(spark, "branch: type_triples", type_triples)
-    alias_triples = canon.groupBy("url", "canonical_id", "mention").agg(
-        F.min("warc_ts").alias("warc_ts"), F.min("prob").alias("prob"))
-    force(spark, "branch: alias_triples", alias_triples)
-    ent_doc = canon.groupBy("url", "entity_id", "canonical_id").agg(
-        F.min("warc_ts").alias("warc_ts"), F.min("prob").alias("prob"),
-        F.max("prob").alias("_rank_prob"))
-    w = Window.partitionBy("url").orderBy(F.col("_rank_prob").desc(), F.col("entity_id").asc())
-    ent_doc = ent_doc.withColumn("_rn", F.row_number().over(w)).where(
-        F.col("_rn") <= em.COMENTION_CAP).drop("_rn").drop("_rank_prob")
-    force(spark, "branch: ent_doc (agg+capwindow)", ent_doc)
-    a, b = ent_doc.alias("a"), ent_doc.alias("b")
-    canon_edges = (
-        a.join(b, "url")
-        .where(F.col("a.entity_id") < F.col("b.entity_id"))
-        .groupBy(F.col("url"), F.col("a.canonical_id").alias("subj"),
-                 F.col("b.canonical_id").alias("obj"))
-        .agg(F.min(F.col("a.warc_ts")).alias("warc_ts"),
-             F.min(F.least("a.prob", "b.prob")).alias("prob")))
-    force(spark, "branch: canon_edges (selfjoin+agg)", canon_edges)
-    force(spark, "branch: full triples", stages["triples"])
-    stages.release()
-
-
-TARGETS["kg_branches"] = kg_branches
 
 if __name__ == "__main__":
     main()

@@ -4,9 +4,11 @@ embedding-cosine near-dup.
 Scale design:
   * exact dedup is one hash groupBy on a normalized text key (no
     text column in the shuffle — only a 128-bit digest + id);
-  * candidate generation (LSH band-bucket join / SimHash band join /
-    hyperplane buckets) keeps pair enumeration within buckets, never
-    a full cross join;
+  * candidate generation keeps pair enumeration within buckets, never
+    a full cross join: LSH band buckets and SimHash chunk buckets are
+    grouped into sorted per-bucket arrays expanded by
+    :func:`~qizner_spark.operators.pairs.ordered_pairs`; the
+    embedding near-dup path probes hyperplane buckets by equi-join;
   * signatures are computed in ONE Arrow pass with numpy (vectorized
     crc32-seeded universal hashing — stable across workers, unlike
     Python ``hash``);
@@ -28,6 +30,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.types import ArrayType, LongType, StringType, StructField, StructType
+
+from qizner_spark.operators.pairs import ordered_pairs
 
 MERSENNE = (1 << 61) - 1
 
@@ -191,22 +195,29 @@ def lsh_candidate_pairs(
     sharing any band become candidates — never a global cross join.
 
     Round-6 shape: ONE groupBy of the banded table into sorted
-    per-bucket doc-id arrays, then native nested-slice pair
-    enumeration — instead of the (band, bh) self-join, which
-    exchanged the banded table TWICE (once per join side) and built a
-    per-bucket hash table to produce the identical pair set.
-    Enumeration from a sorted array with j > i IS the
+    per-bucket doc-id arrays, then :func:`ordered_pairs` — instead of
+    the (band, bh) self-join, which exchanged the banded table TWICE
+    (once per join side) and built a per-bucket hash table to produce
+    the identical pair set. "a before b" in a sorted array IS the
     a.doc_id < b.doc_id join predicate, so the output is
-    row-identical. Per-row memory is O(bucket size) (the tail slice),
-    never O(bucket^2); the pair COUNT per bucket is the same k^2/2 in
-    both forms — a mega-bucket means a mega-duplicate-cluster, which
-    upstream exact dedup should collapse before LSH either way.
+    row-identical. The pair COUNT per bucket is k^2/2 in both forms —
+    a mega-bucket means a mega-duplicate-cluster, which upstream
+    exact dedup should collapse before LSH either way.
+
+    ``bands`` must not exceed ``num_hashes``: a band of zero rows
+    hashes the empty string for every doc, which would put the whole
+    corpus in one bucket per band (all pairs as candidates).
 
     Pass ``num_hashes`` to keep the plan fully lazy; inferring it
     runs a driver-side ``first()`` action mid-plan (fallback only)."""
     if num_hashes is None:
         num_hashes = int(signatures.select(F.size("sig").alias("n")).first()["n"])
     rows_per_band = num_hashes // bands
+    if rows_per_band == 0:
+        raise ValueError(
+            f"bands={bands} > num_hashes={num_hashes}: every band would be "
+            "empty and bucket the whole corpus together"
+        )
     banded = signatures.select(
         "doc_id",
         F.explode(
@@ -222,14 +233,9 @@ def lsh_candidate_pairs(
         .agg(F.sort_array(F.collect_list("doc_id")).alias("_ids"))
         .where(F.size("_ids") > 1)
     )
-    return (
-        buckets.select(F.posexplode("_ids").alias("_i", "id_a"), "_ids")
-        .select(
-            "id_a",
-            F.explode(F.expr("slice(_ids, _i + 2, size(_ids))")).alias("id_b"),
-        )
-        .distinct()
-    )
+    return ordered_pairs(buckets, "_ids").select(
+        F.col("a").alias("id_a"), F.col("b").alias("id_b")
+    ).distinct()
 
 
 def minhash_dedup_pairs(
@@ -362,9 +368,9 @@ def simhash_near_pairs(signatures: DataFrame, max_hamming: int = 3) -> DataFrame
     ).select("doc_id", "simhash", "cc.chunk", "cc.val")
     # bucket-grouped pair enumeration (round 6): same rewrite as
     # lsh_candidate_pairs — ONE exchange of the chunked table into
-    # sorted per-bucket (doc_id, simhash) arrays, nested-slice pair
-    # expansion, instead of the two-sided chunk self-join. Sorted
-    # structs lead with doc_id, so j > i enumeration IS the
+    # sorted per-bucket (doc_id, simhash) arrays expanded by
+    # ordered_pairs, instead of the two-sided chunk self-join. Sorted
+    # structs lead with doc_id, so "a before b" IS the
     # a.doc_id < b.doc_id predicate; rows are identical.
     buckets = (
         chunked.groupBy("chunk", "val")
@@ -372,13 +378,10 @@ def simhash_near_pairs(signatures: DataFrame, max_hamming: int = 3) -> DataFrame
         .where(F.size("_ds") > 1)
     )
     out = (
-        buckets.select(F.posexplode("_ds").alias("_i", "_a"), "_ds")
+        ordered_pairs(buckets, "_ds")
         .select(
-            "_a", F.explode(F.expr("slice(_ds, _i + 2, size(_ds))")).alias("_b")
-        )
-        .select(
-            F.col("_a.doc_id").alias("id_a"), F.col("_b.doc_id").alias("id_b"),
-            F.bit_count(F.col("_a.simhash").bitwiseXOR(F.col("_b.simhash")))
+            F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"),
+            F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
             .cast("int").alias("hamming"),
         )
         .distinct()

@@ -23,6 +23,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from qizner_spark.operators.pairs import ordered_pairs
+
 DEFAULT_SALT_BUCKETS = 16
 
 #: A src key whose (symmetrized) neighborhood meets this row count is
@@ -286,7 +288,7 @@ def pagerank(
     # the union/join forms referenced their upstream subtree twice
     # each, and exchange reuse cannot canonicalize the reversed
     # projection, so the ENTIRE edge derivation (at the driver surface:
-    # detection -> per-doc self-join -> distinct) executed twice more
+    # detection -> per-doc pairs -> distinct) executed twice more
     # inside this one checkpoint job.
     sym = (
         e.select(
@@ -333,7 +335,6 @@ def cooccurrence_jaccard(
     key_col: str = "url",
     item_col: str = "entity_id",
     round_dp: int = 6,
-    assume_distinct: bool = False,
 ) -> DataFrame:
     """Pairwise Jaccard similarity of item key-sets over a
     (key, item) membership table: for every item pair sharing >= 1
@@ -344,35 +345,29 @@ def cooccurrence_jaccard(
     diagnostics around datautils.py:2439-2527, lifted from
     mention-level counting to set similarity).
 
-    Scale shape: intersection counts come from the per-key self-join
-    — O(k^2) per key, so feed a per-key CAPPED membership (the
-    pipeline's ``per_doc_entity_set``) exactly like the co-mention
-    edge build; per-item set sizes are one map-side-combined groupBy;
-    the two size re-attach joins are UNHINTED equi-joins on the item
+    Scale shape: one ``sort_array(collect_set(item))`` per key — set
+    semantics by construction, so repeat (key, item) rows count once
+    — feeds both the intersection counts (:func:`ordered_pairs` over
+    the array, then one groupBy on the pair) and the per-item set
+    sizes (the same arrays exploded, one map-side-combined groupBy).
+    A key of k items emits k^2/2 pairs and holds its k items in one
+    array, so feed a per-key CAPPED membership (the ``entity_jaccard``
+    query reads the same capped per-doc entity set as the
+    ``comention_edges`` query).
+    The two size re-attach joins are UNHINTED equi-joins on the item
     key (the item dimension is corpus-unbounded — AQE broadcasts only
-    when runtime stats say it's genuinely small, same doctrine as
-    the KG components join). Output is bounded by the pair count of
-    the capped self-join, not |items|^2. The ``inter`` stage computes
-    the same per-pair shared-key count as
-    ``plans.pipeline.comention_edges(...).groupBy(src, dst).count()``
-    — keep cap/dedup semantics in lockstep with that operator.
-
-    ``assume_distinct=True`` skips the defensive dedup when the
-    caller already guarantees one row per (key, item) — e.g.
-    ``per_doc_entity_set`` output, which ends in a groupBy on exactly
-    these columns — saving a full exchange over the membership table.
+    when runtime stats say it's genuinely small, same doctrine as the
+    KG components join). Output is bounded by the pair count of the
+    capped membership, not |items|^2.
     """
-    m = membership.select(
-        F.col(key_col).alias("k"), F.col(item_col).alias("item")
+    sets = membership.groupBy(F.col(key_col).alias("k")).agg(
+        F.sort_array(F.collect_set(item_col)).alias("_items")
     )
-    if not assume_distinct:
-        m = m.distinct()
-    sizes = m.groupBy("item").agg(F.count(F.lit(1)).alias("n"))
-    a, b = m.alias("a"), m.alias("b")
+    sizes = sets.select(F.explode("_items").alias("item")) \
+        .groupBy("item").agg(F.count(F.lit(1)).alias("n"))
     inter = (
-        a.join(b, "k")
-        .where(F.col("a.item") < F.col("b.item"))
-        .groupBy(F.col("a.item").alias("src"), F.col("b.item").alias("dst"))
+        ordered_pairs(sets, "_items")
+        .groupBy(F.col("a").alias("src"), F.col("b").alias("dst"))
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
     return (

@@ -11,7 +11,8 @@ the KG stages (north_star):
              tokenize (T1/T2) -> segment (D3) -> score -> decode (L6)
              -> in-worker segment merge (D5, NO shuffle) -> flatten (L10)
       -> (url, entity) rollup, linked by projection # ent_pre, cached
-      -> co-mention pairs per url                  # sorted-array enumeration
+      -> co-mention pairs per url                  # capped sorted array,
+                                                   # operators.pairs.ordered_pairs
       -> connected components (driver union-find or large/small-star)
       -> triples (subj, pred, obj, url, warc_ts, prob)
 
@@ -41,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from qizner_spark.gazetteer import GAZETTEER_FULL
 from qizner_spark.operators.linking import build_alias_dictionary, link_mentions
 from qizner_spark.operators.mentions import detect_mentions
+from qizner_spark.operators.pairs import ordered_pairs
 from qizner_spark.sources.pages import extract_text_col, pages_from_documents
 
 
@@ -67,82 +69,16 @@ def extract_pages_text(pages: DataFrame, validate: bool = True) -> DataFrame:
     )
 
 
-# Per-doc distinct-entity ceiling for the co-mention self-join. The
-# join is O(k^2) pairs per document and is keyed on url, so the
-# hot-KEY salting in operators/graph.py cannot reach it: one spammy
-# page with 10^4 distinct entities would emit 5x10^7 pairs from a
-# single row group — an unfixable one-task straggler at 10^12 docs.
-# 1000 bounds any document at <=500k pairs while being far above the
-# entity count of any real page; None disables the cap entirely.
+# Per-doc distinct-entity ceiling for the co-mention pair
+# enumeration. A document of k distinct entities emits k(k-1)/2 pairs
+# from one url group, so the hot-KEY salting in operators/graph.py
+# cannot reach it: one spammy page with 10^4 distinct entities would
+# emit 5x10^7 pairs from a single row group — an unfixable one-task
+# straggler at 10^12 docs. 1000 bounds any document at <=500k pairs
+# while being far above the entity count of any real page. Capped-out
+# entities still exist downstream (CC treats them as singletons) —
+# they just stop minting pairs.
 DEFAULT_MAX_ENTITIES_PER_DOC = 1000
-
-
-def _per_doc_entities(linked: DataFrame,
-                      max_entities_per_doc: int | None) -> DataFrame:
-    """Per-doc DISTINCT entity set feeding the co-mention self-join,
-    optionally capped to the ``max_entities_per_doc`` most confident
-    entities per url (rank: max mention prob DESC, entity_id ASC for
-    deterministic ties).
-
-    ONE url-hash exchange serves the whole chain: HashPartitioning
-    (url) satisfies the (url, entity_id) aggregation's clustered
-    distribution (same url => colocated), the rank window's url
-    partition, AND the downstream self-join on url — without the
-    explicit repartition the planner keys the aggregation on
-    (url, entity_id) and the window/join then re-shuffle on url
-    (measured: 4 distinct exchanges -> 2, one per join side)."""
-    keyed = linked.select(
-        "url", "entity_id",
-        (F.col("prob") if "prob" in linked.columns else F.lit(0.0)).alias("_p"),
-    ).repartition(F.col("url"))
-    if max_entities_per_doc is None:
-        return keyed.select("url", "entity_id").distinct()
-    from pyspark.sql import Window
-
-    ranked = keyed.groupBy("url", "entity_id").agg(F.max("_p").alias("_rank_prob"))
-    w = Window.partitionBy("url").orderBy(
-        F.col("_rank_prob").desc(), F.col("entity_id").asc()
-    )
-    return (
-        ranked.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= max_entities_per_doc)
-        .select("url", "entity_id")
-    )
-
-
-# public name for the capped per-doc membership table (the co-mention
-# self-join input); entity-similarity reads (cooccurrence_jaccard)
-# must see the SAME capped set the edge build sees.
-def per_doc_entity_set(linked: DataFrame,
-                       max_entities_per_doc: int | None = DEFAULT_MAX_ENTITIES_PER_DOC
-                       ) -> DataFrame:
-    return _per_doc_entities(linked, max_entities_per_doc)
-
-
-def comention_edges(linked: DataFrame,
-                    max_entities_per_doc: int | None = DEFAULT_MAX_ENTITIES_PER_DOC
-                    ) -> DataFrame:
-    """Distinct entity pairs co-mentioned in the same document.
-
-    Self-join on url over the per-doc DISTINCT entity set (deduped
-    before the join so a hot page with 10^3 repeat mentions of one
-    entity contributes each pair once). ``max_entities_per_doc``
-    bounds the per-doc pair explosion (see
-    ``DEFAULT_MAX_ENTITIES_PER_DOC``); capped-out entities still
-    exist downstream (CC treats them as singletons) — they just stop
-    minting O(k^2) edges."""
-    per_doc = _per_doc_entities(linked, max_entities_per_doc)
-    a = per_doc.alias("a")
-    b = per_doc.alias("b")
-    return (
-        a.join(b, "url")
-        .where(F.col("a.entity_id") < F.col("b.entity_id"))
-        .select(
-            F.col("a.entity_id").alias("src"),
-            F.col("b.entity_id").alias("dst"),
-            F.col("url"),
-        )
-    )
 
 
 class KGStages(dict):
@@ -170,7 +106,7 @@ def build_kg(
     decode_threshold: float = 0.5,
     salt_buckets: int | None = None,
     broadcast_alias: bool | int = False,
-    max_entities_per_doc: int | None = DEFAULT_MAX_ENTITIES_PER_DOC,
+    max_entities_per_doc: int = DEFAULT_MAX_ENTITIES_PER_DOC,
 ) -> KGStages:
     """Run the full DAG; returns every intermediate plus ``triples``.
 
@@ -231,11 +167,29 @@ def build_kg(
                     [mentions, *assembled.persisted])
 
 
+def _capped_entities(rollup: DataFrame, cap: int, *payload: str) -> DataFrame:
+    """``(url, _e)``: per url, the ``cap`` entities with the highest
+    ``_rank_prob`` (ties: entity_id ASC) as ``(entity_id, *payload)``
+    structs, re-sorted on entity_id for :func:`ordered_pairs`. The
+    sort on (-prob, entity_id) structs + slice keeps exactly the rows
+    a row_number window over that key keeps, and the array is bounded
+    by ``cap`` (task memory) whatever the document's entity count."""
+    fields = ("entity_id", *payload)
+    kept = ", ".join(f"s.{c} AS {c}" for c in fields)
+    ranked = F.array_sort(F.collect_list(
+        F.struct((-F.col("_rank_prob")).alias("_nrp"), *fields)
+    ))
+    return rollup.groupBy("url").agg(ranked.alias("_r")).select(
+        "url",
+        F.expr(f"array_sort(transform(slice(_r, 1, {cap}), s -> struct({kept})))").alias("_e"),
+    )
+
+
 def assemble_kg(
     mentions: DataFrame,
     salt_buckets: int | None = None,
     broadcast_alias: bool | int = False,
-    max_entities_per_doc: int | None = DEFAULT_MAX_ENTITIES_PER_DOC,
+    max_entities_per_doc: int = DEFAULT_MAX_ENTITIES_PER_DOC,
 ) -> KGStages:
     """Corpus-GLOBAL compaction half of the KG DAG — alias dictionary
     -> linking -> co-mention edges -> connected components -> triple
@@ -264,9 +218,9 @@ def assemble_kg(
         duplication at the source);
       * one repartition(url) then establishes the partitioning every
         downstream consumer needs — branch groupBys (url-superset
-        keys), the cap window (url partition), the co-mention
-        self-join (url key) and its pair-fold groupBy all plan ZERO
-        further exchanges;
+        keys), the per-url capped entity arrays, the co-mention pair
+        enumeration and its pair-fold groupBy all plan ZERO further
+        exchanges;
       * ``ent_pre`` is persisted (the returned :class:`KGStages` owns
         it): the eager CC phase and the triples action both read it, and (measured, round 6) per-branch column
         pruning otherwise specializes each branch's copy of the
@@ -316,61 +270,18 @@ def assemble_kg(
     # writer, so the concurrent-futures race the other barriers guard
     # against cannot occur, and the probe job doubles as the barrier.
     # Co-mention pair enumeration (round 6, array form): pairs come
-    # from a per-url SORTED ENTITY ARRAY expanded by nested
-    # transforms instead of a per-url self-join. The rollup is
-    # url-partitioned, so the groupBy(url) plans no exchange; the
-    # O(k^2) expansion is one native codegen projection per url — no
-    # join hash table, no second derivation of the probe side, and no
-    # per-pair row machinery before the fold (same rewrite that took
-    # the relational co-mention family 4.8 s -> 1.6 s at sf1.0).
-    # Row-identity proof: the array is the capped per-doc DISTINCT
-    # entity set sorted by entity_id, and (i < j) enumeration over a
-    # sorted array IS the a.entity_id < b.entity_id join predicate;
-    # the cap keeps top-``max_entities_per_doc`` by (max mention prob
-    # DESC, entity_id ASC) — array_sort on (-prob, entity_id) structs
-    # + slice selects exactly the rows the old row_number window
-    # kept. The cap also bounds every array (task memory) — with
-    # cap=None the self-join form streams unbounded per-url pair
-    # sets instead of materializing them, so that path is kept.
-    if max_entities_per_doc is not None:
-        cap = int(max_entities_per_doc)
-        ent_url = ent_pre.groupBy("url", "entity_id").agg(
-            F.max("_rp").alias("_rank_prob")
-        )
-        ents = ent_url.groupBy("url").agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct((-F.col("_rank_prob")).alias("_nrp"), F.col("entity_id"))
-                )
-            ).alias("_r")
-        ).select(
-            "url",
-            F.expr(
-                f"sort_array(transform(slice(_r, 1, {cap}), s -> s.entity_id))"
-            ).alias("_e"),
-        )
-        edges = ents.select(
-            "url",
-            F.explode(
-                F.expr(
-                    "flatten(transform(_e, (x, i) -> "
-                    "transform(slice(_e, i + 2, size(_e)), y -> "
-                    "struct(x AS src, y AS dst))))"
-                )
-            ).alias("_p"),
-        ).select(F.col("_p.src").alias("src"), F.col("_p.dst").alias("dst"), "url")
-    else:
-        per_doc = ent_pre.select("url", "entity_id").distinct()
-        pa, pb = per_doc.alias("a"), per_doc.alias("b")
-        edges = (
-            pa.join(pb, "url")
-            .where(F.col("a.entity_id") < F.col("b.entity_id"))
-            .select(
-                F.col("a.entity_id").alias("src"),
-                F.col("b.entity_id").alias("dst"),
-                F.col("url"),
-            )
-        )
+    # from a per-url SORTED, CAPPED ENTITY ARRAY expanded by
+    # ordered_pairs instead of a per-url self-join. The rollup is
+    # url-partitioned, so the groupBy(url) plans no exchange, and
+    # there is no join hash table and no second derivation of the
+    # probe side. Row identity: "a before b" in the entity_id-sorted
+    # distinct array IS the a.entity_id < b.entity_id join predicate.
+    ent_url = ent_pre.groupBy("url", "entity_id").agg(
+        F.max("_rp").alias("_rank_prob")
+    )
+    edges = ordered_pairs(
+        _capped_entities(ent_url, max_entities_per_doc), "_e", "url"
+    ).select(F.col("a.entity_id").alias("src"), F.col("b.entity_id").alias("dst"), "url")
     from qizner_spark.operators.graph import connected_components
 
     comp = connected_components(
@@ -467,9 +378,9 @@ def assemble_kg(
         "url", "warc_ts", "prob",
     )
     # co-mention edge triples: the SAME pair enumeration as the CC
-    # edges (the cap window re-ranks the canonicalized rollup on the
+    # edges (_capped_entities re-ranks the canonicalized rollup on the
     # identical (max prob DESC, entity_id ASC) key, so the kept entity
-    # set matches ``capped`` row for row), endpoints rewritten to
+    # set matches the edges' row for row), endpoints rewritten to
     # canonical ids (north_star: CC runs over the co-mention graph
     # itself, so co-mentioned entities often share a component —
     # subj == obj is then an intra-cluster edge). The only aggregation
@@ -480,66 +391,23 @@ def assemble_kg(
         F.min("prob").alias("prob"),
         F.max("_rp").alias("_rank_prob"),
     )
-    if max_entities_per_doc is not None:
-        # array-form pair enumeration with the canonical-id / fold
-        # payload riding along (see the edges comment above): cap by
-        # (-prob, entity_id) struct sort + slice == the old row_number
-        # window; re-sorting the kept structs entity_id-first restores
-        # the a.entity_id < b.entity_id pair order; per-pair payload
-        # (x.warc_ts, least(x.prob, y.prob)) matches the join form's
-        # (a.warc_ts, least(a.prob, b.prob)) exactly, so the
-        # (url, subj, obj) min/min fold is hash-identical.
-        cap2 = int(max_entities_per_doc)
-        pair_payload = (
-            "flatten(transform(_e, (x, i) -> "
-            "transform(slice(_e, i + 2, size(_e)), y -> "
-            "struct(x.canonical_id AS subj, y.canonical_id AS obj, "
-            "x.warc_ts AS warc_ts, least(x.prob, y.prob) AS prob))))"
-        )
-        pairs = ent_doc.groupBy("url").agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        (-F.col("_rank_prob")).alias("_nrp"),
-                        F.col("entity_id"), F.col("canonical_id"),
-                        F.col("warc_ts"), F.col("prob"),
-                    )
-                )
-            ).alias("_r")
-        ).select(
-            "url",
-            F.expr(
-                f"array_sort(transform(slice(_r, 1, {cap2}), s -> "
-                "struct(s.entity_id AS entity_id, s.canonical_id AS canonical_id, "
-                "s.warc_ts AS warc_ts, s.prob AS prob)))"
-            ).alias("_e"),
-        ).select("url", F.explode(F.expr(pair_payload)).alias("_p")).select(
-            "url", "_p.subj", "_p.obj", "_p.warc_ts", "_p.prob"
-        )
-        canon_edges = (
-            pairs.groupBy("url", "subj", "obj")
-            .agg(F.min("warc_ts").alias("warc_ts"), F.min("prob").alias("prob"))
-            .select("subj", F.lit("mentioned_with").alias("pred"),
-                    F.col("obj"), "url", "warc_ts", "prob")
-        )
-    else:
-        ent_doc = ent_doc.drop("_rank_prob")
-        ea, eb = ent_doc.alias("a"), ent_doc.alias("b")
-        canon_edges = (
-            ea.join(eb, "url")
-            .where(F.col("a.entity_id") < F.col("b.entity_id"))
-            .groupBy(
-                F.col("url"),
-                F.col("a.canonical_id").alias("subj"),
-                F.col("b.canonical_id").alias("obj"),
-            )
-            .agg(
-                F.min(F.col("a.warc_ts")).alias("warc_ts"),
-                F.min(F.least("a.prob", "b.prob")).alias("prob"),
-            )
-            .select("subj", F.lit("mentioned_with").alias("pred"),
-                    F.col("obj"), "url", "warc_ts", "prob")
-        )
+    # per-pair (a.warc_ts, least(a.prob, b.prob)) is the a<b
+    # self-join's payload exactly, so the (url, subj, obj) min/min
+    # fold is hash-identical to the join formulation
+    pairs = ordered_pairs(
+        _capped_entities(ent_doc, max_entities_per_doc, "canonical_id", "warc_ts", "prob"),
+        "_e", "url",
+    ).select(
+        "url",
+        F.col("a.canonical_id").alias("subj"), F.col("b.canonical_id").alias("obj"),
+        F.col("a.warc_ts").alias("warc_ts"), F.least("a.prob", "b.prob").alias("prob"),
+    )
+    canon_edges = (
+        pairs.groupBy("url", "subj", "obj")
+        .agg(F.min("warc_ts").alias("warc_ts"), F.min("prob").alias("prob"))
+        .select("subj", F.lit("mentioned_with").alias("pred"),
+                F.col("obj"), "url", "warc_ts", "prob")
+    )
     triples = type_alias_triples.unionByName(canon_edges)
     return KGStages({
         "alias": alias,

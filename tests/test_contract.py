@@ -1,11 +1,17 @@
-"""Evidence-cadence contract: the committed full-sweep artifact
+"""Repository contracts.
+
+Evidence cadence: the committed full-sweep artifact
 (BENCH/FULL_ORACLES.md, written by scripts/full_oracles_md.py) must
 carry a green row for EVERY declared query — so a query can't be
 added (or silently dropped from the sweep) without the round's
-committed oracle evidence covering it."""
+committed oracle evidence covering it.
+
+One pair primitive: the i<j tail-slice idiom lives only in
+operators/pairs.py, so every pair site shares one implementation."""
 
 from __future__ import annotations
 
+import glob
 import os
 import re
 
@@ -23,3 +29,20 @@ def test_full_sweep_artifact_covers_every_query():
     assert not failed, f"sweep artifact records failures: {failed}"
     missing = sorted(set(em.queries()) - ok)
     assert not missing, f"queries missing a green sweep row: {missing}"
+
+
+# slice(<arr>, <i> + 2, size(<arr>)) — the array tail after element i
+_TAIL_SLICE = re.compile(
+    r"slice\(\s*([\w{}.`]+)\s*,\s*[\w{}.`]+\s*\+\s*2\s*,\s*size\(\s*\1\s*\)\s*\)"
+)
+
+
+def test_pair_enumeration_only_in_pairs_module():
+    files = glob.glob(os.path.join(REPO, "qizner_spark", "**", "*.py"), recursive=True)
+    files.append(os.path.join(REPO, "__spark_entry__.py"))
+    hits = sorted(os.path.relpath(p, REPO) for p in files
+                  if _TAIL_SLICE.search(open(p).read()))
+    assert hits == [os.path.join("qizner_spark", "operators", "pairs.py")], (
+        f"i<j pair enumeration outside operators/pairs.py: {hits} — "
+        "call ordered_pairs instead"
+    )

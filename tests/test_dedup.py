@@ -88,6 +88,15 @@ class TestMinhash:
         n = docs.count()
         assert cands < n * (n - 1) / 2  # strictly fewer than all pairs
 
+    def test_more_bands_than_hashes_rejected(self, spark, docs):
+        """bands > num_hashes leaves every band empty: each doc would
+        hash "" per band and all pairs would become candidates."""
+        sigs = minhash_signatures(docs, num_hashes=64)
+        with pytest.raises(ValueError, match="bands=128"):
+            lsh_candidate_pairs(sigs, bands=128, num_hashes=64)
+        with pytest.raises(ValueError):
+            lsh_candidate_pairs(sigs, bands=128)  # num_hashes inferred
+
 
 class TestSimhash:
     def test_near_pairs(self, spark, docs):

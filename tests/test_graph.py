@@ -262,7 +262,7 @@ class TestCooccurrenceJaccard:
         assert ac.jaccard == round(1 / 3, 6)
 
     def test_duplicate_membership_rows_ignored(self, spark):
-        """The distinct() makes repeat mentions of one entity in one
+        """collect_set makes repeat mentions of one entity in one
         doc count once — set semantics, like the co-mention edges."""
         from qizner_spark.operators.graph import cooccurrence_jaccard
 

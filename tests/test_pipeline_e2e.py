@@ -149,57 +149,58 @@ class TestKgPipeline:
 
 
 class TestComentionCap:
-    """max_entities_per_doc bounds the O(k^2) per-doc pair join — the
-    spammy-page fixture the round-4 verdict asked for: one url with
-    10^3 distinct entities must emit a bounded pair set."""
+    """max_entities_per_doc bounds the O(k^2) per-doc pair enumeration
+    of ``assemble_kg`` — the spammy-page fixture the round-4 verdict
+    asked for: one url with 10^3 distinct entities must emit a bounded
+    pair set."""
+
+    @staticmethod
+    def _mentions(spark, rows):
+        # (url, surface, prob) -> the mention table assemble_kg reads;
+        # entity_id is the kb:<type>:<surface> slug, so entity order
+        # follows surface order
+        return spark.createDataFrame(
+            [(u, m, "ENT", p, 0) for u, m, p in rows],
+            "url string, mention string, ent_type string, prob double, warc_ts long",
+        )
+
+    @staticmethod
+    def _edges(mentions, cap):
+        from qizner_spark.plans.pipeline import assemble_kg
+
+        stages = assemble_kg(mentions, max_entities_per_doc=cap)
+        rows = stages["edges"].collect()
+        stages.release()
+        return rows
+
+    @staticmethod
+    def _kept(rows):
+        return {e.removeprefix("kb:ENT:") for r in rows for e in (r["src"], r["dst"])}
 
     @pytest.fixture(scope="class")
-    def spammy_linked(self, spark):
+    def spammy_mentions(self, spark):
         # one spammy url with 1000 distinct entities (prob encodes a
         # known ranking) + one normal url with 5
         rows = [("u_spam", f"e{i:04d}", 0.5 + (999 - i) / 2000.0)
                 for i in range(1000)]
         rows += [("u_ok", f"e{i:04d}", 0.9) for i in range(5)]
-        return spark.createDataFrame(rows, ["url", "entity_id", "prob"])
+        return self._mentions(spark, rows)
 
-    def test_capped_pair_count_bounded(self, spark, spammy_linked):
-        from qizner_spark.plans.pipeline import comention_edges
-
-        e = comention_edges(spammy_linked, max_entities_per_doc=50)
-        per_url = {r["url"]: r["n"] for r in
-                   e.groupBy("url").agg(F.count(F.lit(1)).alias("n")).collect()}
+    def test_capped_pair_count_bounded(self, spark, spammy_mentions):
+        per_url = {}
+        for r in self._edges(spammy_mentions, 50):
+            per_url[r["url"]] = per_url.get(r["url"], 0) + 1
         assert per_url["u_spam"] == 50 * 49 // 2       # capped: C(50,2)
         assert per_url["u_ok"] == 5 * 4 // 2           # under cap: untouched
 
-    def test_cap_keeps_top_prob_entities(self, spark, spammy_linked):
-        from qizner_spark.plans.pipeline import comention_edges
-
-        e = comention_edges(spammy_linked.where(F.col("url") == "u_spam"),
-                            max_entities_per_doc=10)
-        kept = set()
-        for r in e.collect():
-            kept.add(r["src"]); kept.add(r["dst"])
+    def test_cap_keeps_top_prob_entities(self, spark, spammy_mentions):
+        rows = self._edges(spammy_mentions.where(F.col("url") == "u_spam"), 10)
         # prob is strictly decreasing in entity index -> top-10 = e0000..e0009
-        assert kept == {f"e{i:04d}" for i in range(10)}
-
-    def test_uncapped_path_unchanged(self, spark, spammy_linked):
-        from qizner_spark.plans.pipeline import comention_edges
-
-        e = comention_edges(spammy_linked.where(F.col("url") == "u_ok"),
-                            max_entities_per_doc=None)
-        assert e.count() == 5 * 4 // 2
+        assert self._kept(rows) == {f"e{i:04d}" for i in range(10)}
 
     def test_prob_tie_breaks_on_entity_id(self, spark):
-        from qizner_spark.plans.pipeline import comention_edges
-
-        tied = spark.createDataFrame(
-            [("u", f"e{i}", 0.7) for i in range(6)], ["url", "entity_id", "prob"]
-        )
-        e = comention_edges(tied, max_entities_per_doc=3)
-        kept = set()
-        for r in e.collect():
-            kept.add(r["src"]); kept.add(r["dst"])
-        assert kept == {"e0", "e1", "e2"}
+        tied = self._mentions(spark, [("u", f"e{i}", 0.7) for i in range(6)])
+        assert self._kept(self._edges(tied, 3)) == {"e0", "e1", "e2"}
 
 
 def test_triple_sink_partition_pruning(spark, sf_dir, tmp_path):

@@ -76,8 +76,8 @@ def plans(spark, sf_dir):
         # the BIO/Viterbi detection family through the identical KG
         # tail — must keep the flagship's join inventory too
         "kg_triples_seq",
-        # entity similarity: capped per-doc self-join + two unhinted
-        # size re-attach equi-joins
+        # entity similarity: per-doc sets -> ordered_pairs + two
+        # unhinted size re-attach equi-joins
         "entity_jaccard",
         # constructing this one RUNS the availableNow stream first
         # (per-doc detection into the mention staging sink); the plan

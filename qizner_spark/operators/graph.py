@@ -199,8 +199,8 @@ def connected_components(
         # marker for callers: the map was solved driver-side, so it is
         # bounded by construction (<= 2 * driver_threshold nodes).
         # createDataFrame(list) goes through parallelize, so it plans
-        # as a Scan ExistingRDD with no size statistics: a join against
-        # it broadcasts only once AQE has measured it at runtime.
+        # as a Scan ExistingRDD with no size statistics: a caller that
+        # joins it hints the broadcast by that bound (assemble_kg does).
         out._qizner_local_rows = 0
         return out
     if len(probe) <= driver_threshold:

@@ -12,6 +12,9 @@ filesystem so the production swap is mechanical):
   1. STAGE   — write the increment's triples under
                ``{sink}/_staging/{run_id}`` (leading underscore:
                invisible to every ``spark.read.parquet(sink)``).
+               The only action over the triples: an ``Observation``
+               counts them; a ``subj_bucket`` rebalance writes one
+               file per bucket (AQE splits only an oversized one).
   2. COMMIT  — append ONE parquet file (coalesce(1) => a single
                atomic rename inside the job commit) to the manifest
                ``{sink}_processed`` recording (url, run_id) for EVERY
@@ -61,7 +64,7 @@ import shutil
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.errors import AnalysisException
 
 
@@ -152,17 +155,18 @@ class HadoopFS:
             raise IOError(f"Hadoop FileSystem recursive delete failed: {path}")
 
 
-def _keys_if_exists(spark: SparkSession, path: str, key: str) -> DataFrame | None:
+def _keys_if_exists(spark: SparkSession, fs, path: str, key: str) -> DataFrame | None:
     """Distinct key column of a parquet path, or None ONLY when the
     path does not exist / holds no committed file. Any other failure
     (corrupt footer, permission denied) re-raises: silently treating
     a broken manifest as missing would re-append every url's
-    triples."""
+    triples. Missing paths are found via ``fs``: a failed query makes
+    the session's ``Observation`` listener log a stack trace."""
+    if not fs.is_dir(path):
+        return None
     try:
         return spark.read.parquet(path).select(key).distinct()
     except AnalysisException as e:
-        if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
-            return None
         if "UNABLE_TO_INFER_SCHEMA" in str(e):
             # the directory exists but holds no committed parquet file
             # (e.g. a crash during the very FIRST append left only
@@ -173,7 +177,8 @@ def _keys_if_exists(spark: SparkSession, path: str, key: str) -> DataFrame | Non
         raise
 
 
-def processed_keys(spark: SparkSession, sink_path: str, key: str = "url") -> DataFrame | None:
+def processed_keys(spark: SparkSession, sink_path: str, key: str = "url",
+                   fs=None) -> DataFrame | None:
     """Keys already processed = manifest keys UNION sink keys.
 
     Under the staged protocol the manifest alone is authoritative
@@ -182,9 +187,11 @@ def processed_keys(spark: SparkSession, sink_path: str, key: str = "url") -> Dat
     sink AFTER its one-time layout migration (see module docstring —
     legacy data must move under a synthetic ``run_id=legacy`` dir, or
     the mixed partition layouts fail parquet discovery here). None
-    when neither exists yet."""
-    manifest = _keys_if_exists(spark, f"{sink_path}_processed", key)
-    sink = _keys_if_exists(spark, sink_path, key)
+    when neither exists yet. ``fs`` as in :func:`recover_sink`."""
+    fs = fs or LocalFS()
+    sink_path = fs.normalize(sink_path)
+    manifest = _keys_if_exists(spark, fs, f"{sink_path}_processed", key)
+    sink = _keys_if_exists(spark, fs, sink_path, key)
     if manifest is None:
         return sink
     if sink is None:
@@ -275,7 +282,7 @@ def run_resumable(
     fs = fs or LocalFS()
     sink_path = fs.normalize(sink_path)
     recovered = recover_sink(spark, sink_path, fs=fs)
-    done = processed_keys(spark, sink_path)
+    done = processed_keys(spark, sink_path, fs=fs)
     todo = pending_only(pages, done)
     t0 = time.time()
     n_pending = todo.count()
@@ -285,30 +292,18 @@ def run_resumable(
     else:
         run_id = uuid.uuid4().hex[:16]
         stages = build_kg(spark, todo, **kg_kwargs)
+        counted = Observation()
         triples = stages["triples"].withColumn(
             "subj_bucket", F.pmod(F.xxhash64("subj"), F.lit(64))
-        ).persist()
+        ).observe(counted, F.count(F.lit(1)).alias("n")).hint("rebalance", "subj_bucket")
         try:
-            n_new = triples.count()
-            # per-partition lineage for THIS increment (north_rule: one
-            # row per subj_bucket x run_id with triple + source-url
-            # counts). Aggregated to the driver NOW — <= 64 rows — and
-            # written only after publish: the manifest append below
-            # invalidates every cached plan that READS the manifest path
-            # (triples' lineage does, through the resume anti-join), so a
-            # lazy lineage aggregate evaluated after the commit would
-            # recompute against the new manifest and see an empty todo.
-            lineage = None
-            if metrics_path:
-                lineage = (
-                    triples.groupBy("subj_bucket")
-                    .agg(F.count(F.lit(1)).alias("n_triples"),
-                         F.countDistinct("url").alias("n_source_urls"))
-                    .collect()
-                )
             # 1. STAGE (invisible: underscore prefix hides it from reads)
             staging = posixpath.join(sink_path, "_staging", run_id)
             triples.write.mode("overwrite").partitionBy("subj_bucket").parquet(staging)
+            # an empty write leaves no bucket directory, and AQE may have
+            # pruned the observed node from the empty plan: no row to read
+            wrote = any(d.startswith("subj_bucket=") for d in fs.list_dir(staging))
+            n_new = counted.get["n"] if wrote else 0
             if crash_after == "stage":
                 raise SimulatedCrash("crashed after staging, before manifest commit")
             # 2. COMMIT: single-file manifest append = one atomic rename.
@@ -319,12 +314,12 @@ def run_resumable(
             if crash_after == "commit":
                 raise SimulatedCrash("crashed after manifest commit, before publish")
             # 3. PUBLISH: one directory rename
-            fs.rename(staging, posixpath.join(sink_path, f"run_id={run_id}"))
+            published = posixpath.join(sink_path, f"run_id={run_id}")
+            fs.rename(staging, published)
         finally:
             # no cache outlives the call: a cached plan is matched by the
             # root paths it reads, not their listing, so a later call over
             # the same landed path would otherwise read this call's files
-            triples.unpersist()
             stages.release()
         metrics = {
             "n_pending": n_pending,
@@ -335,14 +330,15 @@ def run_resumable(
             "run_id": run_id,
             **recovered,
         }
-        if metrics_path and lineage is not None:
-            ts = int(time.time())
-            spark.createDataFrame(
-                [(r["subj_bucket"], r["n_triples"], r["n_source_urls"],
-                  run_id, ts) for r in lineage],
-                "subj_bucket long, n_triples long, n_source_urls long, "
-                "run_id string, ts long",
-            ).coalesce(1).write.mode("append").json(f"{metrics_path}_partitions")
+        if metrics_path and n_new:
+            # per-partition lineage for THIS increment (north_rule): <= 64
+            # rows read back from the published files (an empty write
+            # leaves only _SUCCESS, which has no schema to read)
+            (spark.read.parquet(published).groupBy("subj_bucket")
+             .agg(F.count(F.lit(1)).alias("n_triples"),
+                  F.countDistinct("url").alias("n_source_urls"),
+                  F.lit(run_id).alias("run_id"), F.lit(int(time.time())).alias("ts"))
+             .coalesce(1).write.mode("append").json(f"{metrics_path}_partitions"))
     if metrics_path:
         spark.createDataFrame([metrics]).write.mode("append").json(metrics_path)
     return metrics

@@ -309,17 +309,15 @@ def assemble_kg(
         # reads of a FULLY materialized cache are safe — the race is
         # only on population). Two sequential jobs replace the
         # previous four.
-        # The map has no size statistics: ``createDataFrame(list)``
-        # goes through ``parallelize``, so ``comp`` plans as a
-        # ``Scan ExistingRDD``, and this join starts as a sort-merge
-        # join. Each branch then exchanges the cached rollup on
-        # entity_id (and the map itself) before AQE converts the join
-        # to broadcast-hash from runtime sizes, and the branches'
-        # url-keyed aggregations exchange the joined rows again
-        # (plans/r06/kg_triples_after.txt: Exchanges (39), (45), (62),
-        # then (54), (72)).
-        cmap = (comp.withColumnRenamed("node", "entity_id")
-                    .withColumnRenamed("component", "_canon"))
+        # The map is broadcast by its bound: union-find ran only
+        # because the distinct edge set fit under ``driver_threshold``,
+        # so it holds at most 2 x ``driver_threshold`` nodes. Unhinted,
+        # the map has no size statistics (``createDataFrame(list)``
+        # plans as a ``Scan ExistingRDD``), the join starts as a
+        # sort-merge join, and every branch exchanges the cached rollup
+        # on entity_id before AQE converts it at runtime.
+        cmap = F.broadcast(comp.withColumnRenamed("node", "entity_id")
+                               .withColumnRenamed("component", "_canon"))
         pre_canon = (
             ent_pre.join(cmap, "entity_id", "left")
             .withColumn("canonical_id", F.coalesce("_canon", F.col("entity_id")))

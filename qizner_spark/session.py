@@ -33,9 +33,12 @@ def ensure_scan_parallelism(df: DataFrame, min_partitions: int | None = None) ->
     unsplittable file ... repartition immediately after the read").
     The repartition moves only the narrow source rows once; at real
     scale inputs arrive pre-split into >= parallelism partitions and
-    this is a no-op (the partition probe is driver-side planning, no
-    job). Derived heavy columns (html wrap, token explode, signatures)
-    must be computed AFTER this call so only source bytes shuffle."""
+    this is a no-op. The partition probe is driver-side planning only
+    for a plan without an exchange: over one (an anti-join, a
+    repartition) ``df.rdd.getNumPartitions()`` runs the AQE query
+    stages as jobs. Derived heavy columns (html wrap, token explode,
+    signatures) must be computed AFTER this call so only source bytes
+    shuffle."""
     sc = df.sparkSession.sparkContext
     target = int(min_partitions or sc.defaultParallelism)
     if df.rdd.getNumPartitions() >= target:

@@ -326,6 +326,42 @@ class TestResume:
         assert spark.read.parquet(sink).count() > n_after_first
         assert spark.read.json(str(tmp_path / "metrics")).count() == 1
 
+    def test_commit_writes_one_file_per_bucket(self, spark, sf_dir, tmp_path):
+        """The staging write is clustered on subj_bucket: every bucket
+        of a committed increment is one parquet file, however many
+        partitions the triples job ran with, and the count observed on
+        that write is the number of rows it wrote."""
+        import os
+
+        sink = str(tmp_path / "triples")
+        m = run_resumable(spark, pages_from_documents(spark, sf_dir), sink)
+        run_dir = os.path.join(sink, f"run_id={m['run_id']}")
+        buckets = [d for d in os.listdir(run_dir) if d.startswith("subj_bucket=")]
+        assert buckets
+        for d in buckets:
+            files = [f for f in os.listdir(os.path.join(run_dir, d)) if f.endswith(".parquet")]
+            assert len(files) == 1, (d, files)
+        assert m["n_new_triples"] == spark.read.parquet(run_dir).count() > 0
+
+    def test_zero_triple_commit_with_lineage(self, spark, sf_dir, tmp_path):
+        """Pages that yield no triples still commit: the manifest lists
+        their urls, no lineage row is logged for the empty write (its
+        directory holds no parquet file to read back), and a rerun is
+        a no-op."""
+        import os
+
+        pages = pages_from_documents(spark, sf_dir).where(F.col("lang") == "zh").limit(5)
+        sink, mpath = str(tmp_path / "triples"), str(tmp_path / "metrics")
+        m = run_resumable(spark, pages, sink, metrics_path=mpath)
+        assert m["n_pending"] == 5 and m["n_new_triples"] == 0
+        manifest = spark.read.parquet(f"{sink}_processed")
+        assert sorted(r["url"] for r in manifest.collect()) == sorted(
+            r["url"] for r in pages.select("url").collect())
+        assert {r["run_id"] for r in manifest.collect()} == {m["run_id"]}
+        assert not os.path.exists(f"{mpath}_partitions")
+        m2 = run_resumable(spark, pages, sink, metrics_path=mpath)
+        assert m2["n_pending"] == 0 and m2["resumed"]
+
     def test_pending_only_antijoin(self, spark):
         pages = spark.createDataFrame([("u1",), ("u2",), ("u3",)], ["url"])
         done = spark.createDataFrame([("u2",)], ["url"])

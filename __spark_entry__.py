@@ -397,7 +397,8 @@ def _alias_dictionary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _entity_linking(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Broadcast alias join + per-entity rollup."""
+    """Alias join (unhinted: AQE broadcasts the dictionary when its
+    runtime size is small) + per-entity rollup."""
     from qizner_spark.operators.linking import build_alias_dictionary, link_mentions
 
     mentions = _ner_mentions(spark, sf_dir).withColumn("url", F.col("doc_id").cast("string"))
@@ -1199,19 +1200,22 @@ def _q3_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------- fuzzy dedup / ANN family (md5-prefix hashing = oracle-able) -------
 
 def _minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from qizner_spark.operators.dedup import minhash_dedup_pairs
+    from pyspark import StorageLevel
 
-    out = minhash_dedup_pairs(_documents(spark, sf_dir), threshold=0.5)
-    _rotate_persisted("minhash_dedup", out._qizner_persisted.unpersist)
-    return out
+    from qizner_spark.operators.dedup import minhash_dedup_pairs, minhash_signatures
+
+    # the pair plan reads the signatures three times (cache ownership:
+    # see minhash_dedup_pairs)
+    sigs = minhash_signatures(_documents(spark, sf_dir)).persist(StorageLevel.MEMORY_AND_DISK)
+    sigs.count()
+    _rotate_persisted("minhash_dedup", sigs.unpersist)
+    return minhash_dedup_pairs(sigs, threshold=0.5)
 
 
 def _simhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from qizner_spark.operators.dedup import simhash_near_pairs, simhash_signatures
 
-    out = simhash_near_pairs(simhash_signatures(_documents(spark, sf_dir)), max_hamming=10)
-    _rotate_persisted("simhash_dedup", out._qizner_persisted.unpersist)
-    return out
+    return simhash_near_pairs(simhash_signatures(_documents(spark, sf_dir)), max_hamming=10)
 
 
 def _embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:

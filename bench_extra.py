@@ -73,10 +73,8 @@ def minhash_stages(spark, sf_dir):
     force(spark, "minhash: signatures persist", sigs)
     cands = lsh_candidate_pairs(sigs, 16, num_hashes=64)
     force(spark, "minhash: lsh candidates", cands)
-    out = minhash_dedup_pairs(docs, threshold=0.5)
-    force(spark, "minhash: full", out)
+    force(spark, "minhash: full", minhash_dedup_pairs(sigs, threshold=0.5))
     sigs.unpersist()
-    getattr(out, "_qizner_persisted", sigs).unpersist()
 
 
 def tfidf_stages(spark, sf_dir):

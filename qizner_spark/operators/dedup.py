@@ -13,7 +13,10 @@ Scale design:
     crc32-seeded universal hashing — stable across workers, unlike
     Python ``hash``);
   * verification (exact Jaccard / cosine / Hamming) runs only on
-    bucket-collision candidates.
+    bucket-collision candidates;
+  * the pair operators build plans and persist nothing: a caller
+    whose plan reads the signatures more than once (MinHash reads
+    them three times) persists them and owns that cache.
 
 The reference's near-dup doc merge is D7/combine_by_text
 (/root/reference/datautils.py:2106-2123) and dedupe E7
@@ -239,40 +242,23 @@ def lsh_candidate_pairs(
 
 
 def minhash_dedup_pairs(
-    docs: DataFrame, threshold: float = 0.8, num_hashes: int = 64, bands: int = 16,
-    k: int = 3, id_col: str = "doc_id", text_col: str = "text",
+    signatures: DataFrame, threshold: float = 0.8, num_hashes: int = 64, bands: int = 16,
 ) -> DataFrame:
-    """LSH candidates verified by the SIGNATURE Jaccard estimate
-    (fraction of agreeing minhashes).
+    """LSH candidates over ``signatures`` (the :func:`minhash_signatures`
+    output) verified by the SIGNATURE Jaccard estimate (fraction of
+    agreeing minhashes). Builds a plan and runs no job.
 
-    The signature table is referenced THREE times (banding + both
-    verification sides); without persistence each action re-runs the
-    shingle/md5/minhash Arrow pass per reference, so it is
-    materialized once (MEMORY_AND_DISK) — the production analog is
-    writing signatures to a staging table between phases, which is
-    what a 100 TB pipeline does anyway.
-
-    CACHE OWNERSHIP: the persisted lineage belongs to the CALLER.
-    The result DataFrame's ``_qizner_persisted`` attribute holds the
-    persisted signature handle — long-lived sessions (benches,
-    notebooks) that call this repeatedly should
-    ``df._qizner_persisted.unpersist()`` after materializing results;
-    otherwise cached blocks accumulate until LRU eviction pressure."""
-    from pyspark import StorageLevel
-
-    sigs = minhash_signatures(docs, num_hashes, k, id_col, text_col) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    # materialization barrier: the banding subtree and both
-    # verification sides otherwise race concurrent stage futures
-    # into the uncached relation and re-run the signature Arrow
-    # pass per reference (same defect class as the KG pipeline's
-    # round-6 barriers; cache population coordinates only after a
-    # writer finishes a partition)
-    sigs.count()
-    cands = lsh_candidate_pairs(sigs, bands, num_hashes=num_hashes)
-    sa = sigs.withColumnRenamed("doc_id", "id_a").withColumnRenamed("sig", "sig_a")
-    sb = sigs.withColumnRenamed("doc_id", "id_b").withColumnRenamed("sig", "sig_b")
-    out = (
+    CACHE OWNERSHIP: the plan reads ``signatures`` THREE times
+    (banding + both verification sides), so the caller persists them
+    and materializes the cache (e.g. ``count()``) before the first
+    action, then unpersists once done. Otherwise every reference
+    re-runs the shingle/md5/minhash Arrow pass, and concurrent stages
+    race to populate an unmaterialized cache. The production analog
+    is a staging table of signatures between phases."""
+    cands = lsh_candidate_pairs(signatures, bands, num_hashes=num_hashes)
+    sa = signatures.withColumnRenamed("doc_id", "id_a").withColumnRenamed("sig", "sig_a")
+    sb = signatures.withColumnRenamed("doc_id", "id_b").withColumnRenamed("sig", "sig_b")
+    return (
         cands.join(sa, "id_a").join(sb, "id_b")
         .withColumn(
             "est_jaccard",
@@ -283,8 +269,6 @@ def minhash_dedup_pairs(
         .where(F.col("est_jaccard") >= threshold)
         .select("id_a", "id_b", F.round("est_jaccard", 6).alias("est_jaccard"))
     )
-    out._qizner_persisted = sigs  # caller owns the cached lineage
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -348,16 +332,10 @@ def simhash_near_pairs(signatures: DataFrame, max_hamming: int = 3) -> DataFrame
     one chunk exactly, so the bucketed join is lossless AND never a
     cross join. Output therefore equals the all-pairs filter.
 
-    The signature input is materialized once: the chunk self-join
-    references it from BOTH sides, and without the persist each side
-    re-runs the full signature Arrow pass (at 10^12 docs: the entire
-    corpus hashed twice). Caller owns the cached lineage via the
-    result's ``_qizner_persisted`` handle, mirroring
-    minhash_dedup_pairs."""
-    from pyspark import StorageLevel
-
-    signatures = signatures.persist(StorageLevel.MEMORY_AND_DISK)
-    signatures.count()  # barrier — see minhash_dedup_pairs
+    Builds a plan and runs no job. The plan reads ``signatures``
+    once (one scan under the bucket exchange), so it needs no cache;
+    a caller that persists the signatures for other reasons owns
+    that cache."""
     chunk_exprs = ", ".join(
         f"named_struct('chunk', {c}, 'val', shiftright(simhash, {lo}) & {(1 << width) - 1}L)"
         for c, (lo, width) in enumerate(simhash_chunk_bounds(max_hamming))
@@ -377,7 +355,7 @@ def simhash_near_pairs(signatures: DataFrame, max_hamming: int = 3) -> DataFrame
         .agg(F.sort_array(F.collect_list(F.struct("doc_id", "simhash"))).alias("_ds"))
         .where(F.size("_ds") > 1)
     )
-    out = (
+    return (
         ordered_pairs(buckets, "_ds")
         .select(
             F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"),
@@ -387,8 +365,6 @@ def simhash_near_pairs(signatures: DataFrame, max_hamming: int = 3) -> DataFrame
         .distinct()
         .where(F.col("hamming") <= max_hamming)
     )
-    out._qizner_persisted = signatures  # caller owns the cached lineage
-    return out
 
 
 # ---------------------------------------------------------------------------

@@ -1,6 +1,10 @@
 """Connected components over the co-mention graph (canonicalization).
 
-Alternating large-star / small-star map-reduce rounds (Kiveris et al.,
+Two paths, and the result's plan says which one ran. A graph whose
+distinct edge set fits under ``driver_threshold`` is solved by
+driver-side union-find and comes back as a local relation
+(``DataFrame.isLocal()`` is true). Larger graphs take alternating
+large-star / small-star map-reduce rounds (Kiveris et al.,
 "Connected Components in MapReduce and Beyond", SoCC'14) implemented
 with plain DataFrame ops — no GraphFrames dependency. Converges in
 O(log n) rounds; each round is two shuffles.
@@ -21,6 +25,7 @@ Skew notes (explicit, per north_rule):
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window, functions as F
 
 from qizner_spark.operators.pairs import ordered_pairs
@@ -177,9 +182,10 @@ def connected_components(
     smaller than the mention table (distinct canonical nodes), so when
     the distinct edge count fits under ``driver_threshold`` the
     components are solved with driver-side union-find in one pass —
-    saving ~2 shuffles x O(log n) rounds. Larger graphs take the
-    distributed large-star/small-star path. Nodes appearing only as
-    isolated self-loops should be unioned in by the caller
+    saving ~2 shuffles x O(log n) rounds. That map is a local relation
+    (``isLocal()``) of at most 2 x ``driver_threshold`` nodes. Larger
+    graphs take the distributed large-star/small-star path. Nodes
+    appearing only as isolated self-loops should be unioned in by the caller
     (:func:`assign_components` does this).
     """
     spark = edges.sparkSession
@@ -194,20 +200,16 @@ def connected_components(
     # triple (three sequential jobs of pure latency on the common
     # entity-graph case, where the distinct edge set is tiny).
     probe = cur.limit(driver_threshold + 1).collect()
-    if not probe:
-        out = spark.createDataFrame([], "node string, component string")
-        # marker for callers: the map was solved driver-side, so it is
-        # bounded by construction (<= 2 * driver_threshold nodes).
-        # createDataFrame(list) goes through parallelize, so it plans
-        # as a Scan ExistingRDD with no size statistics: a caller that
-        # joins it hints the broadcast by that bound (assemble_kg does).
-        out._qizner_local_rows = 0
-        return out
     if len(probe) <= driver_threshold:
+        # built from an Arrow table, the map plans as a LocalRelation
+        # whatever the session's Arrow setting (createDataFrame(list)
+        # would plan a LogicalRDD with no size statistics); no edges
+        # give an empty map
         comp = _union_find_local([(r["src"], r["dst"]) for r in probe])
-        out = spark.createDataFrame(list(comp.items()), "node string, component string")
-        out._qizner_local_rows = len(comp)
-        return out
+        return spark.createDataFrame(pa.table(
+            {"node": pa.array(list(comp), pa.string()),
+             "component": pa.array(list(comp.values()), pa.string())}
+        ))
     cur = cur.localCheckpoint()
     prev_sig = None
     for _ in range(max_iterations):

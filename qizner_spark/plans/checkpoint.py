@@ -238,11 +238,14 @@ def recover_sink(spark: SparkSession, sink_path: str, fs=None) -> dict:
     fs = fs or LocalFS()
     sink_path = fs.normalize(sink_path)
     staging_root = posixpath.join(sink_path, "_staging")
-    if not fs.is_dir(staging_root):
+    # a publish renames _staging/<id> and leaves _staging/ empty: with
+    # nothing staged, the manifest read would roll nothing
+    staged = fs.list_dir(staging_root) if fs.is_dir(staging_root) else []
+    if not staged:
         return {"rolled_forward": 0, "rolled_back": 0}
     committed = _manifest_run_ids(spark, sink_path)
     fwd = back = 0
-    for rid in fs.list_dir(staging_root):
+    for rid in staged:
         src = posixpath.join(staging_root, rid)
         if rid in committed:
             fs.rename(src, posixpath.join(sink_path, f"run_id={rid}"))

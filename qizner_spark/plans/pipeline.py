@@ -300,7 +300,7 @@ def assemble_kg(
         .withColumnRenamed("component", "canonical_id")
     )
 
-    if getattr(comp, "_qizner_local_rows", None) is not None:
+    if comp.isLocal():
         # Common path: the component map was solved by driver-side
         # union-find, so the canonicalized rollup needs NO second
         # persist and NO count barrier: every triple branch
@@ -311,11 +311,10 @@ def assemble_kg(
         # previous four.
         # The map is broadcast by its bound: union-find ran only
         # because the distinct edge set fit under ``driver_threshold``,
-        # so it holds at most 2 x ``driver_threshold`` nodes. Unhinted,
-        # the map has no size statistics (``createDataFrame(list)``
-        # plans as a ``Scan ExistingRDD``), the join starts as a
-        # sort-merge join, and every branch exchanges the cached rollup
-        # on entity_id before AQE converts it at runtime.
+        # so it holds at most 2 x ``driver_threshold`` nodes. The hint
+        # states that bound in the plan instead of leaving the choice
+        # to the local relation's size estimate against
+        # ``autoBroadcastJoinThreshold``, which a large map can exceed.
         cmap = F.broadcast(comp.withColumnRenamed("node", "entity_id")
                                .withColumnRenamed("component", "_canon"))
         pre_canon = (

@@ -28,16 +28,30 @@ PAGES_SCHEMA = StructType(
 )
 
 
+def _start_parquet_sink(df, output_dir: str, checkpoint_dir: str):
+    """Append ``df`` to a parquet sink under an ``availableNow``
+    trigger: the query processes every file that has landed, then
+    stops. Exactly-once via ``checkpoint_dir``; returns the
+    StreamingQuery."""
+    return (
+        df.writeStream.format("parquet")
+        .option("path", output_dir)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def stream_detect_mentions(
     spark: SparkSession,
     input_dir: str,
     output_dir: str,
     checkpoint_dir: str,
     scorer_factory=None,
-    available_now: bool = True,
 ):
-    """Start (and for available_now=True, run to completion) the
-    streaming detection job; returns the StreamingQuery."""
+    """Start the streaming detection job; returns the StreamingQuery,
+    which stops once it has processed what has landed."""
     from qizner_spark.operators.mentions import detect_mentions
     from qizner_spark.plans.pipeline import default_scorer_factory, extract_pages_text
 
@@ -47,15 +61,7 @@ def stream_detect_mentions(
         docs, scorer_factory or default_scorer_factory,
         key_col="url", text_col="text", lang_col="lang",
     )
-    writer = (
-        mentions.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_parquet_sink(mentions, output_dir, checkpoint_dir)
 
 
 def stream_sessionize_events(
@@ -65,7 +71,6 @@ def stream_sessionize_events(
     checkpoint_dir: str,
     gap_seconds: int = 1800,
     watermark: str = "0 seconds",
-    available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ):
     """CUSTOM STATEFUL streaming operator via applyInPandasWithState:
@@ -182,15 +187,7 @@ def stream_sessionize_events(
     sessions = events.groupBy("user_id").applyInPandasWithState(
         fn, out_schema, state_schema, "append", GroupStateTimeout.EventTimeTimeout
     )
-    writer = (
-        sessions.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_parquet_sink(sessions, output_dir, checkpoint_dir)
 
 
 def stream_windowed_entity_counts(
@@ -201,7 +198,6 @@ def stream_windowed_entity_counts(
     scorer_factory=None,
     window_duration: str = "1 hour",
     watermark: str = "2 hours",
-    available_now: bool = True,
 ):
     """STATEFUL streaming: per-entity-type mention counts in
     event-time (warc_ts) windows with a late-data watermark.
@@ -235,15 +231,7 @@ def stream_windowed_entity_counts(
             "ent_type", "n_mentions",
         )
     )
-    writer = (
-        counts.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_parquet_sink(counts, output_dir, checkpoint_dir)
 
 
 def stream_kg_increments(
@@ -303,14 +291,7 @@ def stream_kg_increments(
         key_col="url", text_col="text", lang_col="lang",
         passthrough_cols=["warc_ts"],
     ).withColumnRenamed("doc_key", "url")
-    q = (
-        mentions.writeStream.format("parquet")
-        .option("path", mentions_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    q = _start_parquet_sink(mentions, mentions_dir, checkpoint_dir)
     q.awaitTermination()
     n_batches = sum(
         1 for p in q.recentProgress if (p.get("numInputRows") or 0) > 0
@@ -330,7 +311,6 @@ def stream_dedup_pages(
     output_dir: str,
     checkpoint_dir: str,
     watermark: str = "1 hour",
-    available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ):
     """Streaming EXACT dedup of a continuously-landing crawl:
@@ -364,12 +344,4 @@ def stream_dedup_pages(
         .withWatermark("warc_ts", watermark)
         .dropDuplicatesWithinWatermark(["text_key"])
     )
-    writer = (
-        keyed.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_parquet_sink(keyed, output_dir, checkpoint_dir)

@@ -7,7 +7,11 @@ added (or silently dropped from the sweep) without the round's
 committed oracle evidence covering it.
 
 One pair primitive: the i<j tail-slice idiom lives only in
-operators/pairs.py, so every pair site shares one implementation."""
+operators/pairs.py, so every pair site shares one implementation.
+
+No side channels: an operator's result says what it is through its
+type and plan, never through a private ``_qizner_*`` attribute set
+on the object it returns."""
 
 from __future__ import annotations
 
@@ -45,4 +49,25 @@ def test_pair_enumeration_only_in_pairs_module():
     assert hits == [os.path.join("qizner_spark", "operators", "pairs.py")], (
         f"i<j pair enumeration outside operators/pairs.py: {hits} — "
         "call ordered_pairs instead"
+    )
+
+
+# ._qizner_<name> or getattr(x, "_qizner_<name>")
+_PRIVATE_ATTR = re.compile(r"""[.'"](_qizner_\w+)""")
+# the scorer memo on a scorer-factory callable (operators/mentions.py):
+# it caches the built scorer per worker, it carries no DataFrame state
+_ALLOWED_PRIVATE_ATTRS = {"_qizner_scorer"}
+
+
+def test_no_private_dataframe_attributes():
+    files = glob.glob(os.path.join(REPO, "qizner_spark", "**", "*.py"), recursive=True)
+    files.append(os.path.join(REPO, "__spark_entry__.py"))
+    hits = sorted(
+        (os.path.relpath(p, REPO), name)
+        for p in files
+        for name in set(_PRIVATE_ATTR.findall(open(p).read())) - _ALLOWED_PRIVATE_ATTRS
+    )
+    assert not hits, (
+        f"private attributes used as side channels: {hits} — return what "
+        "the caller needs (a type, a plan property, a release handle) instead"
     )

@@ -67,7 +67,8 @@ class TestMinhash:
         assert s1[0] == s1[1]  # identical text -> identical signature
 
     def test_lsh_finds_near_dups(self, spark, docs):
-        pairs = minhash_dedup_pairs(docs, threshold=0.5, num_hashes=64, bands=16)
+        sigs = minhash_signatures(docs, num_hashes=64)
+        pairs = minhash_dedup_pairs(sigs, threshold=0.5, num_hashes=64, bands=16)
         got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
         assert (0, 1) in got and (0, 3) in got
 
@@ -76,7 +77,7 @@ class TestMinhash:
         true >=0.35 Jaccard pair (estimator tolerance), and the exact
         >=0.8 pairs must all be found."""
         est = {(r["id_a"], r["id_b"]): r["est_jaccard"]
-               for r in minhash_dedup_pairs(docs, 0.5).collect()}
+               for r in minhash_dedup_pairs(minhash_signatures(docs), 0.5).collect()}
         exact_hi = {(r["id_a"], r["id_b"]) for r in ngram_jaccard_pairs(docs, 0.8).collect()}
         exact_lo = {(r["id_a"], r["id_b"]) for r in ngram_jaccard_pairs(docs, 0.35).collect()}
         assert exact_hi <= set(est)
@@ -106,6 +107,14 @@ class TestSimhash:
         assert pairs.get((0, 1)) == 0       # identical
         assert (0, 3) in pairs              # near-dup within 8 bits
         assert (0, 4) not in pairs
+
+    def test_near_pairs_persist_nothing(self, spark, docs):
+        """The pair plan reads the signatures once, so the operator
+        caches nothing behind the caller's back."""
+        jsc = spark.sparkContext._jsc
+        before = jsc.getPersistentRDDs().size()
+        simhash_near_pairs(simhash_signatures(docs), max_hamming=3).collect()
+        assert jsc.getPersistentRDDs().size() == before
 
     def test_signature_deterministic(self, spark, docs):
         a = {r["doc_id"]: r["simhash"] for r in simhash_signatures(docs).collect()}

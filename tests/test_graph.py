@@ -45,6 +45,20 @@ class TestConnectedComponents:
         assert set(comp.values()) == {"hub"}  # 'hub' < 'n000'
         assert len(comp) == 51
 
+
+def test_component_map_plan_names_its_path(spark):
+    """The map shows which path solved it: the driver union-find map
+    is a local relation with real size statistics, also when there
+    are no edges; the distributed map is not local."""
+    chain = spark.createDataFrame([("a", "b"), ("b", "c")], "src string, dst string")
+    for edges in (chain, chain.limit(0)):
+        comp = connected_components(edges)
+        assert comp.isLocal()
+        stats = comp._jdf.queryExecution().optimizedPlan().stats()
+        assert int(stats.sizeInBytes()) < 2**63 - 1
+    assert not connected_components(chain, driver_threshold=0).isLocal()
+
+
 def test_salted_equals_unsalted_on_skewed_hub(spark):
     """Explicit skew salting (north_rule): a hub node with ~200
     neighbors plus chained tails. The salted distributed path

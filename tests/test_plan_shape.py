@@ -244,7 +244,7 @@ class TestComponentsLargeGraphPath:
 
         monkeypatch.setattr(graph, "connected_components", distributed)
         stages = build_kg_from_sf_dir(spark, sf_dir)
-        assert solved and not hasattr(solved[-1], "_qizner_local_rows"), \
+        assert solved and not solved[-1].isLocal(), \
             "the build did not take the distributed components path"
         triples = stages["triples"]
         assert sorted(triples.select(cols).collect()) == want

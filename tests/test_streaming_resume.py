@@ -362,6 +362,26 @@ class TestResume:
         m2 = run_resumable(spark, pages, sink, metrics_path=mpath)
         assert m2["n_pending"] == 0 and m2["resumed"]
 
+    def test_recover_after_commit_runs_no_job(self, spark, sf_dir, tmp_path):
+        """A publish renames _staging/<id> and leaves _staging/ empty:
+        recovering then has nothing to roll and runs no Spark job."""
+        import os
+
+        from qizner_spark.plans.checkpoint import recover_sink
+
+        sink = str(tmp_path / "triples")
+        run_resumable(spark, pages_from_documents(spark, sf_dir).limit(10), sink)
+        assert os.listdir(os.path.join(sink, "_staging")) == []
+        sc, group = spark.sparkContext, "test-recover-after-commit"
+        sc.setJobGroup(group, "recover_sink")
+        try:
+            rec = recover_sink(spark, sink)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert rec == {"rolled_forward": 0, "rolled_back": 0}
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
     def test_pending_only_antijoin(self, spark):
         pages = spark.createDataFrame([("u1",), ("u2",), ("u3",)], ["url"])
         done = spark.createDataFrame([("u2",)], ["url"])

@@ -580,10 +580,7 @@ def _entity_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     read path: "which entities co-occur in largely the same docs")."""
     from qizner_spark.operators.graph import cooccurrence_jaccard
 
-    membership = _per_doc_entity_array(spark, sf_dir).select(
-        "url", F.explode("_ents").alias("entity_id")
-    )
-    return cooccurrence_jaccard(membership, "url", "entity_id")
+    return cooccurrence_jaccard(_per_doc_entity_array(spark, sf_dir), "_ents")
 
 
 _COMENTION_SQL = f"""
@@ -621,9 +618,10 @@ def _exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # collapses everything in the scan task, so a round-robin widen
     # would shuffle the full text column to save sub-100ms of native
     # hashing (measured: the widen cost 0.78 s -> ~1.1 s at sf1.0)
+    from qizner_spark.operators.textstats import fingerprint_col
+
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    key = F.md5(F.lower(F.regexp_replace(F.trim(F.col("text")), r"\s+", " ")))
-    return docs.select(key.alias("text_key")).groupBy().agg(
+    return docs.select(fingerprint_col().alias("text_key")).groupBy().agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.countDistinct("text_key").alias("n_distinct"),
     ).select("n_docs", "n_distinct", (F.col("n_docs") - F.col("n_distinct")).alias("n_dup_docs"))
@@ -631,9 +629,10 @@ def _exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _combine_by_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D7 group-merge: one row per distinct text."""
+    from qizner_spark.operators.textstats import fingerprint_col
+
     docs = _documents(spark, sf_dir)
-    key = F.md5(F.lower(F.regexp_replace(F.trim(F.col("text")), r"\s+", " ")))
-    return docs.select(key.alias("text_key"), "doc_id", "n_chars").groupBy("text_key").agg(
+    return docs.select(fingerprint_col().alias("text_key"), "doc_id", "n_chars").groupBy("text_key").agg(
         F.min("doc_id").alias("canonical_id"),
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_chars").alias("total_chars"),
@@ -1074,10 +1073,10 @@ def _priority_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort, which is the ntile anti-pattern at scale.
 
     REGIME NOTE: a stratum window is still ONE task's sort — exact
-    ntile is for bounded strata; the 10^12-row path is
-    :func:`qizner_spark.operators.sampling.quantile_buckets_approx`
-    (percentile_approx sketch boundaries + broadcast bucketize,
-    never sorts)."""
+    ntile is for bounded strata. A stratum too large for one task
+    needs sketch boundaries instead (``percentile_approx`` per
+    stratum, then bucketize by comparison, no sort); no query asks
+    for that path, so the engine does not carry it."""
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
     w = Window.partitionBy("o_orderpriority").orderBy(
         F.col("o_totalprice").asc(), F.col("o_orderkey").asc()

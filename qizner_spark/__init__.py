@@ -14,8 +14,7 @@ Layout:
     operators/  DataFrame-level operators (detection, linking, dedup,
                 similarity, eval, text stats, graph, multimodal)
     plans/      end-to-end DAGs (flagship pipeline, checkpoint/resume)
-    functions/  native-column helper expressions (no UDF)
-    streaming/  structured-streaming variants
+    streaming/  the structured-streaming KG build (stream_kg_increments)
 """
 
 __version__ = "0.1.0"

@@ -30,7 +30,8 @@ Mention = tuple  # (ent_type, start, end[, prob, ...])
 # ---------------------------------------------------------------------------
 
 def ent_dct_to_mentions(ent_dct: Mapping[str, Iterable[Sequence]]) -> list[Mention]:
-    """Reference ``ent_dct`` ({type: [[start, end, *extra], ...]}) -> long form."""
+    """Reference ``ent_dct`` ({type: [[start, end, *extra], ...]}) -> long form.
+    Parity: datautils.py:1831-1844 (the ent_dct pivots)."""
     out: list[Mention] = []
     for ent_type, positions in ent_dct.items():
         for pos in positions:
@@ -39,7 +40,8 @@ def ent_dct_to_mentions(ent_dct: Mapping[str, Iterable[Sequence]]) -> list[Menti
 
 
 def mentions_to_ent_dct(mentions: Iterable[Mention]) -> dict[str, list[list]]:
-    """Long form -> reference ``ent_dct`` shape (insertion-ordered)."""
+    """Long form -> reference ``ent_dct`` shape (insertion-ordered).
+    Parity: datautils.py:1831-1844 (the ent_dct pivots)."""
     dct: dict[str, list[list]] = defaultdict(list)
     for ent_type, *rest in mentions:
         dct[ent_type].append(list(rest))
@@ -238,18 +240,3 @@ def add_mentions(base: Iterable[Mention], extra: Iterable[Mention]) -> list[Ment
     """Union with (type, start, end) dedupe, base-first.
     Parity: datautils.py:1475-1489."""
     return dedupe_mentions(list(base) + list(extra))
-
-
-# ---------------------------------------------------------------------------
-# Adjacency link labels (L4)
-# ---------------------------------------------------------------------------
-
-def link_labels(n_tokens: int, mentions: Iterable[Mention]) -> list[float]:
-    """link[i] = 1.0 iff positions i and i+1 lie inside the same gold
-    mention. Parity: datautils.py:2147-2153."""
-    links = [0.0] * max(n_tokens - 1, 0)
-    for _, start, end, *_ in mentions:
-        for i in range(start, min(end - 1, n_tokens - 1)):
-            if i >= 0:
-                links[i] = 1.0
-    return links

@@ -37,7 +37,7 @@ from collections.abc import Mapping, Sequence
 import numpy as np
 
 from qizner_spark.core.labels import Mention
-from qizner_spark.core.spans import num_spans, span_indices
+from qizner_spark.core.spans import span_indices
 
 HEAD_SIZE = 50  # reference hard-codes hidden 50 (modules.py:370-380)
 

@@ -4,8 +4,8 @@ For a length-``n`` token sequence the span model scores every
 contiguous span, enumerated ROW-MAJOR over the upper triangle with a
 CLOSED end inside the enumeration: (0,0),(0,1),...,(0,n-1),(1,1),...,
 (n-1,n-1) — ``n(n+1)/2`` spans total; ``+1`` is applied when emitting
-mentions (end exclusive). This order is load-bearing: encode
-(targets) and decode (scores) must agree element-wise.
+mentions (end exclusive). This order is load-bearing: a scorer's
+score rows and the decode must agree element-wise.
 
 Reference parity:
   * enumeration + targets -> /root/reference/datautils.py:2125-2145
@@ -19,7 +19,7 @@ Reference parity:
 
 from __future__ import annotations
 
-from collections.abc import Mapping, Sequence
+from collections.abc import Mapping
 
 import numpy as np
 
@@ -38,36 +38,6 @@ def span_indices(n_tokens: int) -> tuple[np.ndarray, np.ndarray]:
     """
     starts, ends_closed = np.triu_indices(n_tokens)
     return starts, ends_closed
-
-
-def span_targets(
-    n_tokens: int, span_dct: Mapping[tuple[int, int], str], neg_symbol: str = "O"
-) -> list[str]:
-    """Per-span label list in enumeration order; spans absent from
-    ``span_dct`` (keys are EXCLUSIVE-end pairs) get ``neg_symbol``.
-    Parity: datautils.py:2125-2145."""
-    starts, ends_closed = span_indices(n_tokens)
-    return [span_dct.get((int(i), int(j) + 1), neg_symbol) for i, j in zip(starts, ends_closed)]
-
-
-def span_target_matrix(
-    n_tokens: int,
-    span_dct: Mapping[tuple[int, int], str],
-    ent2id: Mapping[str, int],
-    n_labels: int,
-) -> np.ndarray:
-    """One-hot [n(n+1)/2, n_labels] float matrix for gold-replay
-    scoring (FIXTURES.md F6): 1.0 at gold (span, type) cells."""
-    mat = np.zeros((num_spans(n_tokens), n_labels), dtype=np.float32)
-    starts, ends_closed = span_indices(n_tokens)
-    flat = {}
-    for (s, e), t in span_dct.items():
-        flat[(s, e - 1)] = ent2id[t]
-    for idx, (i, j) in enumerate(zip(starts.tolist(), ends_closed.tolist())):
-        lab = flat.get((i, j))
-        if lab is not None:
-            mat[idx, lab] = 1.0
-    return mat
 
 
 def _as_matrix(scores, n_tokens: int) -> np.ndarray:

@@ -55,18 +55,6 @@ def viterbi_decode(
     return path
 
 
-def viterbi_decode_batch(
-    emissions: np.ndarray, lengths: Sequence[int], transitions: np.ndarray,
-    start_transitions: np.ndarray | None = None, end_transitions: np.ndarray | None = None,
-) -> list[list[int]]:
-    """Padded batch [B, Lmax, T] -> per-sequence best paths honoring
-    true lengths (reference mask semantics, modules.py:1560)."""
-    return [
-        viterbi_decode(emissions[b, : lengths[b]], transitions, start_transitions, end_transitions)
-        for b in range(len(lengths))
-    ]
-
-
 def _softmax(x: np.ndarray, axis: int = -1) -> np.ndarray:
     x = x - np.max(x, axis=axis, keepdims=True)
     e = np.exp(x)

@@ -1,9 +1,12 @@
-"""Deduplication family: exact, n-gram Jaccard, MinHash+LSH, SimHash,
-embedding-cosine near-dup.
+"""Near-dup deduplication family: n-gram Jaccard, MinHash+LSH, SimHash,
+embedding-cosine.
+
+Exact dedup needs no operator here: it is one hash groupBy on
+:func:`~qizner_spark.operators.textstats.fingerprint_col` (no text
+column in the shuffle — only a 128-bit digest + id; the
+``exact_dedup`` and ``combine_by_text`` queries).
 
 Scale design:
-  * exact dedup is one hash groupBy on a normalized text key (no
-    text column in the shuffle — only a 128-bit digest + id);
   * candidate generation keeps pair enumeration within buckets, never
     a full cross join: LSH band buckets and SimHash chunk buckets are
     grouped into sorted per-bucket arrays expanded by
@@ -31,8 +34,8 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window, functions as F
-from pyspark.sql.types import ArrayType, LongType, StringType, StructField, StructType
+from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
 from qizner_spark.operators.pairs import ordered_pairs
 
@@ -68,36 +71,6 @@ def _md5_64_signed(s: str) -> int:
     """Signed 64-bit (two's complement) — DuckDB: hi/lo halves."""
     u = _md5_int(s, 16)
     return u - (1 << 64) if u >= (1 << 63) else u
-
-
-def normalized_text(col: str = "text") -> F.Column:
-    """Whitespace-collapsed, lower-cased canonical text key."""
-    return F.lower(F.regexp_replace(F.trim(F.col(col)), r"\s+", " "))
-
-
-def exact_duplicate_groups(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Hash-groupBy exact dedup: one row per duplicated normalized
-    text with the canonical (min) id, member count and ids."""
-    keyed = docs.select(
-        F.col(id_col).alias("doc_id"), normalized_text(text_col).alias("norm_text")
-    ).withColumn("text_key", F.md5("norm_text"))
-    return (
-        keyed.groupBy("text_key")
-        .agg(
-            F.min("doc_id").alias("canonical_id"),
-            F.count(F.lit(1)).alias("n_dups"),
-            F.sort_array(F.collect_list("doc_id")).alias("doc_ids"),
-        )
-        .where(F.col("n_dups") > 1)
-    )
-
-
-def deduplicate_exact(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Keep one representative (min id) per normalized text — the
-    window-free form: groupBy + semi join back."""
-    keyed = docs.withColumn("text_key", F.md5(normalized_text(text_col)))
-    keep = keyed.groupBy("text_key").agg(F.min(F.col(id_col)).alias(id_col))
-    return keyed.join(keep, ["text_key", id_col], "left_semi").drop("text_key")
 
 
 # ---------------------------------------------------------------------------

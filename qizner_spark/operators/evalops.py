@@ -1,4 +1,4 @@
-"""Exact-span evaluation as relational operators (E1/E3/E4/E7).
+"""Exact-span evaluation as relational operators (E1/E4/E6/E7).
 
 The reference's per-doc set arithmetic (datautils.py:2614-2777)
 becomes a full-outer join of pred and gold mention tables on
@@ -79,26 +79,6 @@ def evaluate_mentions_by_type(
             *_prf_cols(),
         )
     )
-
-
-def aggregate_supertypes_df(per_type: DataFrame, type2super: dict[str, str]) -> DataFrame:
-    """Re-aggregate a per-type counts table into super-categories via
-    a broadcast mapping join (E3, datautils.py:3207-3231)."""
-    spark = per_type.sparkSession
-    mapping = spark.createDataFrame(
-        [(k, v) for k, v in type2super.items()], ["ent_type", "super_type"]
-    )
-    joined = per_type.join(F.broadcast(mapping), "ent_type", "left").withColumn(
-        "super_type", F.coalesce("super_type", "ent_type")
-    )
-    counts = joined.groupBy("super_type").agg(
-        F.sum("tp").alias("tp"), F.sum("fp").alias("fp"), F.sum("fn").alias("fn"),
-        F.avg("f1").alias("macro_f1"),
-        F.avg("precision").alias("macro_precision"),
-        F.avg("recall").alias("macro_recall"),
-    )
-    return _with_f1(counts.select("super_type", "tp", "fp", "fn", *_prf_cols(),
-                                  "macro_precision", "macro_recall", "macro_f1"))
 
 
 def compare_runs_df(run1: DataFrame, run2: DataFrame, gold: DataFrame,

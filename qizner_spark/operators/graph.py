@@ -333,38 +333,38 @@ def pagerank(
 
 
 def cooccurrence_jaccard(
-    membership: DataFrame,
-    key_col: str = "url",
-    item_col: str = "entity_id",
+    sets: DataFrame,
+    items_col: str = "items",
     round_dp: int = 6,
 ) -> DataFrame:
-    """Pairwise Jaccard similarity of item key-sets over a
-    (key, item) membership table: for every item pair sharing >= 1
-    key, ``|keys(a) & keys(b)| / |keys(a) | keys(b)|`` — the
+    """Pairwise Jaccard similarity of item key-sets over a per-key
+    membership table — ONE row per key carrying the key's items as an
+    array in ``items_col``: for every item pair sharing >= 1 key,
+    ``|keys(a) & keys(b)| / |keys(a) | keys(b)|`` — the
     entity-similarity read-path op over the co-mention graph (two
     entities are similar when they appear in largely the same
     documents; reference analog: the mention<->type co-occurrence
     diagnostics around datautils.py:2439-2527, lifted from
     mention-level counting to set similarity).
 
-    Scale shape: one ``sort_array(collect_set(item))`` per key — set
-    semantics by construction, so repeat (key, item) rows count once
-    — feeds both the intersection counts (:func:`ordered_pairs` over
-    the array, then one groupBy on the pair) and the per-item set
-    sizes (the same arrays exploded, one map-side-combined groupBy).
+    Scale shape: each key's array is normalized in place with
+    ``sort_array(array_distinct(...))`` — set semantics, so an item
+    repeated in one key's array counts once, and no exchange: the
+    caller's rows are already grouped by key. The normalized arrays
+    feed both the intersection counts (:func:`ordered_pairs`, then one
+    groupBy on the pair) and the per-item set sizes (the arrays
+    exploded, one map-side-combined groupBy).
     A key of k items emits k^2/2 pairs and holds its k items in one
-    array, so feed a per-key CAPPED membership (the ``entity_jaccard``
-    query reads the same capped per-doc entity set as the
-    ``comention_edges`` query).
+    array, so feed CAPPED arrays (the ``entity_jaccard`` query reads
+    the same capped per-doc entity set as the ``comention_edges``
+    query).
     The two size re-attach joins are UNHINTED equi-joins on the item
     key (the item dimension is corpus-unbounded — AQE broadcasts only
     when runtime stats say it's genuinely small, same doctrine as the
     KG components join). Output is bounded by the pair count of the
     capped membership, not |items|^2.
     """
-    sets = membership.groupBy(F.col(key_col).alias("k")).agg(
-        F.sort_array(F.collect_set(item_col)).alias("_items")
-    )
+    sets = sets.select(F.sort_array(F.array_distinct(items_col)).alias("_items"))
     sizes = sets.select(F.explode("_items").alias("item")) \
         .groupBy("item").agg(F.count(F.lit(1)).alias("n"))
     inter = (

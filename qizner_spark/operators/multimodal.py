@@ -1,8 +1,8 @@
 """Multimodal columns: opaque BINARY payloads + typed metadata.
 
 Image/audio/video payloads travel as ``binary`` columns with a typed
-metadata struct; decode / feature-extraction / resize / frame-sample
-run as Arrow-batched pandas UDFs over ``mapInPandas``. The decode
+metadata struct; decode / feature-extraction / resize run as
+Arrow-batched pandas UDFs over ``mapInPandas``. The decode
 libraries (PIL / torchaudio / av) are NOT in this container, so the
 actual byte->pixels step is STUBBED: ``decode_real`` raises
 NotImplementedError behind an import-try, and ``decode_fake`` is a
@@ -146,19 +146,3 @@ def extract_features(media: DataFrame, use_real_decoder: bool = False) -> DataFr
             )
 
     return media.select("media_id", "kind", "payload").mapInPandas(run, schema=FEATURE_SCHEMA)
-
-
-def sample_frames(media: DataFrame, every_n_bytes: int = 64) -> DataFrame:
-    """'Frame sampling' over the opaque payload: emit one row per
-    sampled offset (video -> frames generalization; deterministic).
-    Native posexplode over a generated offset sequence — the 1->N
-    explode shape a real frame sampler produces."""
-    return (
-        media.where(F.col("kind") == "video")
-        .select(
-            "media_id",
-            F.posexplode(
-                F.expr(f"sequence(0, greatest(n_bytes - 1, 0), {every_n_bytes})")
-            ).alias("frame_no", "byte_offset"),
-        )
-    )

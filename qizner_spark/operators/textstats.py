@@ -107,20 +107,6 @@ def fingerprint_col(text_col: str = "text") -> Column:
     return F.md5(F.lower(F.regexp_replace(F.trim(F.col(text_col)), r"\s+", " ")))
 
 
-def text_profile(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """One call attaching the full stats family."""
-    return docs.select(
-        "*",
-        token_count_col(text_col).alias("n_tokens"),
-        subword_count_col(text_col).alias("n_subwords"),
-        lang_id_col(text_col).alias("lang_pred"),
-        F.round(stopword_ratio_col(text_col), 6).alias("stopword_ratio"),
-        F.round(punct_ratio_col(text_col), 6).alias("punct_ratio"),
-        quality_score_col(text_col).alias("quality"),
-        fingerprint_col(text_col).alias("fingerprint"),
-    )
-
-
 def tfidf_top_terms(
     docs: DataFrame, k: int = 3, id_col: str = "doc_id", text_col: str = "text",
 ) -> DataFrame:

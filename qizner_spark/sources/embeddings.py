@@ -2,7 +2,7 @@
 
 The testdata embeddings are near-orthogonal random vectors — the
 worst case for LSH and NOT the regime near-dup detection exists for.
-These generators produce CLUSTERED corpora with a controlled
+This generator produces CLUSTERED corpora with a controlled
 intra-cluster cosine, so the recall/cost tradeoff of the bucketed
 retrieval family (ann_topk, embedding_near_dup_pairs) can be
 measured where it matters: on data with actual neighbor structure
@@ -36,20 +36,3 @@ def clustered_embedding_matrix(
     s = float(np.sqrt((1.0 / tightness - 1.0) / dim))
     blocks = [c + s * rng.randn(per_cluster, dim) for c in centers]
     return np.vstack(blocks)
-
-
-def clustered_embeddings(
-    spark, n_clusters: int = 20, per_cluster: int = 25, dim: int = 64,
-    tightness: float = 0.85, seed: int = 11,
-):
-    """The same corpus as a DataFrame (vec_id, cluster_id,
-    embedding ARRAY<DOUBLE>) — the shape the retrieval operators
-    consume."""
-    X = clustered_embedding_matrix(n_clusters, per_cluster, dim, tightness, seed)
-    rows = [
-        (i, i // per_cluster, [float(x) for x in X[i]])
-        for i in range(X.shape[0])
-    ]
-    return spark.createDataFrame(
-        rows, "vec_id long, cluster_id long, embedding array<double>"
-    )

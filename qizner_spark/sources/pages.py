@@ -132,10 +132,3 @@ def synthetic_pages(
             F.expr(lang_expr).alias("lang"),
         )
     )
-
-
-def with_extracted_text(pages: DataFrame) -> DataFrame:
-    """Add ``extracted`` from html; callers assert extracted == text
-    (the byte-identity gate) then drop the heavy html column EARLY so
-    the binary never enters a shuffle (column pruning at scale)."""
-    return pages.withColumn("extracted", extract_text_col("html"))

@@ -1,1 +1,1 @@
-"""Structured-streaming variants of the batch operators."""
+"""Structured-streaming variant of the KG build (``stream_kg_increments``)."""

@@ -1,13 +1,12 @@
-"""Dedup family tests: exact, n-gram Jaccard, MinHash+LSH, SimHash,
-embedding cosine — approximate methods validated against exact."""
+"""Dedup family tests: exact (the fingerprint key), n-gram Jaccard,
+MinHash+LSH, SimHash, embedding cosine — approximate methods
+validated against exact."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from qizner_spark.operators.dedup import (
-    deduplicate_exact,
     embedding_near_dup_pairs,
-    exact_duplicate_groups,
     lsh_candidate_pairs,
     minhash_dedup_pairs,
     minhash_signatures,
@@ -15,6 +14,7 @@ from qizner_spark.operators.dedup import (
     simhash_near_pairs,
     simhash_signatures,
 )
+from qizner_spark.operators.textstats import fingerprint_col
 
 BASE = "the quick brown fox jumps over the lazy dog near the river bank today"
 NEAR = "the quick brown fox jumps over the lazy dog near the river bank now"   # 1 word differs
@@ -31,15 +31,29 @@ def docs(spark):
 
 
 class TestExact:
+    """Exact dedup is a hash-groupBy on ``fingerprint_col``, the key the
+    ``exact_dedup`` and ``combine_by_text`` queries group on."""
+
     def test_groups(self, spark, docs):
-        groups = exact_duplicate_groups(docs).collect()
+        groups = (
+            docs.select("doc_id", fingerprint_col().alias("text_key"))
+            .groupBy("text_key")
+            .agg(F.min("doc_id").alias("canonical_id"),
+                 F.sort_array(F.collect_list("doc_id")).alias("doc_ids"))
+            .where(F.size("doc_ids") > 1)
+            .collect()
+        )
         assert len(groups) == 1
         g = groups[0]
         # 0, 1 identical; 2 identical after normalization (case+ws)
         assert g["canonical_id"] == 0 and g["doc_ids"] == [0, 1, 2]
 
     def test_deduplicate(self, spark, docs):
-        kept = deduplicate_exact(docs)
+        kept = (
+            docs.select(fingerprint_col().alias("text_key"), "doc_id")
+            .groupBy("text_key")
+            .agg(F.min("doc_id").alias("doc_id"))
+        )
         ids = {r["doc_id"] for r in kept.collect()}
         assert ids == {0, 3, 4, 5}
 

@@ -1,104 +1,90 @@
-"""E1/E2/E3/E4 eval semantics tests (FIXTURES.md F8 E1 case)."""
+"""E1/E4 eval semantics tests (FIXTURES.md F8 E1 case), run on the
+relational operators in operators/evalops.py."""
 
 import pytest
 
-from qizner_spark.core.evalner import (
-    EPS,
-    F1Meaner,
-    aggregate_supertypes,
-    compare_runs,
-    evaluate_mentions,
-)
 from qizner_spark.core.scoring import GazetteerScorer, GoldReplayScorer
+from qizner_spark.operators.evalops import (
+    EPS,
+    compare_runs_df,
+    evaluate_mentions_by_type,
+    evaluate_mentions_df,
+)
+
+_COLS = "doc_key string, ent_type string, start int, end int"
+
+
+def _mentions(spark, docs):
+    """{doc_key: [(ent_type, start, end[, prob]), ...]} -> mention table."""
+    rows = [(d, m[0], m[1], m[2]) for d, ms in docs.items() for m in ms]
+    return spark.createDataFrame(rows, _COLS)
+
+
+def _micro(spark, gold, pred):
+    return evaluate_mentions_df(_mentions(spark, pred), _mentions(spark, gold)).first()
 
 
 class TestEvaluate:
-    def test_perfect(self):
-        docs = [([("A", 0, 2)], [("A", 0, 2, 0.9)])]
-        m = evaluate_mentions(docs)
+    def test_perfect(self, spark):
+        m = _micro(spark, {"d0": [("A", 0, 2)]}, {"d0": [("A", 0, 2, 0.9)]})
         assert m["precision"] == pytest.approx(1.0, abs=1e-9)
         assert m["recall"] == pytest.approx(1.0, abs=1e-9)
         assert m["f1"] == pytest.approx(1.0, abs=1e-9)
 
-    def test_fp_only(self):
-        m = evaluate_mentions([([], [("A", 0, 2, 0.9)])])
+    def test_fp_only(self, spark):
+        m = _micro(spark, {}, {"d0": [("A", 0, 2, 0.9)]})
         assert m["tp"] == 0 and m["fp"] == 1 and m["fn"] == 0
         assert m["precision"] == pytest.approx(0.0, abs=1e-9)
 
-    def test_fn_only(self):
-        m = evaluate_mentions([([("A", 0, 2)], [])])
+    def test_fn_only(self, spark):
+        m = _micro(spark, {"d0": [("A", 0, 2)]}, {})
         assert m["fn"] == 1
         assert m["recall"] == pytest.approx(0.0, abs=1e-9)
 
-    def test_empty_both(self):
-        m = evaluate_mentions([([], [])])
-        # epsilon formulas: 0/(0+eps) = 0
-        assert m["precision"] == 0.0 and m["recall"] == 0.0 and m["f1"] == 0.0
+    def test_empty_both(self, spark):
+        m = _micro(spark, {}, {})
+        # no mention on either side: the one aggregate row is all null
+        # (SQL sum over no rows), never a division by zero
+        assert m.asDict() == dict.fromkeys(m.asDict())
 
-    def test_mixed_and_per_type(self):
-        docs = [
-            ([("A", 0, 2), ("B", 3, 4)], [("A", 0, 2, 1.0), ("B", 5, 6, 1.0)]),
-            ([("A", 1, 2)], [("A", 1, 2, 1.0), ("A", 4, 5, 1.0)]),
-        ]
-        m = evaluate_mentions(docs, macro=True)
+    def test_mixed_and_per_type(self, spark):
+        gold = {"d0": [("A", 0, 2), ("B", 3, 4)], "d1": [("A", 1, 2)]}
+        pred = {"d0": [("A", 0, 2, 1.0), ("B", 5, 6, 1.0)],
+                "d1": [("A", 1, 2, 1.0), ("A", 4, 5, 1.0)]}
+        m = _micro(spark, gold, pred)
         assert m["tp"] == 2 and m["fp"] == 2 and m["fn"] == 1
-        a = m["per_type"]["A"]
-        assert a["tp"] == 2 and a["fp"] == 1 and a["fn"] == 0
-        b = m["per_type"]["B"]
-        assert b["tp"] == 0 and b["fp"] == 1 and b["fn"] == 1
         # reference formulas with eps=1e-10
         assert m["precision"] == pytest.approx(2 / (4 + EPS))
-        assert m["macro_f1"] == pytest.approx((a["f1"] + b["f1"]) / 2)
+        per_type = {r["ent_type"]: r for r in evaluate_mentions_by_type(
+            _mentions(spark, pred), _mentions(spark, gold)).collect()}
+        a, b = per_type["A"], per_type["B"]
+        assert a["tp"] == 2 and a["fp"] == 1 and a["fn"] == 0
+        assert b["tp"] == 0 and b["fp"] == 1 and b["fn"] == 1
+        assert a["num_preds"] == 3 and a["num_golds"] == 2
 
-    def test_duplicate_preds_collapse(self):
-        m = evaluate_mentions([([("A", 0, 2)], [("A", 0, 2, 0.9), ("A", 0, 2, 0.8)])])
+    def test_duplicate_preds_collapse(self, spark):
+        m = _micro(spark, {"d0": [("A", 0, 2)]},
+                   {"d0": [("A", 0, 2, 0.9), ("A", 0, 2, 0.8)]})
         assert m["tp"] == 1 and m["fp"] == 0
 
-    def test_gold_replay_gives_perfect_f1(self):
+    def test_gold_replay_gives_perfect_f1(self, spark):
         """Identity-score decode must yield P=R=1 under E1 (SURVEY §5)."""
         scorer = GoldReplayScorer()
-        gold_docs = [[("PER", 0, 2), ("LOC", 3, 4)], [("ORG", 1, 5)]]
-        docs = [(g, scorer.score_mentions(["w"] * 6, g)) for g in gold_docs]
-        m = evaluate_mentions(docs)
+        gold = {"d0": [("PER", 0, 2), ("LOC", 3, 4)], "d1": [("ORG", 1, 5)]}
+        pred = {d: scorer.score_mentions(["w"] * 6, g) for d, g in gold.items()}
+        m = _micro(spark, gold, pred)
         assert m["f1"] == pytest.approx(1.0, abs=1e-9)
 
 
-class TestF1Meaner:
-    def test_streaming_equals_batch(self):
-        meaner = F1Meaner()
-        meaner.add(2, 2, 1)
-        p, r, f = meaner.prf
-        m = evaluate_mentions(
-            [([("A", 0, 1), ("A", 1, 2), ("A", 2, 3)], [("A", 0, 1, 1), ("A", 1, 2, 1), ("A", 5, 6, 1), ("A", 7, 8, 1)])]
-        )
-        assert (p, r) == pytest.approx((m["precision"], m["recall"]))
-
-
-class TestAggregateSupertypes:
-    def test_micro_and_macro(self):
-        per_type = {
-            "PER": {"tp": 2, "fp": 0, "fn": 0},
-            "NAME": {"tp": 0, "fp": 2, "fn": 2},
-            "LOC": {"tp": 1, "fp": 1, "fn": 0},
-        }
-        agg = aggregate_supertypes(per_type, {"PER": "HUMAN", "NAME": "HUMAN"})
-        human = agg["HUMAN"]
-        assert human["tp"] == 2 and human["fp"] == 2 and human["fn"] == 2
-        assert human["precision"] == pytest.approx(2 / (4 + EPS))
-        assert human["macro_precision"] == pytest.approx((1.0 + 0.0) / 2, abs=1e-6)
-        assert "LOC" in agg  # unmapped keeps own name
-
-
 class TestCompareRuns:
-    def test_reports_run2_regressions(self):
-        gold = [("A", 0, 2)]
-        docs = [
-            (gold, [("A", 0, 2, 1)], [("A", 0, 2, 1)]),     # both right
-            (gold, [("A", 0, 2, 1)], [("A", 1, 2, 1)]),     # run2 wrong
-            (gold, [("B", 0, 2, 1)], [("A", 1, 2, 1)]),     # run1 wrong -> skipped
-        ]
-        diffs = compare_runs(docs)
-        assert len(diffs) == 1 and diffs[0]["doc_id"] == 1
+    def test_reports_run2_regressions(self, spark):
+        gold = {d: [("A", 0, 2)] for d in ("d0", "d1", "d2")}
+        run1 = {"d0": [("A", 0, 2, 1)], "d1": [("A", 0, 2, 1)], "d2": [("B", 0, 2, 1)]}
+        # d0 both right; d1 run2 wrong; d2 run1 wrong -> skipped
+        run2 = {"d0": [("A", 0, 2, 1)], "d1": [("A", 1, 2, 1)], "d2": [("A", 1, 2, 1)]}
+        diffs = compare_runs_df(_mentions(spark, run1), _mentions(spark, run2),
+                                _mentions(spark, gold)).collect()
+        assert [r["doc_key"] for r in diffs] == ["d1"]
 
 
 class TestGazetteer:

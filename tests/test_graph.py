@@ -254,18 +254,16 @@ class TestPageRank:
 
 
 class TestCooccurrenceJaccard:
-    def _member(self, spark, rows):
-        return spark.createDataFrame(rows, "url string, entity_id string")
+    def _sets(self, spark, rows):
+        return spark.createDataFrame(rows, "url string, items array<string>")
 
     def test_hand_computed_pairs(self, spark):
         """docs(A)={d1,d2,d3}, docs(B)={d1,d2}, docs(C)={d3}:
         J(A,B)=2/3, J(A,C)=1/3, B&C share nothing (no row)."""
         from qizner_spark.operators.graph import cooccurrence_jaccard
 
-        m = self._member(spark, [
-            ("d1", "A"), ("d2", "A"), ("d3", "A"),
-            ("d1", "B"), ("d2", "B"),
-            ("d3", "C"),
+        m = self._sets(spark, [
+            ("d1", ["B", "A"]), ("d2", ["A", "B"]), ("d3", ["C", "A"]),
         ])
         got = {(r.src, r.dst): r for r in cooccurrence_jaccard(m).collect()}
         assert set(got) == {("A", "B"), ("A", "C")}
@@ -276,13 +274,12 @@ class TestCooccurrenceJaccard:
         assert ac.jaccard == round(1 / 3, 6)
 
     def test_duplicate_membership_rows_ignored(self, spark):
-        """collect_set makes repeat mentions of one entity in one
-        doc count once — set semantics, like the co-mention edges."""
+        """An entity repeated in one doc's array counts once (the
+        operator's array_distinct) — set semantics, like the
+        co-mention edges."""
         from qizner_spark.operators.graph import cooccurrence_jaccard
 
-        m = self._member(spark, [
-            ("d1", "A"), ("d1", "A"), ("d1", "B"), ("d2", "B"),
-        ])
+        m = self._sets(spark, [("d1", ["A", "B", "A"]), ("d2", ["B"])])
         rows = cooccurrence_jaccard(m).collect()
         assert len(rows) == 1
         r = rows[0]
@@ -292,8 +289,6 @@ class TestCooccurrenceJaccard:
     def test_identical_sets_give_one(self, spark):
         from qizner_spark.operators.graph import cooccurrence_jaccard
 
-        m = self._member(spark, [
-            ("d1", "X"), ("d2", "X"), ("d1", "Y"), ("d2", "Y"),
-        ])
+        m = self._sets(spark, [("d1", ["X", "Y"]), ("d2", ["Y", "X"])])
         rows = cooccurrence_jaccard(m).collect()
         assert len(rows) == 1 and rows[0].jaccard == 1.0

@@ -14,7 +14,6 @@ from qizner_spark.core.labels import (
     flatten_by_prob,
     flatten_by_prob_then_length,
     flatten_gold,
-    link_labels,
     mentions_to_ent_dct,
     mentions_to_span_dct,
 )
@@ -142,12 +141,3 @@ class TestDedupeAndMaps:
         assert ms == [("PER", 0, 2), ("PER", 4, 5), ("LOC", 3, 4)]
         assert mentions_to_ent_dct(ms) == dct
         assert mentions_to_span_dct(ms) == {(0, 2): "PER", (4, 5): "PER", (3, 4): "LOC"}
-
-
-class TestLinkLabels:
-    def test_links(self):
-        # entity (1,4): links at 1,2; entity (5,6) has no internal link
-        assert link_labels(6, [("A", 1, 4), ("B", 5, 6)]) == [0.0, 1.0, 1.0, 0.0, 0.0]
-
-    def test_empty(self):
-        assert link_labels(1, []) == []

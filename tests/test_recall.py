@@ -24,6 +24,20 @@ from pyspark.sql import functions as F
 SF001 = "/root/testdata/sf0.01"
 
 
+def clustered_embeddings(spark, n_clusters=20, per_cluster=25, dim=64,
+                         tightness=0.85, seed=11):
+    """The clustered corpus as a DataFrame (vec_id, cluster_id,
+    embedding ARRAY<DOUBLE>) — the shape the retrieval operators
+    consume."""
+    from qizner_spark.sources.embeddings import clustered_embedding_matrix
+
+    X = clustered_embedding_matrix(n_clusters, per_cluster, dim, tightness, seed)
+    rows = [(i, i // per_cluster, [float(x) for x in X[i]]) for i in range(X.shape[0])]
+    return spark.createDataFrame(
+        rows, "vec_id long, cluster_id long, embedding array<double>"
+    )
+
+
 class TestTestdataRecall:
     @pytest.fixture(scope="class")
     def emb(self, spark):
@@ -91,8 +105,6 @@ class TestClusteredRecall:
 
     @pytest.fixture(scope="class")
     def clustered(self, spark):
-        from qizner_spark.sources.embeddings import clustered_embeddings
-
         return clustered_embeddings(spark, tightness=0.85).cache()
 
     def test_ann_recall_at_depth2_floor(self, spark, clustered):

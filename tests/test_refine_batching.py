@@ -1,123 +1,8 @@
-"""M10 pooling, M1/M3/T5 batching, P3 sampling, E6 confusion, S8 html."""
+"""E6 confusion matrix, the P1 negative-sampling query and the
+hash-threshold sampling scale path."""
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
-
-from qizner_spark.core.batching import (
-    group_mean_pool,
-    pad_batch,
-    pad_ori_indexes,
-    pad_tags,
-    tokens_to_ids,
-)
-from qizner_spark.core.refine import apply_refinement, refined_span_additive, span_pooling
-from qizner_spark.core.spans import num_spans, span_indices
-
-
-class TestSpanPooling:
-    """Expected matrices spelled out in the reference docstrings
-    (modules.py:1592-1777) for input [1, 2, 3]."""
-
-    V = [1.0, 2.0, 3.0]
-
-    def test_sum(self):
-        got = span_pooling(self.V, "sum")
-        assert np.allclose(got, [[1, 3, 6], [0, 2, 5], [0, 0, 3]])
-
-    def test_mean(self):
-        got = span_pooling(self.V, "mean")
-        assert np.allclose(got, [[1, 1.5, 2], [0, 2, 2.5], [0, 0, 3]])
-
-    def test_max(self):
-        got = span_pooling(self.V, "max")
-        assert np.allclose(got, [[1, 2, 3], [0, 2, 3], [0, 0, 3]])
-
-    def test_min(self):
-        got = span_pooling([3.0, 1.0, 2.0], "min")
-        assert np.allclose(got, [[3, 1, 1], [0, 1, 1], [0, 0, 2]])
-
-    def test_softmax_bounds_and_limit(self):
-        # soft-max >= hard max; temp->0 converges to hard max
-        v = [-1.0, -2.0, -3.0]  # FIXTURES.md M10 vector
-        soft = span_pooling(v, "softmax", temp=1.0)
-        hard = span_pooling(v, "max")
-        tri = np.triu_indices(3)
-        assert (soft[tri] >= hard[tri] - 1e-9).all()
-        tight = span_pooling(v, "softmax", temp=0.01)
-        assert np.allclose(tight[tri], hard[tri], atol=1e-6)
-
-    def test_softmin_is_negated_softmax(self):
-        v = [0.5, -1.5, 2.0]
-        a = span_pooling(v, "softmin", temp=0.7)
-        b = -span_pooling([-x for x in v], "softmax", temp=0.7)
-        assert np.allclose(a, b)
-
-    def test_refined_additive_unit_spans_zero(self):
-        ref = refined_span_additive(3, [5.0, -5.0], "min")
-        starts, ends = span_indices(3)
-        for i in range(num_spans(3)):
-            if starts[i] == ends[i]:
-                assert ref[i] == 0.0
-        # span (0,1) closed: interior link 0 -> 5.0 ; span (0,2): min(5,-5)
-        idx01 = 1  # (0,1) is second in row-major
-        idx02 = 2
-        assert ref[idx01] == 5.0 and ref[idx02] == -5.0
-
-    def test_apply_refinement_direction(self):
-        scores = np.zeros((num_spans(3), 2))
-        up = apply_refinement(scores, 3, [1.0, 1.0], "min")
-        down = apply_refinement(scores, 3, [1.0, 1.0], "max")
-        assert up[1, 0] > 0 and down[1, 0] < 0
-
-
-class TestBatching:
-    def test_pad_batch_dynamic(self):
-        ids, mask, lens = pad_batch([[1, 2, 3], [4]])
-        assert ids.shape == (2, 3)  # batch max, not 512
-        assert ids.tolist() == [[1, 2, 3], [4, 0, 0]]
-        assert mask.tolist() == [[1, 1, 1], [1, 0, 0]]
-        assert lens.tolist() == [3, 1]
-
-    def test_tokens_to_ids_special(self):
-        vocab = {"[CLS]": 2, "[SEP]": 3, "[UNK]": 1, "hi": 7}
-        assert tokens_to_ids(["hi", "???"], vocab) == [2, 7, 1, 3]
-
-    def test_pad_ori_indexes_minus_one(self):
-        out = pad_ori_indexes([[0, 1, 1], [0]])
-        assert out.tolist() == [[0, 1, 1], [0, -1, -1]]
-
-    def test_pad_tags_with_o(self):
-        assert pad_tags([["B-X"], ["O", "I-X"]]) == [["B-X", "O"], ["O", "I-X"]]
-
-    def test_group_mean_pool(self):
-        vecs = np.array([[1.0], [3.0], [5.0], [9.0]])
-        # subtokens 1,2 belong to token 1; trailing pad -1 excluded
-        out = group_mean_pool(vecs, [0, 1, 1, -1], n_tokens=2)
-        assert np.allclose(out, [[1.0], [4.0]])
-
-
-class TestSampling:
-    def test_negative_sample_ratio(self, spark):
-        from qizner_spark.operators.sampling import negative_sample
-
-        df = spark.range(1000).withColumn("pos", (F.col("id") < 50).cast("int"))
-        out = negative_sample(df, F.col("pos") == 1, ratio=1.0, seed=7)
-        n_pos = out.where(F.col("pos") == 1).count()
-        n_neg = out.where(F.col("pos") == 0).count()
-        assert n_pos == 50  # all positives kept
-        assert 20 <= n_neg <= 90  # ~ratio * |pos| sampled negatives
-
-    def test_kfold_partition(self, spark):
-        from qizner_spark.operators.sampling import kfold
-
-        df = spark.range(100)
-        folds = [kfold(df, 5, "id", f)[1].count() for f in range(5)]
-        assert sum(folds) == 100
-        assert all(c > 0 for c in folds)
-        train, held = kfold(df, 5, "id", 0)
-        assert train.count() + held.count() == 100
-        assert train.join(held, "id").count() == 0
 
 
 class TestConfusionAndReport:
@@ -138,24 +23,27 @@ class TestConfusionAndReport:
         assert cm[("ORG", "O")] == 1     # missed gold
         assert cm[("O", "ORG")] == 1     # spurious pred
 
-    def test_html_report(self, spark, tmp_path):
-        from qizner_spark.operators.report import write_mentions_html
 
-        docs = spark.createDataFrame([("u1", "big hash join now")], ["url", "text"])
-        mentions = spark.createDataFrame(
-            [("u1", "OP", 1, 3, "hash join", 0.9)],
-            ["doc_key", "ent_type", "start", "end", "mention", "prob"],
-        )
-        path = str(tmp_path / "report.html")
-        write_mentions_html(path, docs, mentions)
-        content = open(path).read()
-        assert "<mark" in content and "hash join" in content and "OP" in content
+class TestSampling:
+    def test_negative_sample_ratio(self, spark, sf_dir):
+        """P1 ``negative_sample`` query: every positive is kept, and the
+        negatives are the deterministic hash-selected ~3/10."""
+        import __spark_entry__ as em
+
+        docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
+        pos = {r["doc_id"] for r in docs.collect() if "spark" in r["text"].split(" ")}
+        neg = {r["doc_id"] for r in docs.collect()} - pos
+        out = {r["doc_id"]: r["is_positive"] for r in em._negative_sample(spark, sf_dir).collect()}
+        assert pos and neg
+        assert {d for d, p in out.items() if p == 1} == pos  # all positives kept
+        kept_neg = {d for d, p in out.items() if p == 0}
+        assert kept_neg == {d for d in neg if (d * 2654435761) % 10 < 3}
+        assert 0.2 * len(neg) <= len(kept_neg) <= 0.4 * len(neg)
 
 
 class TestScalePathSampling:
-    """The sort-free 10^12-row variants of stratified sampling and
-    per-stratum quantile bucketing (regime split documented on the
-    exact driver queries stratified_sample / priority_quartiles)."""
+    """The sort-free 10^12-row variant of stratified sampling (regime
+    split documented on the exact driver query stratified_sample)."""
 
     def test_md5_threshold_constant(self):
         from qizner_spark.operators.sampling import md5_threshold
@@ -221,57 +109,3 @@ class TestScalePathSampling:
             for r in hash_threshold_sample(df.repartition(17), "id", 0.1).collect()
         )
         assert a == b
-
-    def test_quantile_buckets_match_ntile_away_from_boundaries(self, spark):
-        from pyspark.sql import Window
-        from qizner_spark.operators.sampling import quantile_buckets_approx
-
-        df = spark.range(8000).select(
-            (F.col("id") % 2).cast("string").alias("stratum"),
-            (F.xxhash64("id") % 100000).alias("v"),
-            "id",
-        )
-        approx = quantile_buckets_approx(df, "stratum", "v", 4, bucket_col="b")
-        w = Window.partitionBy("stratum").orderBy(F.col("v"), F.col("id"))
-        exact = df.withColumn("q", F.ntile(4).over(w))
-        joined = approx.join(exact, ["stratum", "v", "id"]).select("b", "q")
-        rows = joined.collect()
-        assert len(rows) == 8000
-        agree = sum(1 for r in rows if r["b"] == r["q"])
-        # sketch accuracy 1e-4 of rank: disagreement only in boundary
-        # ties; demand >= 99% agreement and never more than 1 off
-        assert agree >= 0.99 * len(rows)
-        assert all(abs(r["b"] - r["q"]) <= 1 for r in rows)
-        # all four buckets populated in both strata
-        counts = {
-            (r["stratum"], r["b"])
-            for r in approx.select("stratum", "b").distinct().collect()
-        }
-        assert len(counts) == 8
-
-    def test_quantile_buckets_keep_null_stratum(self, spark):
-        """NULL stratum keys must bucketize among themselves, not
-        silently vanish (a plain equi-join drops NULL != NULL)."""
-        from qizner_spark.operators.sampling import quantile_buckets_approx
-
-        df = spark.range(400).select(
-            F.when(F.col("id") % 2 == 0, "a").otherwise(None).alias("stratum"),
-            F.col("id").alias("v"),
-        )
-        out = quantile_buckets_approx(df, "stratum", "v", 4, bucket_col="b")
-        assert out.count() == 400
-        null_rows = out.where(F.col("stratum").isNull())
-        assert null_rows.count() == 200
-        assert null_rows.select("b").distinct().count() == 4
-
-    def test_quantile_buckets_tied_values_share_bucket(self, spark):
-        """Value-based contract: ALL ties of one value land in ONE
-        bucket (ntile would force-split them); the docstring's
-        ntile-agreement claim applies to tie-free values only."""
-        from qizner_spark.operators.sampling import quantile_buckets_approx
-
-        df = spark.range(1000).select(
-            F.lit("s").alias("stratum"), F.lit(7).alias("v")
-        )
-        out = quantile_buckets_approx(df, "stratum", "v", 4, bucket_col="b")
-        assert out.select("b").distinct().count() == 1

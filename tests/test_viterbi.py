@@ -9,7 +9,6 @@ from qizner_spark.core.viterbi import (
     bio_start_transitions,
     bio_transition_matrix,
     viterbi_decode,
-    viterbi_decode_batch,
 )
 
 TAGS = ["O", "B-X", "I-X"]
@@ -52,10 +51,14 @@ class TestViterbi:
         assert viterbi_decode(np.array([[0.0, 3.0]]), np.zeros((2, 2))) == [1]
 
     def test_batch_honors_lengths(self):
+        """Padded batch decoding (reference mask semantics,
+        modules.py:1560): each row decodes over its true length only."""
         em = np.zeros((2, 3, 2))
         em[0, :, 1] = 1.0
         em[1, :, 0] = 1.0
-        paths = viterbi_decode_batch(em, [3, 2], np.zeros((2, 2)))
+        em[1, 2, 1] = 9.0  # padding that would win if it were decoded
+        lengths = [3, 2]
+        paths = [viterbi_decode(em[b, :n], np.zeros((2, 2))) for b, n in enumerate(lengths)]
         assert paths == [[1, 1, 1], [0, 0]]
 
     def test_bio_transitions_block_orphan_inside(self):

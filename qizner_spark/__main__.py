@@ -6,9 +6,12 @@ Cluster usage (north_rule: multi-executor, --py-files):
     spark-submit --py-files qizner_spark.zip \\
         --num-executors 250 --executor-cores 4 \\
         qizner_spark/__main__.py \\
-        --input s3://bucket/pages_iceberg \\
-        --sink s3://bucket/triples \\
-        --resume --salt-buckets 16
+        --input s3a://bucket/pages_iceberg \\
+        --sink s3a://bucket/triples \\
+        --salt-buckets 16
+
+The sink scheme's Hadoop connector (hadoop-aws for s3a://) must be on
+the classpath: the commit protocol binds the sink's own FileSystem.
 
 Local sandbox smoke:
 
@@ -37,8 +40,6 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
                      help="generate N deterministic synthetic pages instead of reading input")
     p.add_argument("--sink", required=True, help="triples sink path (append, partitioned by subj bucket)")
     p.add_argument("--metrics", help="metrics sink path (default: <sink>_metrics)")
-    p.add_argument("--resume", action="store_true",
-                   help="skip urls already committed to the sink (default behavior is also resumable; flag is documentation)")
     p.add_argument("--master", help="override master (local runs only; leave unset under spark-submit)")
     p.add_argument("--decode-threshold", type=float, default=0.5)
     p.add_argument("--max-seg-len", type=int, default=512)

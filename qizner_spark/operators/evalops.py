@@ -40,11 +40,15 @@ def _match_flags(pred: DataFrame, gold: DataFrame, keys: list[str]) -> DataFrame
 
 
 def _counts(flags: DataFrame, group: list[str]) -> DataFrame:
+    def total(flag):
+        # a sum over no rows is null; the reference counts 0
+        return F.coalesce(F.sum(flag), F.lit(0)).cast("double")
+
     agg = flags.groupBy(*group) if group else flags.groupBy()
     return agg.agg(
-        F.sum(F.col("in_pred") * F.col("in_gold")).cast("double").alias("tp"),
-        F.sum(F.col("in_pred") * (1 - F.col("in_gold"))).cast("double").alias("fp"),
-        F.sum((1 - F.col("in_pred")) * F.col("in_gold")).cast("double").alias("fn"),
+        total(F.col("in_pred") * F.col("in_gold")).alias("tp"),
+        total(F.col("in_pred") * (1 - F.col("in_gold"))).alias("fp"),
+        total((1 - F.col("in_pred")) * F.col("in_gold")).alias("fn"),
     )
 
 

@@ -42,82 +42,42 @@ this protocol: move the old data under a synthetic
 ``run_id=legacy`` directory (one rename) — otherwise the mixed
 partition layouts break parquet partition discovery on the sink
 read. Legacy MANIFESTS (no ``run_id`` column) need no migration:
-:func:`_manifest_run_ids` reads with mergeSchema and treats a
-missing/null run_id as "no staged commits", which is correct —
-pre-protocol writes were never staged.
+every manifest read uses the fixed schema ``url STRING, run_id
+STRING``, so a url-only file reads ``run_id`` as null, meaning "no
+staged commit", which is correct — pre-protocol writes were never
+staged.
 
-The protocol's four metadata operations (is_dir / list_dir / rename /
-rmtree) run through a filesystem seam: :class:`LocalFS` (default,
-os/shutil — local paths and ``file://`` URIs only, anything else
-fails loudly) or :class:`HadoopFS` (the Hadoop FileSystem API via the
-session JVM — the production binding for hdfs://, s3a://, or an
-Iceberg warehouse path; exercised in-sandbox against Hadoop's local
-filesystem by the crash suite). Swapping the sink store is one
-constructor argument, not a rewrite.
+The protocol's three metadata operations (list_dir / rename / rmtree)
+run through ONE binding: the sink path's own Hadoop FileSystem,
+resolved from the session's Hadoop configuration exactly as Spark's
+parquet writes resolve the path. A local path, ``file://``, hdfs://
+or s3a:// sink runs the same code; a scheme whose connector is not
+on the classpath fails before any write. The crash suite exercises
+the binding against Hadoop's local filesystem.
 """
 
 from __future__ import annotations
 
-import os
 import posixpath
-import shutil
 import time
 import uuid
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
-from pyspark.errors import AnalysisException
+
+#: the manifest's fixed read schema (see "Legacy MANIFESTS" above)
+_MANIFEST_SCHEMA = "url STRING, run_id STRING"
 
 
 class SimulatedCrash(RuntimeError):
     """Raised by the test-only crash hooks in :func:`run_resumable`."""
 
 
-class LocalFS:
-    """Default filesystem seam: driver-local os/shutil operations.
-
-    ``normalize`` strips a ``file://`` scheme so the driver-side
-    os.path/rename operations and Spark's writes (which resolve
-    ``file:///x`` to ``/x``) agree on ONE concrete path — without the
-    strip, a ``file:///x`` sink would write parquet under ``/x`` while
-    the publish rename targeted the literal string ``file:///x``,
-    failing AFTER the manifest commit (a lost increment). Any other
-    scheme fails loudly here: those need :class:`HadoopFS`."""
-
-    def normalize(self, path: str) -> str:
-        from urllib.parse import urlparse
-
-        parsed = urlparse(path)
-        if parsed.scheme == "file":
-            return parsed.path
-        if parsed.scheme and len(parsed.scheme) > 1:  # len>1: not a drive letter
-            raise ValueError(
-                f"LocalFS sink must be a local path (got scheme "
-                f"'{parsed.scheme}://'): the commit protocol's rename/"
-                f"cleanup steps are driver-local; pass fs=HadoopFS(spark, "
-                f"sink_path) to run them through the Hadoop FileSystem API"
-            )
-        return path
-
-    def is_dir(self, path: str) -> bool:
-        return os.path.isdir(path)
-
-    def list_dir(self, path: str) -> list[str]:
-        return os.listdir(path)
-
-    def rename(self, src: str, dst: str) -> None:
-        os.rename(src, dst)
-
-    def rmtree(self, path: str) -> None:
-        shutil.rmtree(path)
-
-
-class HadoopFS:
-    """Hadoop FileSystem-backed seam: the production binding. Resolves
-    the filesystem for ``base_uri`` from the session's Hadoop
-    configuration, so hdfs://, s3a://, abfs:// (any scheme the
-    cluster's connectors provide) run the SAME commit protocol. The
-    in-sandbox crash suite drives it against Hadoop's local
-    filesystem (no cluster needed) — the swap is config, not code.
+class _SinkFS:
+    """The sink path's own Hadoop FileSystem: the protocol's metadata
+    operations, resolved from the session's Hadoop configuration the
+    way Spark's parquet writes resolve the same path (a scheme-less
+    path goes to ``fs.defaultFS``). A scheme with no connector on the
+    classpath fails here, before any Spark write.
 
     NOTE on atomicity: the protocol's commit point is the manifest
     append (a Spark job commit), not these renames — so an
@@ -125,25 +85,16 @@ class HadoopFS:
     recovers correctly via :func:`recover_sink` roll-forward/back.
     """
 
-    def __init__(self, spark: SparkSession, base_uri: str):
-        jvm = spark._jvm
-        self._jvm = jvm
-        self._fs = jvm.org.apache.hadoop.fs.FileSystem.get(
-            jvm.java.net.URI.create(base_uri), spark._jsc.hadoopConfiguration()
-        )
-
-    def _path(self, path: str):
-        return self._jvm.org.apache.hadoop.fs.Path(path)
-
-    def normalize(self, path: str) -> str:
-        return path  # the FileSystem owns scheme resolution
-
-    def is_dir(self, path: str) -> bool:
-        p = self._path(path)
-        return bool(self._fs.exists(p) and self._fs.getFileStatus(p).isDirectory())
+    def __init__(self, spark: SparkSession, sink_path: str):
+        self._path = spark._jvm.org.apache.hadoop.fs.Path
+        self._fs = self._path(sink_path).getFileSystem(spark._jsc.hadoopConfiguration())
 
     def list_dir(self, path: str) -> list[str]:
-        return [s.getPath().getName() for s in self._fs.listStatus(self._path(path))]
+        """Entry names under ``path``; none when it does not exist."""
+        p = self._path(path)
+        if not self._fs.exists(p):
+            return []
+        return [s.getPath().getName() for s in self._fs.listStatus(p)]
 
     def rename(self, src: str, dst: str) -> None:
         # Hadoop rename reports failure as False, not an exception
@@ -155,31 +106,22 @@ class HadoopFS:
             raise IOError(f"Hadoop FileSystem recursive delete failed: {path}")
 
 
-def _keys_if_exists(spark: SparkSession, fs, path: str, key: str) -> DataFrame | None:
-    """Distinct key column of a parquet path, or None ONLY when the
-    path does not exist / holds no committed file. Any other failure
-    (corrupt footer, permission denied) re-raises: silently treating
-    a broken manifest as missing would re-append every url's
-    triples. Missing paths are found via ``fs``: a failed query makes
-    the session's ``Observation`` listener log a stack trace."""
-    if not fs.is_dir(path):
+def _read_committed(spark: SparkSession, fs: _SinkFS, path: str,
+                    schema: str) -> DataFrame | None:
+    """The parquet files under ``path`` read with a fixed ``schema``, or
+    None when nothing is committed there: no directory, or only hidden
+    entries (``_temporary`` or ``_staging`` from a crashed first write,
+    ``_SUCCESS``, checksums). A fixed schema plans without a Spark job,
+    reads a directory that holds only ``_SUCCESS`` as 0 rows, and still
+    raises on a corrupt footer (at action time): silently treating a
+    broken manifest as missing would re-append every url's triples."""
+    if all(n.startswith(("_", ".")) for n in fs.list_dir(path)):
         return None
-    try:
-        return spark.read.parquet(path).select(key).distinct()
-    except AnalysisException as e:
-        if "UNABLE_TO_INFER_SCHEMA" in str(e):
-            # the directory exists but holds no committed parquet file
-            # (e.g. a crash during the very FIRST append left only
-            # _temporary or _staging): semantically "nothing written
-            # yet". Corrupt footers raise a different error class and
-            # still propagate.
-            return None
-        raise
+    return spark.read.schema(schema).parquet(path)
 
 
-def processed_keys(spark: SparkSession, sink_path: str, key: str = "url",
-                   fs=None) -> DataFrame | None:
-    """Keys already processed = manifest keys UNION sink keys.
+def processed_keys(spark: SparkSession, sink_path: str) -> DataFrame | None:
+    """Urls already processed = manifest urls UNION sink urls.
 
     Under the staged protocol the manifest alone is authoritative
     (data publishes only after the manifest commit); the union also
@@ -187,63 +129,40 @@ def processed_keys(spark: SparkSession, sink_path: str, key: str = "url",
     sink AFTER its one-time layout migration (see module docstring —
     legacy data must move under a synthetic ``run_id=legacy`` dir, or
     the mixed partition layouts fail parquet discovery here). None
-    when neither exists yet. ``fs`` as in :func:`recover_sink`."""
-    fs = fs or LocalFS()
-    sink_path = fs.normalize(sink_path)
-    manifest = _keys_if_exists(spark, fs, f"{sink_path}_processed", key)
-    sink = _keys_if_exists(spark, fs, sink_path, key)
-    if manifest is None:
-        return sink
-    if sink is None:
-        return manifest
-    return manifest.union(sink).distinct()
+    when neither holds a committed file yet."""
+    fs = _SinkFS(spark, sink_path)
+    manifest = _read_committed(spark, fs, f"{sink_path}_processed", _MANIFEST_SCHEMA)
+    sink = _read_committed(spark, fs, sink_path, "url STRING")
+    keys = [df.select("url").distinct() for df in (manifest, sink) if df is not None]
+    if not keys:
+        return None
+    return keys[0] if len(keys) == 1 else keys[0].union(keys[1]).distinct()
 
 
-def pending_only(pages: DataFrame, done: DataFrame | None, key: str = "url") -> DataFrame:
-    """Anti-join the input against the committed key set."""
+def pending_only(pages: DataFrame, done: DataFrame | None) -> DataFrame:
+    """Anti-join the input against the committed url set."""
     if done is None:
         return pages
-    return pages.join(done, key, "left_anti")
+    return pages.join(done, "url", "left_anti")
 
 
-def _manifest_run_ids(spark: SparkSession, sink_path: str) -> set[str]:
-    """run_ids recorded in the manifest. Read with mergeSchema so a
-    manifest that mixes pre-protocol files (no run_id column) with
-    staged-commit files still surfaces the column; a manifest with no
-    run_id column at all means no staged commit ever happened (legacy
-    writes were never staged), so there is nothing to roll forward."""
-    try:
-        df = spark.read.option("mergeSchema", "true").parquet(f"{sink_path}_processed")
-    except AnalysisException as e:
-        if ("PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e)
-                or "UNABLE_TO_INFER_SCHEMA" in str(e)):
-            return set()
-        raise
-    if "run_id" not in df.columns:
-        return set()
-    return {
-        r["run_id"]
-        for r in df.select("run_id").where(F.col("run_id").isNotNull()).distinct().collect()
-    }
-
-
-def recover_sink(spark: SparkSession, sink_path: str, fs=None) -> dict:
+def recover_sink(spark: SparkSession, sink_path: str) -> dict:
     """Reconcile staged increments with the manifest (call on open —
     :func:`run_resumable` does). Committed-but-unpublished run_ids
     are rolled FORWARD (finish the rename); unmanifested staging
-    dirs are rolled BACK (deleted). Returns counts for observability.
-
-    ``fs``: filesystem seam (default :class:`LocalFS`; pass
-    ``HadoopFS(spark, sink_path)`` for remote stores)."""
-    fs = fs or LocalFS()
-    sink_path = fs.normalize(sink_path)
+    dirs are rolled BACK (deleted). Returns counts for observability."""
+    fs = _SinkFS(spark, sink_path)
     staging_root = posixpath.join(sink_path, "_staging")
     # a publish renames _staging/<id> and leaves _staging/ empty: with
     # nothing staged, the manifest read would roll nothing
-    staged = fs.list_dir(staging_root) if fs.is_dir(staging_root) else []
+    staged = fs.list_dir(staging_root)
     if not staged:
         return {"rolled_forward": 0, "rolled_back": 0}
-    committed = _manifest_run_ids(spark, sink_path)
+    manifest = _read_committed(spark, fs, f"{sink_path}_processed", _MANIFEST_SCHEMA)
+    committed = set() if manifest is None else {
+        r["run_id"]
+        for r in manifest.select("run_id").where(F.col("run_id").isNotNull()).distinct().collect()
+    }
     fwd = back = 0
     for rid in staged:
         src = posixpath.join(staging_root, rid)
@@ -262,7 +181,6 @@ def run_resumable(
     sink_path: str,
     metrics_path: str | None = None,
     crash_after: str | None = None,
-    fs=None,
     **kg_kwargs,
 ) -> dict:
     """One resumable increment of the flagship pipeline:
@@ -275,17 +193,14 @@ def run_resumable(
     at the corresponding point — test hook for the crash-injection
     suite; never set it in production.
 
-    ``fs``: filesystem seam for the protocol's metadata operations
-    (default :class:`LocalFS`; ``HadoopFS(spark, sink_path)`` for
-    hdfs://, s3a://, ...). Spark's own parquet writes resolve the
-    same URIs through the identical Hadoop configuration, so both
-    halves of the protocol always target one store."""
+    The protocol's renames and listings run through the sink path's
+    own Hadoop FileSystem, which Spark's parquet writes resolve from
+    the same configuration, so both halves always target one store."""
     from qizner_spark.plans.pipeline import build_kg
 
-    fs = fs or LocalFS()
-    sink_path = fs.normalize(sink_path)
-    recovered = recover_sink(spark, sink_path, fs=fs)
-    done = processed_keys(spark, sink_path, fs=fs)
+    fs = _SinkFS(spark, sink_path)
+    recovered = recover_sink(spark, sink_path)
+    done = processed_keys(spark, sink_path)
     todo = pending_only(pages, done)
     t0 = time.time()
     n_pending = todo.count()

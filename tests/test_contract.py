@@ -89,10 +89,10 @@ _ROOT_GLOBS = ["__spark_entry__.py", "qizner_spark/__main__.py", "bench.py",
 
 # Reference-parity ports of QizNER's detection semantics (decoding,
 # segmentation, tokenization, label conversion and flattening), the
-# reference corpus IO behind the P/R metric, and two deployment seams
-# (model shipping to executors; the filesystem for non-``file:`` sinks,
-# which LocalFS names when it rejects one). No entry point calls them;
-# each value is the reference line its docstring (or its module's) cites.
+# reference corpus IO behind the P/R metric, and one deployment seam
+# (model shipping to executors). No entry point calls them; each value
+# is the reference line its docstring (or its module's) cites. They are
+# roots themselves: what a port calls is reached.
 _REACH_ALLOWLIST = {
     "core/labels.py:ent_dct_to_mentions": "datautils.py:1831-1844",
     "core/labels.py:mentions_to_ent_dct": "datautils.py:1831-1844",
@@ -120,10 +120,10 @@ _REACH_ALLOWLIST = {
     "sources/corpus.py:corpus_to_json_lines": "datautils.py:1557",
     "operators/artifacts.py:distribute_artifact": "train_ner.py:1042-1060",
     "operators/artifacts.py:artifact_scorer_factory": "train_ner.py:1042-1060",
-    "plans/checkpoint.py:HadoopFS": "data_reader.py:396-416",
 }
 
-_WORD = re.compile(r"[A-Za-z_]\w*")
+# a string that names code: an identifier or a dotted path, nothing else
+_DOTTED = re.compile(r"[A-Za-z_]\w*(?:\.[A-Za-z_]\w*)*")
 _DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
 
 
@@ -137,9 +137,10 @@ def _docstring_nodes(tree: ast.AST) -> set[int]:
 
 def _names(node: ast.AST, strings: bool = False, docs: set[int] = frozenset()) -> set[str]:
     """Identifiers a node refers to: names, attributes, imported names
-    and, with ``strings``, the identifier-like words of its string
-    constants (a name passed to ``getattr``/``importlib``), docstrings
-    excluded."""
+    and, with ``strings``, the parts of each string constant that is
+    wholly an identifier or a dotted path (a name passed to
+    ``getattr``/``importlib``; prose that merely contains a name does
+    not count), docstrings excluded."""
     out: set[str] = set()
     for n in ast.walk(node):
         if isinstance(n, ast.Name):
@@ -149,8 +150,8 @@ def _names(node: ast.AST, strings: bool = False, docs: set[int] = frozenset()) -
         elif isinstance(n, ast.alias):
             out.update(n.name.split("."))
         elif (strings and isinstance(n, ast.Constant) and isinstance(n.value, str)
-              and id(n) not in docs):
-            out.update(_WORD.findall(n.value))
+              and id(n) not in docs and _DOTTED.fullmatch(n.value)):
+            out.update(n.value.split("."))
     return out
 
 
@@ -159,17 +160,30 @@ def _parse(rel: str) -> ast.Module:
         return ast.parse(f.read())
 
 
-def _unreached() -> tuple[dict[str, ast.AST], set[str]]:
+def _reached(defs: dict[str, ast.AST], names: set[str]) -> set[str]:
+    """Keys of the definitions that ``names`` reach, each reached
+    definition adding the names of its body, to a fixed point."""
+    names, done = set(names), set()
+    while new := [k for k, node in defs.items() if k not in done and node.name in names]:
+        for key in new:
+            done.add(key)
+            names |= _names(defs[key])
+    return done
+
+
+def _unreached() -> tuple[dict[str, ast.AST], set[str], set[str]]:
     """(every top-level definition in qizner_spark/ as
-    ``"<module path>:<name>" -> node``, the keys nothing reaches)."""
-    reached: set[str] = set()
+    ``"<module path>:<name>" -> node``, the keys no entry point
+    reaches, the keys neither an entry point nor an allowlisted port
+    reaches)."""
+    roots: set[str] = set()
     for pattern in _ROOT_GLOBS:
         for rel in sorted(glob.glob(pattern, root_dir=REPO)):
             tree = _parse(rel)
             # the driver contract's strings are query names and DuckDB
             # SQL — table and column names, not Python references
-            reached |= _names(tree, strings=rel != "__spark_entry__.py",
-                              docs=_docstring_nodes(tree))
+            roots |= _names(tree, strings=rel != "__spark_entry__.py",
+                            docs=_docstring_nodes(tree))
     defs: dict[str, ast.AST] = {}
     for rel in sorted(glob.glob("qizner_spark/**/*.py", root_dir=REPO, recursive=True)):
         for stmt in _parse(rel).body:
@@ -177,20 +191,16 @@ def _unreached() -> tuple[dict[str, ast.AST], set[str]]:
                 defs[f"{os.path.relpath(rel, 'qizner_spark')}:{stmt.name}"] = stmt
             elif not isinstance(stmt, (ast.Import, ast.ImportFrom)):
                 # registries and constants reach what they name
-                reached |= _names(stmt)
-    done: set[str] = set()
-    while new := [k for k, node in defs.items() if k not in done and node.name in reached]:
-        for key in new:
-            done.add(key)
-            reached |= _names(defs[key])
-    return defs, set(defs) - done
+                roots |= _names(stmt)
+    with_ports = roots.union(*(_names(defs[k]) for k in _REACH_ALLOWLIST if k in defs))
+    return defs, set(defs) - _reached(defs, roots), set(defs) - _reached(defs, with_ports)
 
 
 def test_every_definition_is_reached():
-    defs, unreached = _unreached()
-    flagged = sorted(unreached - set(_REACH_ALLOWLIST))
+    defs, unreached, orphans = _unreached()
+    flagged = sorted(orphans - set(_REACH_ALLOWLIST))
     assert not flagged, (
-        f"top-level definitions no entry point reaches: {flagged} — delete "
+        f"top-level definitions no entry point or port reaches: {flagged} — delete "
         "them, or allowlist a reference-parity port with its cited line"
     )
     stale = sorted(set(_REACH_ALLOWLIST) - unreached)

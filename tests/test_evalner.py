@@ -43,9 +43,10 @@ class TestEvaluate:
 
     def test_empty_both(self, spark):
         m = _micro(spark, {}, {})
-        # no mention on either side: the one aggregate row is all null
-        # (SQL sum over no rows), never a division by zero
-        assert m.asDict() == dict.fromkeys(m.asDict())
+        assert m["tp"] == 0 and m["fp"] == 0 and m["fn"] == 0
+        assert m["precision"] == pytest.approx(0.0, abs=1e-9)
+        assert m["recall"] == pytest.approx(0.0, abs=1e-9)
+        assert m["f1"] == pytest.approx(0.0, abs=1e-9)
 
     def test_mixed_and_per_type(self, spark):
         gold = {"d0": [("A", 0, 2), ("B", 3, 4)], "d1": [("A", 1, 2)]}

@@ -1,5 +1,6 @@
 """Streaming KG increments + checkpoint/resume tests."""
 
+import uuid
 from collections import Counter
 
 import pytest
@@ -7,6 +8,18 @@ from pyspark.sql import functions as F
 
 from qizner_spark.plans.checkpoint import pending_only, processed_keys, run_resumable
 from qizner_spark.sources.pages import pages_from_documents
+
+
+def _jobs_run(spark, fn):
+    """(fn's result, the number of Spark jobs it ran)."""
+    sc, group = spark.sparkContext, f"test-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job budget")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 class TestStreaming:
@@ -239,15 +252,34 @@ class TestResume:
         sink = str(tmp_path / "triples")
         run_resumable(spark, pages_from_documents(spark, sf_dir).limit(10), sink)
         assert os.listdir(os.path.join(sink, "_staging")) == []
-        sc, group = spark.sparkContext, "test-recover-after-commit"
-        sc.setJobGroup(group, "recover_sink")
-        try:
-            rec = recover_sink(spark, sink)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
+        rec, jobs = _jobs_run(spark, lambda: recover_sink(spark, sink))
         assert rec == {"rolled_forward": 0, "rolled_back": 0}
-        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        assert jobs == 0
+
+    def test_processed_keys_plans_without_a_job(self, spark, sf_dir, tmp_path):
+        """The manifest and sink reads have fixed schemas: building the
+        committed-url plan over a committed sink infers nothing, so it
+        runs no Spark job."""
+        sink = str(tmp_path / "triples")
+        m = run_resumable(spark, pages_from_documents(spark, sf_dir).limit(10), sink)
+        assert m["n_new_triples"] > 0
+        done, jobs = _jobs_run(spark, lambda: processed_keys(spark, sink))
+        assert jobs == 0
+        assert done.count() == 10
+
+    def test_zero_triple_sink_resumes_without_a_job(self, spark, sf_dir, tmp_path):
+        """A sink whose only increment had zero triples holds
+        ``run_id=<id>/_SUCCESS`` and no parquet file: it reads as no
+        url, the manifest still covers the committed pages, and the
+        plan again runs no Spark job."""
+        pages = pages_from_documents(spark, sf_dir)
+        zh = pages.where(F.col("lang") == "zh").limit(5)
+        en = pages.where(F.col("lang") == "en").limit(5)
+        sink = str(tmp_path / "triples")
+        assert run_resumable(spark, zh, sink)["n_new_triples"] == 0
+        _, jobs = _jobs_run(spark, lambda: processed_keys(spark, sink))
+        assert jobs == 0
+        assert run_resumable(spark, zh.union(en), sink)["n_pending"] == 5
 
     def test_pending_only_antijoin(self, spark):
         pages = spark.createDataFrame([("u1",), ("u2",), ("u3",)], ["url"])
@@ -259,17 +291,26 @@ class TestResume:
         assert processed_keys(spark, str(tmp_path / "nope")) is None
 
     def test_remote_sink_uri_rejected_loudly(self, spark, sf_dir):
-        """Driver-local rename/rmtree would silently no-op against a
-        remote store — the protocol must refuse, not half-run."""
-        import pytest as _pytest
+        """A scheme with no Hadoop connector on the classpath fails
+        when the protocol binds the sink's filesystem, before any Spark
+        job: nothing is written, so no local ``s3a:`` directory (the
+        sink or its manifest taken as a relative path) appears."""
+        import os
+
+        from py4j.protocol import Py4JJavaError
 
         from qizner_spark.plans.checkpoint import recover_sink
 
         pages = pages_from_documents(spark, sf_dir)
-        with _pytest.raises(ValueError, match="local path"):
-            run_resumable(spark, pages, "s3a://bucket/triples")
-        with _pytest.raises(ValueError, match="local path"):
-            recover_sink(spark, "hdfs://nn/triples")
+
+        def both():
+            with pytest.raises(Py4JJavaError, match="s3a"):
+                run_resumable(spark, pages, "s3a://bucket/triples")
+            with pytest.raises(Py4JJavaError, match="s3a"):
+                recover_sink(spark, "s3a://bucket/triples")
+
+        assert _jobs_run(spark, both)[1] == 0
+        assert not os.path.lexists("s3a:")
 
     def test_legacy_manifest_without_run_id_is_tolerated(self, spark, sf_dir, tmp_path):
         """A pre-protocol manifest (url only, no run_id column) means
@@ -384,10 +425,10 @@ class TestResume:
 
 
 class TestFilesystemSeam:
-    """The commit protocol's metadata ops run through the fs seam:
-    file:// URIs must behave identically to raw paths (the round-4
-    ADVICE half-run bug), and the HadoopFS binding must pass the same
-    crash scenarios against Hadoop's local filesystem."""
+    """The commit protocol's metadata ops run through the sink path's
+    own Hadoop FileSystem: a ``file://`` URI, a raw path and a path
+    with a space must each name one store for the protocol and for
+    Spark's writes."""
 
     def test_file_scheme_sink_round_trips(self, spark, sf_dir, tmp_path):
         """file:///x must publish at /x — before the seam, Spark wrote
@@ -407,44 +448,20 @@ class TestFilesystemSeam:
         m2 = run_resumable(spark, pages, raw)
         assert m2["n_pending"] == 0 and m2["resumed"]
 
-    def test_hadoopfs_crash_after_stage_rolls_back(self, spark, sf_dir, tmp_path):
-        from qizner_spark.plans.checkpoint import HadoopFS, SimulatedCrash
+    def test_sink_path_with_space_round_trips(self, spark, sf_dir, tmp_path):
+        """A space in the sink path reaches the filesystem binding and
+        Spark's writes as the same path: the increment publishes and a
+        rerun is a no-op."""
+        import os
 
         pages = pages_from_documents(spark, sf_dir).limit(10)
-        sink = str(tmp_path / "triples")
-        fs = HadoopFS(spark, sink)
-        import pytest as _pytest
-        with _pytest.raises(SimulatedCrash):
-            run_resumable(spark, pages, sink, crash_after="stage", fs=fs)
-        m = run_resumable(spark, pages, sink, fs=fs)
-        assert m["rolled_back"] == 1 and m["rolled_forward"] == 0
-        assert m["n_pending"] == 10  # unmanifested stage reprocessed
-        assert spark.read.parquet(sink).count() == m["n_new_triples"]
-
-    def test_hadoopfs_crash_after_commit_rolls_forward(self, spark, sf_dir, tmp_path):
-        from qizner_spark.plans.checkpoint import HadoopFS, SimulatedCrash
-
-        pages = pages_from_documents(spark, sf_dir).limit(10)
-        sink = str(tmp_path / "triples")
-        fs = HadoopFS(spark, sink)
-        import pytest as _pytest
-        with _pytest.raises(SimulatedCrash):
-            run_resumable(spark, pages, sink, crash_after="commit", fs=fs)
-        m = run_resumable(spark, pages, sink, fs=fs)
-        assert m["rolled_forward"] == 1 and m["rolled_back"] == 0
-        assert m["n_pending"] == 0  # manifest committed -> no reprocess
-        assert spark.read.parquet(sink).count() > 0
-
-    def test_hadoopfs_and_localfs_interoperate(self, spark, sf_dir, tmp_path):
-        """The two seams target the same store for local paths: an
-        increment written through one resumes through the other."""
-        from qizner_spark.plans.checkpoint import HadoopFS
-
-        pages = pages_from_documents(spark, sf_dir).limit(10)
-        sink = str(tmp_path / "triples")
-        run_resumable(spark, pages, sink)  # LocalFS
-        m = run_resumable(spark, pages, sink, fs=HadoopFS(spark, sink))
-        assert m["n_pending"] == 0 and m["resumed"]
+        sink = str(tmp_path / "kg out" / "triples")
+        m1 = run_resumable(spark, pages, sink)
+        assert m1["n_pending"] == 10
+        assert os.listdir(os.path.join(sink, "_staging")) == []
+        assert spark.read.parquet(sink).count() == m1["n_new_triples"] > 0
+        m2 = run_resumable(spark, pages, sink)
+        assert m2["n_pending"] == 0 and m2["resumed"]
 
 
 class TestPerPartitionLineage:

@@ -343,19 +343,15 @@ FROM toks t JOIN {gazetteer_sql_values()} USING (mention)
 """
 
 
-def _ner_mentions_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same semantics through the Arrow detection operator (T1/T2 ->
-    D3 segment -> gazetteer score -> decode inside one mapInPandas)."""
+def _gazetteer_mentions(spark: SparkSession, sf_dir: str, factory) -> DataFrame:
+    """The documents' unflattened mentions from the Arrow detection
+    operator with the scorer ``factory`` builds, in ``_ner_mentions``'
+    (doc_id, pos, mention, ent_type) shape."""
     from qizner_spark.operators.mentions import detect_mentions
 
-    def factory():
-        from qizner_spark.core.scoring import GazetteerScorer
-
-        return GazetteerScorer(GAZETTEER_SINGLE, token_deli=" ")
-
-    docs = _documents(spark, sf_dir)
     out = detect_mentions(
-        docs, factory, key_col="doc_id", text_col="text", lang_col=None, flat=False
+        _documents(spark, sf_dir), factory, key_col="doc_id", text_col="text",
+        lang_col=None, flat=False,
     )
     return out.select(
         F.col("doc_key").cast("long").alias("doc_id"),
@@ -363,28 +359,18 @@ def _ner_mentions_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
         "mention",
         "ent_type",
     )
+
+
+def _ner_mentions_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Same semantics through the Arrow detection operator (T1/T2 ->
+    D3 segment -> gazetteer score -> decode inside one mapInPandas)."""
+    return _gazetteer_mentions(spark, sf_dir, _kg_single_factory)
 
 
 def _ner_seq_crf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BIO + CRF/Viterbi sequence path (M14/M16 + I2 assembly) — same
     emitted mentions as the span path on this dictionary."""
-    from qizner_spark.operators.mentions import detect_mentions
-
-    def factory():
-        from qizner_spark.core.scoring import GazetteerSeqScorer
-
-        return GazetteerSeqScorer(GAZETTEER_SINGLE)
-
-    docs = _documents(spark, sf_dir)
-    out = detect_mentions(
-        docs, factory, key_col="doc_id", text_col="text", lang_col=None, flat=False
-    )
-    return out.select(
-        F.col("doc_key").cast("long").alias("doc_id"),
-        F.col("start").alias("pos"),
-        "mention",
-        "ent_type",
-    )
+    return _gazetteer_mentions(spark, sf_dir, _kg_seq_factory)
 
 
 def _alias_dictionary(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1231,11 +1217,9 @@ def _ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from qizner_spark.operators.similarity import ann_topk
 
     emb = _embeddings(spark, sf_dir)
-    # rank only: cosine's last ulp may differ between engines
-    # broadcast_queries=True: this caller KNOWS the query set is 5
-    # rows (the guard's documented bounded-small contract)
-    return ann_topk(emb, emb.where(F.col("vec_id") < 5), k=10, n_planes=4, dim=64,
-                    broadcast_queries=True) \
+    # rank only: cosine's last ulp may differ between engines; the
+    # 5-row query set meets ann_topk's bounded-queries precondition
+    return ann_topk(emb, emb.where(F.col("vec_id") < 5), k=10, n_planes=4, dim=64) \
         .select("query_id", "nbr_id", "rank")
 
 
@@ -1254,8 +1238,7 @@ def _ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _embeddings(spark, sf_dir)
     queries = emb.where(F.col("vec_id") < 50)
     ann = ann_topk(emb, queries, k=10, n_planes=4, dim=64,
-                   multiprobe_bits=3,
-                   broadcast_queries=True).select("query_id", "nbr_id")
+                   multiprobe_bits=3).select("query_id", "nbr_id")
     exact = brute_force_topk(emb, queries, k=10).select("query_id", "nbr_id")
     hits = exact.join(ann, ["query_id", "nbr_id"]).groupBy("query_id").agg(
         F.count(F.lit(1)).alias("hits_at_10")
@@ -1385,10 +1368,10 @@ def _kg_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _kg_build_triples(spark: SparkSession, sf_dir: str, factory, reg_key: str) -> DataFrame:
     from qizner_spark.plans.pipeline import build_kg_from_sf_dir
 
-    # broadcast_alias=True: this caller KNOWS the dictionary is the
-    # bounded curated gazetteer (the guard's documented contract) —
-    # the hint removes one full mention-table shuffle that an AQE
-    # runtime SMJ->BHJ conversion would still have paid the write for
+    # broadcast_alias=True: the dictionary is the bounded curated
+    # gazetteer, so the public ``linked`` stage may force-broadcast it.
+    # The triples do not read that join (they link by projection, see
+    # assemble_kg), so the flag leaves this query's plan unchanged.
     stages = build_kg_from_sf_dir(spark, sf_dir, scorer_factory=factory,
                                   broadcast_alias=True,
                                   max_entities_per_doc=COMENTION_CAP)
@@ -1456,8 +1439,8 @@ def _kg_stream_increments(spark: SparkSession, sf_dir: str) -> DataFrame:
     alias -> link -> co-mention -> CC -> triples) runs over the
     ACCUMULATED sink. The oracle is LITERALLY the kg_triples batch
     oracle — the streaming path must reproduce the batch DAG
-    bit-for-bit (same gazetteer scorer, same broadcast hint, same
-    per-doc entity cap)."""
+    bit-for-bit (same gazetteer scorer, the same per-page detection
+    step, same per-doc entity cap)."""
     import os
     import tempfile
 

@@ -49,8 +49,8 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
     return p.parse_args(argv)
 
 
-def main(argv: list[str] | None = None) -> int:
-    args = parse_args(argv if argv is not None else sys.argv[1:])
+def main() -> int:
+    args = parse_args(sys.argv[1:])
     from qizner_spark.session import get_spark
 
     spark = get_spark("qizner-kg-build", master=args.master,

@@ -44,8 +44,8 @@ ENT_TYPES = sorted(set(GAZETTEER_FULL.values()))
 SUPER_TYPES: dict[str, str] = {"OP": "OPERATOR", "EXEC": "OPERATOR", "STRUCT": "SCHEMA"}
 
 
-def gazetteer_sql_values(gaz: dict[str, str] | None = None) -> str:
-    """Inline VALUES clause for DuckDB oracles: (mention, ent_type)."""
-    gaz = gaz or GAZETTEER_SINGLE
-    rows = ", ".join(f"('{m}', '{t}')" for m, t in sorted(gaz.items()))
+def gazetteer_sql_values() -> str:
+    """Inline VALUES clause of ``GAZETTEER_SINGLE`` for DuckDB
+    oracles: (mention, ent_type)."""
+    rows = ", ".join(f"('{m}', '{t}')" for m, t in sorted(GAZETTEER_SINGLE.items()))
     return f"(VALUES {rows}) AS gaz(mention, ent_type)"

@@ -40,6 +40,8 @@ from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 from qizner_spark.operators.pairs import ordered_pairs
 
 MERSENNE = (1 << 61) - 1
+#: the MinHash shape: hashes per signature, LSH bands over them
+NUM_HASHES, BANDS = 64, 16
 
 
 _MD5_CACHE_MAX = 1_000_000
@@ -77,25 +79,22 @@ def _md5_64_signed(s: str) -> int:
 # word shingles (native) + exact n-gram Jaccard
 # ---------------------------------------------------------------------------
 
-def word_shingles_col(text_col: str = "text", k: int = 3) -> F.Column:
-    """k-word shingles as a native expression (no UDF): slide over the
-    split token array."""
+def word_shingles_col(k: int) -> F.Column:
+    """k-word shingles of ``text`` as a native expression (no UDF):
+    slide over the split token array."""
     return F.expr(
         f"array_distinct(transform("
-        f"  sequence(0, greatest(size(split({text_col}, ' ')) - {k}, 0)),"
-        f"  i -> array_join(slice(split({text_col}, ' '), i + 1, {k}), ' ')))"
+        f"  sequence(0, greatest(size(split(text, ' ')) - {k}, 0)),"
+        f"  i -> array_join(slice(split(text, ' '), i + 1, {k}), ' ')))"
     )
 
 
-def ngram_jaccard_pairs(
-    docs: DataFrame, threshold: float = 0.8, k: int = 3,
-    id_col: str = "doc_id", text_col: str = "text",
-) -> DataFrame:
+def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.8, k: int = 3) -> DataFrame:
     """EXACT Jaccard over k-word shingles: explode -> self-join on
     shingle -> |A∩B| / (|A|+|B|-|A∩B|). Ground truth for the
     approximate variants; at 100 TB run it only on LSH candidates —
     here it doubles as the DuckDB-checkable oracle query."""
-    sh = docs.select(F.col(id_col).alias("doc_id"), word_shingles_col(text_col, k).alias("sh"))
+    sh = docs.select("doc_id", word_shingles_col(k).alias("sh"))
     sizes = sh.select("doc_id", F.size("sh").alias("n_sh"))
     ex = sh.select("doc_id", F.explode("sh").alias("shingle"))
     a, b = ex.alias("a"), ex.alias("b")
@@ -127,30 +126,27 @@ def _shingle_hashes(text: str, k: int) -> np.ndarray:
     return np.fromiter((_md5_32(s) for s in shingles), dtype=np.int64)
 
 
-def minhash_coeffs(num_hashes: int = 64, seed: int = 13) -> tuple[np.ndarray, np.ndarray]:
-    """Universal-hash coefficients. Bounded < 2^30 so a*h + b with a
-    32-bit base hash stays < 2^62: exact in numpy int64 AND DuckDB
-    BIGINT (no silent wraparound on either side)."""
-    rng = np.random.RandomState(seed)
+def minhash_coeffs(num_hashes: int = NUM_HASHES) -> tuple[np.ndarray, np.ndarray]:
+    """Universal-hash coefficients (seed 13). Bounded < 2^30 so
+    a*h + b with a 32-bit base hash stays < 2^62: exact in numpy
+    int64 AND DuckDB BIGINT (no silent wraparound on either side)."""
+    rng = np.random.RandomState(13)
     a = rng.randint(1, 1 << 30, size=num_hashes).astype(np.int64)
     b = rng.randint(0, 1 << 30, size=num_hashes).astype(np.int64)
     return a, b
 
 
-def minhash_signatures(
-    docs: DataFrame, num_hashes: int = 64, k: int = 3,
-    id_col: str = "doc_id", text_col: str = "text", seed: int = 13,
-) -> DataFrame:
-    """(doc_id, sig ARRAY<LONG>[num_hashes]) in one Arrow pass.
-    Universal hashing (a*h + b) mod p over md5-prefix shingle hashes —
-    deterministic across workers, runs, and engines."""
-    a, b = minhash_coeffs(num_hashes, seed)
+def minhash_signatures(docs: DataFrame, num_hashes: int = NUM_HASHES, k: int = 3) -> DataFrame:
+    """(doc_id, sig ARRAY<LONG>[num_hashes]) of each doc's ``text`` in
+    one Arrow pass. Universal hashing (a*h + b) mod p over md5-prefix
+    shingle hashes — deterministic across workers, runs, and engines."""
+    a, b = minhash_coeffs(num_hashes)
     schema = StructType([StructField("doc_id", LongType()), StructField("sig", ArrayType(LongType()))])
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             sigs = []
-            for text in pdf[text_col]:
+            for text in pdf["text"]:
                 h = _shingle_hashes(text, k)  # [S]
                 # [num_hashes, S] -> min over shingles. Per-doc small
                 # matrices beat one batch-wide matrix here (round-6
@@ -159,9 +155,9 @@ def minhash_signatures(
                 # zero arithmetic savings).
                 m = (a[:, None] * h[None, :] + b[:, None]) % MERSENNE
                 sigs.append(m.min(axis=1).tolist())
-            yield pd.DataFrame({"doc_id": pdf[id_col].astype("int64"), "sig": sigs})
+            yield pd.DataFrame({"doc_id": pdf["doc_id"].astype("int64"), "sig": sigs})
 
-    return docs.select(id_col, text_col).mapInPandas(run, schema=schema)
+    return docs.select("doc_id", "text").mapInPandas(run, schema=schema)
 
 
 def lsh_candidate_pairs(
@@ -214,12 +210,11 @@ def lsh_candidate_pairs(
     ).distinct()
 
 
-def minhash_dedup_pairs(
-    signatures: DataFrame, threshold: float = 0.8, num_hashes: int = 64, bands: int = 16,
-) -> DataFrame:
+def minhash_dedup_pairs(signatures: DataFrame, threshold: float = 0.8) -> DataFrame:
     """LSH candidates over ``signatures`` (the :func:`minhash_signatures`
-    output) verified by the SIGNATURE Jaccard estimate (fraction of
-    agreeing minhashes). Builds a plan and runs no job.
+    output, ``NUM_HASHES`` long) in ``BANDS`` bands, verified by the
+    SIGNATURE Jaccard estimate (fraction of agreeing minhashes).
+    Builds a plan and runs no job.
 
     CACHE OWNERSHIP: the plan reads ``signatures`` THREE times
     (banding + both verification sides), so the caller persists them
@@ -228,7 +223,7 @@ def minhash_dedup_pairs(
     re-runs the shingle/md5/minhash Arrow pass, and concurrent stages
     race to populate an unmaterialized cache. The production analog
     is a staging table of signatures between phases."""
-    cands = lsh_candidate_pairs(signatures, bands, num_hashes=num_hashes)
+    cands = lsh_candidate_pairs(signatures, BANDS, num_hashes=NUM_HASHES)
     sa = signatures.withColumnRenamed("doc_id", "id_a").withColumnRenamed("sig", "sig_a")
     sb = signatures.withColumnRenamed("doc_id", "id_b").withColumnRenamed("sig", "sig_b")
     return (
@@ -248,11 +243,10 @@ def minhash_dedup_pairs(
 # SimHash
 # ---------------------------------------------------------------------------
 
-def simhash_signatures(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """64-bit SimHash over unigram token hashes (bit-majority vote),
-    vectorized in numpy. Token hash = md5 64-bit prefix, identically
+def simhash_signatures(docs: DataFrame) -> DataFrame:
+    """(doc_id, simhash): 64-bit SimHash of each doc's ``text`` over
+    unigram token hashes (bit-majority vote), vectorized in numpy.
+    Token hash = md5 64-bit prefix, identically
     computable in DuckDB (hi/lo hex halves), so signatures and pairs
     are oracle-checkable."""
     schema = StructType([StructField("doc_id", LongType()), StructField("simhash", LongType())])
@@ -261,7 +255,7 @@ def simhash_signatures(
         bit_idx = np.arange(64, dtype=np.uint64)
         for pdf in batches:
             out = []
-            for text in pdf[text_col]:
+            for text in pdf["text"]:
                 toks = text.split(" ")
                 h64 = np.fromiter(
                     (_md5_64_signed(t) for t in toks), dtype=np.int64
@@ -270,16 +264,18 @@ def simhash_signatures(
                 votes = bits.sum(axis=0) * 2 >= len(toks)
                 sig = int((votes.astype(np.uint64) << bit_idx).sum())
                 out.append(sig - (1 << 64) if sig >= (1 << 63) else sig)  # to signed long
-            yield pd.DataFrame({"doc_id": pdf[id_col].astype("int64"), "simhash": out})
+            yield pd.DataFrame({"doc_id": pdf["doc_id"].astype("int64"), "simhash": out})
 
-    return docs.select(id_col, text_col).mapInPandas(run, schema=schema)
+    return docs.select("doc_id", "text").mapInPandas(run, schema=schema)
 
 
-def simhash_chunk_bounds(max_hamming: int, n_bits: int = 64) -> list[tuple[int, int]]:
-    """(shift, width) per blocking chunk. With ``max_hamming + 1``
-    chunks, any pair within the distance shares >= 1 exact chunk
-    (pigeonhole) — so blocking never drops a qualifying pair. The old
-    fixed 4x16-bit scheme silently missed distances 4+."""
+def simhash_chunk_bounds(max_hamming: int) -> list[tuple[int, int]]:
+    """(shift, width) per blocking chunk of the 64-bit simhash. With
+    ``max_hamming + 1`` chunks, any pair within the distance shares
+    >= 1 exact chunk (pigeonhole) — so blocking never drops a
+    qualifying pair. The old fixed 4x16-bit scheme silently missed
+    distances 4+."""
+    n_bits = 64
     if max_hamming >= n_bits:
         # distance >= n_bits admits EVERY pair (even bitwise
         # complements share no chunk) — no blocking scheme can cover
@@ -345,10 +341,11 @@ def simhash_near_pairs(signatures: DataFrame, max_hamming: int = 3) -> DataFrame
 # ---------------------------------------------------------------------------
 
 def embedding_near_dup_pairs(
-    emb: DataFrame, threshold: float = 0.95, id_col: str = "vec_id", vec_col: str = "embedding",
-    dim: int | None = None, n_planes: int = 4, seed: int = 23, max_hamming: int = 1,
+    emb: DataFrame, threshold: float = 0.95, dim: int | None = None, n_planes: int = 4,
+    max_hamming: int = 1,
 ) -> DataFrame:
-    """Pairs with cosine >= threshold, candidate-blocked by random
+    """(vec_id, embedding) rows -> pairs with cosine >= threshold,
+    candidate-blocked by random
     hyperplane LSH: exact cosine is verified only for pairs whose
     sign-bit buckets are within Hamming distance ``max_hamming`` (the
     symmetric form of ann_topk's multiprobe). The join is an
@@ -366,10 +363,9 @@ def embedding_near_dup_pairs(
     )
 
     if dim is None:
-        dim = len(emb.select(vec_col).first()[0])
+        dim = len(emb.select("embedding").first()[0])
     v = hyperplane_signature(
-        with_norm(emb.select(F.col(id_col).alias("id"), vec_col), vec_col),
-        dim, n_planes, "v", seed,
+        with_norm(emb.select(F.col("vec_id").alias("id"), "embedding")), dim, n_planes, "v",
     ).select("id", "v", "norm", "bucket")
     # each row also probes its bit-flip buckets; pair (a, b) with
     # hamming(bucket_a, bucket_b) <= max_hamming meets on b's bucket

@@ -28,11 +28,12 @@ def _with_f1(df: DataFrame) -> DataFrame:
     )
 
 
-def _match_flags(pred: DataFrame, gold: DataFrame, keys: list[str]) -> DataFrame:
-    p = pred.select(*keys, "ent_type", "start", "end").dropDuplicates().withColumn("in_pred", F.lit(1))
-    g = gold.select(*keys, "ent_type", "start", "end").dropDuplicates().withColumn("in_gold", F.lit(1))
-    return p.join(g, on=keys + ["ent_type", "start", "end"], how="full_outer").select(
-        *keys,
+def _match_flags(pred: DataFrame, gold: DataFrame) -> DataFrame:
+    cols = ["doc_key", "ent_type", "start", "end"]
+    p = pred.select(*cols).dropDuplicates().withColumn("in_pred", F.lit(1))
+    g = gold.select(*cols).dropDuplicates().withColumn("in_gold", F.lit(1))
+    return p.join(g, on=cols, how="full_outer").select(
+        "doc_key",
         "ent_type",
         F.coalesce("in_pred", F.lit(0)).alias("in_pred"),
         F.coalesce("in_gold", F.lit(0)).alias("in_gold"),
@@ -52,13 +53,10 @@ def _counts(flags: DataFrame, group: list[str]) -> DataFrame:
     )
 
 
-def evaluate_mentions_df(
-    pred: DataFrame, gold: DataFrame, keys: list[str] | None = None
-) -> DataFrame:
+def evaluate_mentions_df(pred: DataFrame, gold: DataFrame) -> DataFrame:
     """Micro P/R/F1 over exact (type, start, end) matches — one row.
     Parity: datautils.py:2639-2702 (set semantics, epsilon 1e-10)."""
-    keys = keys or ["doc_key"]
-    counts = _counts(_match_flags(pred, gold, keys), [])
+    counts = _counts(_match_flags(pred, gold), [])
     return _with_f1(
         counts.select(
             "tp", "fp", "fn",
@@ -69,12 +67,9 @@ def evaluate_mentions_df(
     )
 
 
-def evaluate_mentions_by_type(
-    pred: DataFrame, gold: DataFrame, keys: list[str] | None = None
-) -> DataFrame:
+def evaluate_mentions_by_type(pred: DataFrame, gold: DataFrame) -> DataFrame:
     """Per-type breakdown (the reference's detail_stat)."""
-    keys = keys or ["doc_key"]
-    counts = _counts(_match_flags(pred, gold, keys), ["ent_type"])
+    counts = _counts(_match_flags(pred, gold), ["ent_type"])
     return _with_f1(
         counts.select(
             "ent_type", "tp", "fp", "fn",
@@ -85,38 +80,34 @@ def evaluate_mentions_by_type(
     )
 
 
-def compare_runs_df(run1: DataFrame, run2: DataFrame, gold: DataFrame,
-                    keys: list[str] | None = None) -> DataFrame:
+def compare_runs_df(run1: DataFrame, run2: DataFrame, gold: DataFrame) -> DataFrame:
     """Docs where run1 matches gold exactly but run2 does not (E4,
     datautils.py:2790-2815): per-doc aggregation of match flags."""
-    keys = keys or ["doc_key"]
 
     def doc_ok(pred: DataFrame) -> DataFrame:
-        flags = _match_flags(pred, gold, keys)
-        return flags.groupBy(*keys).agg(
+        flags = _match_flags(pred, gold)
+        return flags.groupBy("doc_key").agg(
             (F.sum((F.col("in_pred") != F.col("in_gold")).cast("int")) == 0).alias("ok")
         )
 
     ok1 = doc_ok(run1).withColumnRenamed("ok", "run1_ok")
     ok2 = doc_ok(run2).withColumnRenamed("ok", "run2_ok")
     return (
-        ok1.join(ok2, keys, "full_outer")
+        ok1.join(ok2, ["doc_key"], "full_outer")
         .where(F.col("run1_ok") & ~F.coalesce("run2_ok", F.lit(False)))
-        .select(*keys)
+        .select("doc_key")
     )
 
 
-def confusion_matrix_df(pred: DataFrame, gold: DataFrame,
-                        keys: list[str] | None = None) -> DataFrame:
+def confusion_matrix_df(pred: DataFrame, gold: DataFrame) -> DataFrame:
     """E6: confusion counts over BOUNDARY-exact matches — join pred
     and gold mentions on (doc, start, end) (type NOT in the key), then
     crosstab gold type vs predicted type. Unmatched golds count
     against 'O' predictions and vice versa (the reference's two-pointer
     alignment, datautils.py:2282-2306, relationally)."""
-    keys = keys or ["doc_key"]
-    p = pred.select(*keys, "start", "end", F.col("ent_type").alias("pred_type")).dropDuplicates()
-    g = gold.select(*keys, "start", "end", F.col("ent_type").alias("gold_type")).dropDuplicates()
-    j = p.join(g, keys + ["start", "end"], "full_outer").select(
+    p = pred.select("doc_key", "start", "end", F.col("ent_type").alias("pred_type")).dropDuplicates()
+    g = gold.select("doc_key", "start", "end", F.col("ent_type").alias("gold_type")).dropDuplicates()
+    j = p.join(g, ["doc_key", "start", "end"], "full_outer").select(
         F.coalesce("gold_type", F.lit("O")).alias("gold_type"),
         F.coalesce("pred_type", F.lit("O")).alias("pred_type"),
     )

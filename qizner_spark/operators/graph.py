@@ -11,7 +11,7 @@ O(log n) rounds; each round is two shuffles.
 
 Skew notes (explicit, per north_rule):
   * per-node neighborhood minima are HOT-KEY-SALTED two-phase
-    aggregates: keys whose neighborhood meets ``hot_threshold`` rows
+    aggregates: keys whose neighborhood meets ``HOT_THRESHOLD`` rows
     split into ``salt_buckets`` deterministic sub-keys
     (pmod(xxhash64(dst))) before any single reducer sees them, and
     only their minima replicate across buckets for the re-attach
@@ -20,7 +20,9 @@ Skew notes (explicit, per north_rule):
   * ``salt_buckets=1`` falls back to a window min (one shuffle, fine
     for moderate skew under AQE) — both paths return identical rows;
   * lineage is cut with localCheckpoint each round so the iterative
-    plan doesn't snowball.
+    plan doesn't snowball; each round frees the round it supersedes,
+    and the caller frees the last one, which the returned map reads,
+    with :func:`unpersist_checkpoints`.
 """
 
 from __future__ import annotations
@@ -35,27 +37,28 @@ DEFAULT_SALT_BUCKETS = 16
 #: A src key whose (symmetrized) neighborhood meets this row count is
 #: "hot" and gets salted; everything else takes the plain two-phase
 #: path. Scale note: the hot SET is bounded by total_rows /
-#: hot_threshold keys — raise the threshold with data volume so the
+#: HOT_THRESHOLD keys — raise the threshold with data volume so the
 #: broadcast of the hot set stays small (at 10^12 edge rows, 5x10^4
-#: would admit up to 2x10^7 keys; use 10^6+ there).
-DEFAULT_HOT_THRESHOLD = 50_000
+#: would admit up to 2x10^7 keys; use 10^6+ there). Read at call
+#: time, so a test can lower it to put a small hub on the hot path.
+HOT_THRESHOLD = 50_000
+#: the seeded sample that counts rows per key to find the hot keys
+HOT_SAMPLE_FRAC = 0.01
+#: a cap on the large-star/small-star rounds (they converge in O(log n))
+MAX_ITERATIONS = 25
 
 
-def _with_neighborhood_min(
-    df: DataFrame, salt_buckets: int,
-    hot_threshold: int = DEFAULT_HOT_THRESHOLD,
-    hot_sample_frac: float = 0.01,
-) -> DataFrame:
+def _with_neighborhood_min(df: DataFrame, salt_buckets: int) -> DataFrame:
     """Attach ``m`` = min(src, min(dst) over rows sharing src).
 
     salt_buckets > 1: HOT-KEY-ONLY salting, priced so cold keys pay
     nothing and hot keys pay almost nothing:
 
-    * detection — a seeded ``hot_sample_frac`` sample counted per key
+    * detection — a seeded ``HOT_SAMPLE_FRAC`` sample counted per key
       (a 10^8-row hub shows up in any sample; a marginally-hot key
       that sampling misses just takes the cold path, which is merely
       its straggler risk, never a correctness issue). The sample is
-      skipped when ``hot_threshold`` is too small for it to resolve.
+      skipped when ``HOT_THRESHOLD`` is too small for it to resolve.
     * cold keys — the plain per-key window min, now WITHOUT the hub
       rows in the partition (the straggler is gone from this path).
     * hot keys — two-phase min over (src, pmod(xxhash64(dst), k)):
@@ -75,14 +78,14 @@ def _with_neighborhood_min(
         return df.withColumn("m", F.least(F.col("src"), F.min("dst").over(w)))
     # sample only when the threshold is big enough for a 1% sample to
     # see >= ~50 rows of a borderline-hot key; else count exactly
-    use_sample = hot_threshold * hot_sample_frac >= 50
-    probe = df.sample(hot_sample_frac, seed=7) if use_sample else df
+    use_sample = HOT_THRESHOLD * HOT_SAMPLE_FRAC >= 50
+    probe = df.sample(HOT_SAMPLE_FRAC, seed=7) if use_sample else df
     # the /2 is sampling-variance slack (a true-hot key whose sample
     # count lands below the scaled threshold must still classify hot);
     # in exact-count mode there is no variance, so the documented
-    # contract applies verbatim: >= hot_threshold rows is hot
-    cutoff = (max(1, int(hot_threshold * hot_sample_frac / 2))
-              if use_sample else hot_threshold)
+    # contract applies verbatim: >= HOT_THRESHOLD rows is hot
+    cutoff = (max(1, int(HOT_THRESHOLD * HOT_SAMPLE_FRAC / 2))
+              if use_sample else HOT_THRESHOLD)
     hot = (
         probe.groupBy("src").agg(F.count(F.lit(1)).alias("_n"))
         .where(F.col("_n") >= cutoff)
@@ -106,12 +109,11 @@ def _with_neighborhood_min(
     return cold_min.unionByName(hot_min)
 
 
-def _large_star(edges: DataFrame, salt_buckets: int = DEFAULT_SALT_BUCKETS,
-                hot_threshold: int = DEFAULT_HOT_THRESHOLD) -> DataFrame:
+def _large_star(edges: DataFrame, salt_buckets: int) -> DataFrame:
     """Connect every strictly-larger neighbor of u to u's minimum
     neighborhood label min(N(u) ∪ {u})."""
     sym = edges.union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    with_min = _with_neighborhood_min(sym, salt_buckets, hot_threshold)
+    with_min = _with_neighborhood_min(sym, salt_buckets)
     return (
         with_min.where(F.col("dst") > F.col("src"))
         .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
@@ -119,14 +121,13 @@ def _large_star(edges: DataFrame, salt_buckets: int = DEFAULT_SALT_BUCKETS,
     )
 
 
-def _small_star(edges: DataFrame, salt_buckets: int = DEFAULT_SALT_BUCKETS,
-                hot_threshold: int = DEFAULT_HOT_THRESHOLD) -> DataFrame:
+def _small_star(edges: DataFrame, salt_buckets: int) -> DataFrame:
     """Orient edges large->small, then connect every neighbor (and u
     itself) to the minimum label of the oriented neighborhood."""
     oriented = edges.select(
         F.greatest("src", "dst").alias("src"), F.least("src", "dst").alias("dst")
     ).where(F.col("src") != F.col("dst"))
-    with_min = _with_neighborhood_min(oriented, salt_buckets, hot_threshold)
+    with_min = _with_neighborhood_min(oriented, salt_buckets)
     nbr_edges = with_min.select(F.col("dst").alias("src"), F.col("m").alias("dst"))
     self_edges = with_min.select(F.col("src"), F.col("m").alias("dst"))
     return (
@@ -166,14 +167,24 @@ def _union_find_local(pairs: list[tuple[str, str]]) -> dict[str, str]:
     return {n: find(n) for n in list(parent)}
 
 
+def unpersist_checkpoints(df: DataFrame) -> None:
+    """Free the local checkpoints ``df`` reads: the last star round of
+    a distributed component map, or a superseded round itself.
+    ``DataFrame.unpersist`` leaves them alone — a local checkpoint is
+    a persisted RDD under a ``LogicalRDD`` leaf, not a cached plan.
+    Call it once every action over ``df`` has run; a driver-solved
+    map reads none, so this is a no-op there."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.nodeName() == "LogicalRDD":
+            leaf.rdd().unpersist(False)
+
+
 def connected_components(
     edges: DataFrame,
-    max_iterations: int = 25,
-    src: str = "src",
-    dst: str = "dst",
     driver_threshold: int = 200_000,
     salt_buckets: int = DEFAULT_SALT_BUCKETS,
-    hot_threshold: int = DEFAULT_HOT_THRESHOLD,
 ) -> DataFrame:
     """(src, dst) edge list -> (node, component) where component is
     the lexicographically smallest node id in the component.
@@ -184,13 +195,15 @@ def connected_components(
     components are solved with driver-side union-find in one pass —
     saving ~2 shuffles x O(log n) rounds. That map is a local relation
     (``isLocal()``) of at most 2 x ``driver_threshold`` nodes. Larger
-    graphs take the distributed large-star/small-star path. Nodes
+    graphs take the distributed large-star/small-star path, whose map
+    reads the last round's local checkpoint: the caller frees it with
+    :func:`unpersist_checkpoints` once done with the map. Nodes
     appearing only as isolated self-loops should be unioned in by the caller
     (:func:`assign_components` does this).
     """
     spark = edges.sparkSession
     cur = (
-        edges.select(F.col(src).cast("string").alias("src"), F.col(dst).cast("string").alias("dst"))
+        edges.select(F.col("src").cast("string").alias("src"), F.col("dst").cast("string").alias("dst"))
         .where(F.col("src") != F.col("dst"))
         .distinct()
     )
@@ -212,11 +225,11 @@ def connected_components(
         ))
     cur = cur.localCheckpoint()
     prev_sig = None
-    for _ in range(max_iterations):
-        cur = _small_star(
-            _large_star(cur, salt_buckets, hot_threshold),
-            salt_buckets, hot_threshold,
-        ).localCheckpoint()
+    for _ in range(MAX_ITERATIONS):
+        done = cur
+        cur = _small_star(_large_star(cur, salt_buckets), salt_buckets).localCheckpoint()
+        # the eager checkpoint holds the new round: the old one is free
+        unpersist_checkpoints(done)
         sig = _signature(cur)
         if sig == prev_sig:
             break
@@ -228,26 +241,20 @@ def connected_components(
 
 
 def assign_components(
-    nodes: DataFrame, edges: DataFrame, node_col: str = "node",
-    salt_buckets: int = DEFAULT_SALT_BUCKETS,
-    hot_threshold: int = DEFAULT_HOT_THRESHOLD,
+    nodes: DataFrame, edges: DataFrame, salt_buckets: int = DEFAULT_SALT_BUCKETS,
 ) -> DataFrame:
     """All nodes -> components; isolated nodes become their own
     component."""
-    comp = connected_components(edges, salt_buckets=salt_buckets,
-                                hot_threshold=hot_threshold)
+    comp = connected_components(edges, salt_buckets=salt_buckets)
     return (
-        nodes.select(F.col(node_col).cast("string").alias("node"))
+        nodes.select(F.col("node").cast("string").alias("node"))
         .distinct()
         .join(comp, "node", "left")
         .withColumn("component", F.coalesce("component", F.col("node")))
     )
 
 
-def pagerank(
-    edges: DataFrame, damping: float = 0.85, iterations: int = 3,
-    src: str = "src", dst: str = "dst",
-) -> DataFrame:
+def pagerank(edges: DataFrame, damping: float = 0.85, iterations: int = 3) -> DataFrame:
     """Undirected PageRank by fixed-point iteration — entity salience
     over the co-mention graph (the canonical 'which entities anchor
     the KG' ranking; no reference analog, SURVEY §2.10).
@@ -273,7 +280,7 @@ def pagerank(
     real cluster where executor loss must be survivable, set a
     checkpoint dir and use reliable ``checkpoint()`` instead (one
     line; same plan shape, storage-backed)."""
-    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+    e = edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
     # cut lineage once: the weighted edge table is referenced by
     # EVERY iteration's join, and without the checkpoint each action
     # replays the whole upstream edge derivation per round (measured
@@ -332,11 +339,7 @@ def pagerank(
     return ranks
 
 
-def cooccurrence_jaccard(
-    sets: DataFrame,
-    items_col: str = "items",
-    round_dp: int = 6,
-) -> DataFrame:
+def cooccurrence_jaccard(sets: DataFrame, items_col: str = "items") -> DataFrame:
     """Pairwise Jaccard similarity of item key-sets over a per-key
     membership table — ONE row per key carrying the key's items as an
     array in ``items_col``: for every item pair sharing >= 1 key,
@@ -381,7 +384,7 @@ def cooccurrence_jaccard(
             F.round(
                 F.col("n_common")
                 / (F.col("n_src") + F.col("n_dst") - F.col("n_common")),
-                round_dp,
+                6,
             ).alias("jaccard"),
         )
     )

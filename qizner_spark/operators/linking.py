@@ -28,8 +28,7 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 MAX_DIAGNOSTIC_SURFACES = 1_000_000
 
 
-def entity_id_col(mention_col: str = "mention",
-                  type_col: str = "ent_type") -> F.Column:
+def entity_id_col() -> F.Column:
     """The deterministic KB slug ``kb:<type>:<normalized surface>`` —
     a PURE projection of (mention, ent_type). Because
     :func:`build_alias_dictionary` assigns entity ids with exactly
@@ -38,8 +37,8 @@ def entity_id_col(mention_col: str = "mention",
     and the id is unique per key, so ``max_by`` tie-breaks cannot
     differ) — the KG pipeline exploits that to skip the join on its
     hot path."""
-    return F.concat(F.lit("kb:"), F.col(type_col), F.lit(":"),
-                    F.regexp_replace(F.lower(F.col(mention_col)), r"\s+", "_"))
+    return F.concat(F.lit("kb:"), F.col("ent_type"), F.lit(":"),
+                    F.regexp_replace(F.lower(F.col("mention")), r"\s+", "_"))
 
 
 def build_alias_dictionary(mentions: DataFrame) -> DataFrame:
@@ -122,7 +121,6 @@ def _nonoverlap_counts(text: str, patterns: list[str], automaton) -> Counter:
 
 
 def count_unlabeled_occurrences(docs: DataFrame, alias: DataFrame,
-                                text_col: str = "text",
                                 max_surfaces: int = MAX_DIAGNOSTIC_SURFACES) -> DataFrame:
     """For each dictionary surface, how often it occurs in the corpus
     text OUTSIDE labeled mentions: total substring occurrences minus
@@ -154,13 +152,13 @@ def count_unlabeled_occurrences(docs: DataFrame, alias: DataFrame,
         automaton = _build_aho_corasick(pats)  # once per task, O(dict chars)
         local: Counter = Counter()
         for pdf in batches:
-            for text in pdf[text_col]:
+            for text in pdf["text"]:
                 local.update(_nonoverlap_counts(text, pats, automaton))
         yield pd.DataFrame(
             {"mention": list(local.keys()), "occurrences": list(local.values())}
         )
 
-    totals = docs.select(text_col).mapInPandas(count_batch, schema=schema) \
+    totals = docs.select("text").mapInPandas(count_batch, schema=schema) \
         .groupBy("mention").agg(F.sum("occurrences").alias("total_occurrences"))
     labeled = alias.groupBy("mention").agg(F.sum("freq").alias("labeled"))
     return (
@@ -175,7 +173,7 @@ def count_unlabeled_occurrences(docs: DataFrame, alias: DataFrame,
 
 
 def link_mentions(mentions: DataFrame, alias: DataFrame,
-                  broadcast_alias: bool | int = False) -> DataFrame:
+                  broadcast_alias: bool = False) -> DataFrame:
     """Attach ``entity_id`` to every mention row via an equi-join on
     (mention, ent_type). Ambiguous surfaces resolve to the highest
     frequency entry (the alias dim is reduced to one row per key
@@ -193,34 +191,13 @@ def link_mentions(mentions: DataFrame, alias: DataFrame,
       the dictionary is bounded-small (a curated gazetteer); on an
       open-corpus dictionary this is the driver-OOM the default
       exists to prevent.
-    * ``int f >= 1`` — hybrid hot/cold join for Zipfian dictionaries:
-      entries with ``freq >= f`` (the head — at most
-      total_mentions / f surfaces, a bound independent of vocabulary
-      size) are broadcast and resolve the overwhelming majority of
-      mention rows map-side with NO shuffle; only the rows the head
-      missed take the unhinted cold-tail join. Trades a second scan
-      of the mention input for removing the full mention-table
-      shuffle — the right trade whenever mentions >> dictionary.
     """
     best = (
         alias.groupBy("mention", "ent_type")
-        .agg(F.max_by("entity_id", "freq").alias("entity_id"),
-             F.max("freq").alias("freq"))
+        .agg(F.max_by("entity_id", "freq").alias("entity_id"))
     )
-    keys = ["mention", "ent_type"]
-    if broadcast_alias is True:
-        linked = mentions.join(F.broadcast(best.drop("freq")), keys, "left")
-    elif broadcast_alias is False or int(broadcast_alias) < 1:
-        linked = mentions.join(best.drop("freq"), keys, "left")
-    else:
-        floor = int(broadcast_alias)
-        hot = best.where(F.col("freq") >= floor).drop("freq")
-        cold = best.where(F.col("freq") < floor).drop("freq")
-        head = mentions.join(F.broadcast(hot), keys, "left")
-        hit = head.where(F.col("entity_id").isNotNull())
-        miss = head.where(F.col("entity_id").isNull()).drop("entity_id") \
-                   .join(cold, keys, "left")
-        linked = hit.unionByName(miss)
+    linked = mentions.join(F.broadcast(best) if broadcast_alias else best,
+                           ["mention", "ent_type"], "left")
     return linked.withColumn(
         "entity_id", F.coalesce("entity_id", entity_id_col())
     )

@@ -102,6 +102,11 @@ def detect_mentions(
     ``flat=True`` applies the probability-greedy flatten (L10) the
     reference uses for flat corpora (train_ner.py:841,863,945).
 
+    ``max_seg_len`` / ``prefix_context_len`` mirror QizNER's segment
+    split config: segments of at most that many tokens, each later
+    piece prefixed by that much overlap context (datautils.py:1371-1422,
+    via :func:`~qizner_spark.core.segment.segment`).
+
     ``passthrough_cols`` are carried from the input row onto every
     emitted mention (provenance: warc_ts, domain, ...). Carrying them
     through the Arrow pass costs a few copied values per row and
@@ -211,7 +216,6 @@ def detect_mentions_raw(
     docs: DataFrame,
     scorer_factory: Callable[[], object],
     key_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Raw-text detection through the ZHENG offset machinery (T4/D8):
     zheng_process builds tokens + raw<->token offset maps from the
@@ -230,7 +234,7 @@ def detect_mentions_raw(
         scorer = _get_scorer(scorer_factory)
         for pdf in batches:
             out: dict[str, list] = {f.name: [] for f in RAW_MENTIONS_SCHEMA.fields}
-            for key, text in zip(pdf[key_col], pdf[text_col]):
+            for key, text in zip(pdf[key_col], pdf["text"]):
                 z = zheng_process(text)
                 found = scorer.score_mentions(z.tokens, z.mentions)
                 raw = mentions_to_raw(found, z.char2raw)
@@ -244,4 +248,4 @@ def detect_mentions_raw(
                     out["prob"].append(float(p))
             yield pd.DataFrame(out)
 
-    return docs.select(key_col, text_col).mapInPandas(run, schema=RAW_MENTIONS_SCHEMA)
+    return docs.select(key_col, "text").mapInPandas(run, schema=RAW_MENTIONS_SCHEMA)

@@ -4,11 +4,10 @@ Image/audio/video payloads travel as ``binary`` columns with a typed
 metadata struct; decode / feature-extraction / resize run as
 Arrow-batched pandas UDFs over ``mapInPandas``. The decode
 libraries (PIL / torchaudio / av) are NOT in this container, so the
-actual byte->pixels step is STUBBED: ``decode_real`` raises
-NotImplementedError behind an import-try, and ``decode_fake`` is a
+actual byte->pixels step is STUBBED: ``decode_fake`` is a
 deterministic byte-level stand-in. Everything Spark-side — schema,
 partitioning, UDF signatures, Arrow batch shapes — is real and
-tested; swapping in the real decoder changes one function.
+tested.
 """
 
 from __future__ import annotations
@@ -47,30 +46,18 @@ FEATURE_SCHEMA = StructType(
 N_BINS = 16
 
 
-def attach_fake_media(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def attach_fake_media(docs: DataFrame) -> DataFrame:
     """Deterministic media table derived from text bytes (sandbox
     stand-in for a WARC payload column) — native expressions only."""
-    kind = F.expr(f"element_at(array('image', 'audio', 'video'), 1 + int({id_col} % 3))")
-    payload = F.encode(F.col(text_col), "UTF-8")
+    kind = F.expr("element_at(array('image', 'audio', 'video'), 1 + int(doc_id % 3))")
+    payload = F.encode(F.col("text"), "UTF-8")
     return docs.select(
-        F.col(id_col).alias("media_id"),
+        F.col("doc_id").alias("media_id"),
         kind.alias("kind"),
         payload.alias("payload"),
         F.length(payload).cast("int").alias("n_bytes"),
         F.concat(kind, F.lit("/fake")).alias("mime"),
     )
-
-
-def decode_real(payload: bytes, kind: str):  # pragma: no cover - needs media libs
-    """Real decode path; requires PIL/torchaudio/av on the cluster."""
-    try:
-        from PIL import Image  # noqa: F401
-    except ImportError as e:
-        raise NotImplementedError(
-            "media decode libraries are not installed in this environment; "
-            "use decode_fake (deterministic) or install PIL/torchaudio/av"
-        ) from e
-    raise NotImplementedError("wire the cluster decoder here")
 
 
 def decode_fake(payload: bytes, kind: str) -> tuple[np.ndarray, int, int]:
@@ -81,20 +68,18 @@ def decode_fake(payload: bytes, kind: str) -> tuple[np.ndarray, int, int]:
     return arr, side, max(arr.size // side, 1)
 
 
-def extract_features(media: DataFrame, use_real_decoder: bool = False) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """payload BINARY -> normalized 16-bin byte histogram feature per
     media row; one Arrow batch in/out, numpy-vectorized per batch."""
-    decoder = decode_real if use_real_decoder else decode_fake
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         edges = np.linspace(0, 256, N_BINS + 1)
-        fast_bins = decoder is decode_fake and N_BINS == 16
         for pdf in batches:
-            if len(pdf) == 0 or not fast_bins:
-                # generic path: arbitrary decoder output, per-row histogram
+            if len(pdf) == 0:
+                # per-row path: the empty batch keeps its column types
                 feats, counts, ws, hs = [], [], [], []
                 for payload, kind in zip(pdf["payload"], pdf["kind"]):
-                    arr, w, h = decoder(bytes(payload), kind)
+                    arr, w, h = decode_fake(bytes(payload), kind)
                     hist, _ = np.histogram(arr, bins=edges)
                     total = max(arr.size, 1)
                     feats.append((hist / total).astype(np.float32).tolist())

@@ -31,13 +31,12 @@ def asof_join_backward(
     right: DataFrame,
     on: str,
     ts_col: str = "ts",
-    payload: list[str] | None = None,
     tiebreak: str | None = None,
 ) -> DataFrame:
     """Left rows + the latest right payload with right.ts <= left.ts.
 
-    ``payload`` — right columns to attach (default: all but key/ts);
-    they keep their names, so rename on the right side beforehand if
+    The payload is every right column but the key and ts; its columns
+    keep their names, so rename on the right side beforehand if
     they collide with left columns. Left rows with no prior right row
     carry nulls. ``tiebreak`` optionally orders right rows that share
     a timestamp (last one wins deterministically; must be a payload
@@ -50,7 +49,7 @@ def asof_join_backward(
     from different right rows)."""
     from pyspark.sql.types import StructField, StructType
 
-    payload = payload or [c for c in right.columns if c not in (on, ts_col)]
+    payload = [c for c in right.columns if c not in (on, ts_col)]
     clash = set(payload) & set(left.columns)
     if clash:
         raise ValueError(f"payload columns collide with left columns: {sorted(clash)}")

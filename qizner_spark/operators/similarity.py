@@ -1,4 +1,5 @@
-"""Similarity search over embedding columns (ARRAY<FLOAT>).
+"""Similarity search over embedding tables: ``vec_id`` plus an
+``embedding`` column (ARRAY<FLOAT>).
 
 * :func:`brute_force_topk` — exact cosine top-k: broadcast the (small)
   query set against the corpus, dot products in native
@@ -16,27 +17,30 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, Window, functions as F
 
+#: the hyperplanes' RandomState seed (the DuckDB oracles inline the
+#: same planes)
+HYPERPLANE_SEED = 23
+#: exact_cosine_pairs broadcasts one side: it refuses larger inputs
+MAX_EXACT_ROWS = 100_000
+
 
 def _as_double(vec_col: str) -> str:
     return f"transform({vec_col}, x -> cast(x as double))"
 
 
-def with_norm(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    return df.withColumn("v", F.expr(_as_double(vec_col))).withColumn(
+def with_norm(df: DataFrame) -> DataFrame:
+    return df.withColumn("v", F.expr(_as_double("embedding"))).withColumn(
         "norm", F.expr("sqrt(aggregate(transform(v, x -> x * x), 0D, (acc, x) -> acc + x))")
     )
 
 
-def brute_force_topk(
-    corpus: DataFrame, queries: DataFrame, k: int = 10,
-    id_col: str = "vec_id", vec_col: str = "embedding", query_id_col: str = "vec_id",
-) -> DataFrame:
+def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     """Exact cosine top-k per query. The query side is broadcast —
     the corpus never shuffles; ties broken by neighbor id for
     determinism."""
-    c = with_norm(corpus.select(F.col(id_col).alias("nbr_id"), vec_col), vec_col) \
+    c = with_norm(corpus.select(F.col("vec_id").alias("nbr_id"), "embedding")) \
         .select("nbr_id", F.col("v").alias("cv"), F.col("norm").alias("cn"))
-    q = with_norm(queries.select(F.col(query_id_col).alias("query_id"), vec_col), vec_col) \
+    q = with_norm(queries.select(F.col("vec_id").alias("query_id"), "embedding")) \
         .select("query_id", F.col("v").alias("qv"), F.col("norm").alias("qn"))
     dot = "aggregate(zip_with(qv, cv, (x, y) -> x * y), 0D, (acc, x) -> acc + x)"
     scored = (
@@ -52,10 +56,7 @@ def brute_force_topk(
     )
 
 
-def exact_cosine_pairs(
-    emb: DataFrame, threshold: float, id_col: str = "vec_id",
-    vec_col: str = "embedding", max_broadcast_rows: int = 100_000,
-) -> DataFrame:
+def exact_cosine_pairs(emb: DataFrame, threshold: float) -> DataFrame:
     """ALL pairs with cosine >= threshold, computed exactly by
     broadcasting one side — the ground-truth twin of
     :func:`brute_force_topk`, used as the RECALL oracle for the
@@ -63,14 +64,14 @@ def exact_cosine_pairs(
     Deliberately O(n^2): measurement-only at bounded n (asserted),
     never a scale path."""
     n = emb.count()
-    if n > max_broadcast_rows:
+    if n > MAX_EXACT_ROWS:
         raise ValueError(
             f"exact_cosine_pairs is a recall-measurement baseline; {n} rows "
-            f"> {max_broadcast_rows} would broadcast an unbounded side"
+            f"> {MAX_EXACT_ROWS} would broadcast an unbounded side"
         )
-    a = with_norm(emb.select(F.col(id_col).alias("id_a"), vec_col), vec_col) \
+    a = with_norm(emb.select(F.col("vec_id").alias("id_a"), "embedding")) \
         .select("id_a", F.col("v").alias("av"), F.col("norm").alias("an"))
-    b = with_norm(emb.select(F.col(id_col).alias("id_b"), vec_col), vec_col) \
+    b = with_norm(emb.select(F.col("vec_id").alias("id_b"), "embedding")) \
         .select("id_b", F.col("v").alias("bv"), F.col("norm").alias("bn"))
     dot = "aggregate(zip_with(av, bv, (x, y) -> x * y), 0D, (acc, x) -> acc + x)"
     return (
@@ -83,11 +84,11 @@ def exact_cosine_pairs(
 
 
 def hyperplane_signature(df: DataFrame, dim: int, n_planes: int = 8,
-                         vec_col: str = "embedding", seed: int = 23) -> DataFrame:
+                         vec_col: str = "embedding") -> DataFrame:
     """Sign-bit LSH signature as a NATIVE expression: the seeded
     hyperplane matrix is inlined as array literals, the dot products
     run in codegen. Adds ``bucket`` (int in [0, 2^n_planes))."""
-    rng = np.random.RandomState(seed)
+    rng = np.random.RandomState(HYPERPLANE_SEED)
     planes = rng.randn(n_planes, dim)
     terms = []
     for p in range(n_planes):
@@ -117,9 +118,7 @@ def probe_masks(n_planes: int, bits: int) -> list[int]:
 
 def ann_topk(
     corpus: DataFrame, queries: DataFrame, k: int = 10, n_planes: int = 6,
-    multiprobe_bits: int = 1, id_col: str = "vec_id", vec_col: str = "embedding",
-    query_id_col: str = "vec_id", seed: int = 23, dim: int | None = None,
-    broadcast_queries: bool | int = False,
+    multiprobe_bits: int = 1, dim: int | None = None,
 ) -> DataFrame:
     """Approximate top-k: score only candidates within Hamming
     distance ``multiprobe_bits`` of the query's LSH bucket. Recall
@@ -132,48 +131,29 @@ def ann_topk(
     Pass ``dim`` to keep the plan fully lazy (else a driver-side
     first() action infers it mid-plan).
 
-    ``broadcast_queries`` guards the query side of the bucket join —
-    the side the multiprobe explode multiplies by
+    PRECONDITION: the query set is bounded-small (a fixed probe list,
+    a user search batch). The query side of the bucket join is
+    broadcast, and the multiprobe explode multiplies it by
     ``1 + |probe_masks(n_planes, multiprobe_bits)|`` rows BEFORE the
-    join, so "my query set is small" is off by that factor:
-
-    * ``False`` (default) — UNHINTED equi-join: AQE's runtime size
-      statistics broadcast the exploded query side exactly when it is
-      genuinely under spark.sql.autoBroadcastJoinThreshold. The safe
-      choice for self-ANN (queries = corpus, the natural 100-TB dedup
-      shape), where a forced broadcast is an OOM.
-    * ``True`` — force the hint. Only when the caller KNOWS the query
-      set is bounded-small (a fixed probe list, a user search batch).
-    * ``int n`` — size-guarded hint: counts the query set (one cheap
-      action on the un-exploded side) and applies the hint only when
-      ``n_queries * (1 + |probe_masks|) <= n``, else falls back to
-      the unhinted join. For callers that take arbitrary query sets
-      but want the broadcast fast path when it is actually safe.
+    join, so it must fit a broadcast that many times over. Self-ANN
+    over an unbounded corpus (queries = corpus) is out of contract:
+    there the broadcast is a driver OOM — block by bucket instead
+    (:func:`~qizner_spark.operators.dedup.embedding_near_dup_pairs`).
     """
     if dim is None:
-        dim = len(corpus.select(vec_col).first()[0])
+        dim = len(corpus.select("embedding").first()[0])
     c = hyperplane_signature(
-        with_norm(corpus.select(F.col(id_col).alias("nbr_id"), vec_col), vec_col), dim,
-        n_planes, vec_col, seed,
+        with_norm(corpus.select(F.col("vec_id").alias("nbr_id"), "embedding")), dim, n_planes,
     ).select("nbr_id", F.col("v").alias("cv"), F.col("norm").alias("cn"), "bucket")
     q = hyperplane_signature(
-        with_norm(queries.select(F.col(query_id_col).alias("query_id"), vec_col), vec_col), dim,
-        n_planes, vec_col, seed,
+        with_norm(queries.select(F.col("vec_id").alias("query_id"), "embedding")), dim, n_planes,
     ).select("query_id", F.col("v").alias("qv"), F.col("norm").alias("qn"), "bucket")
     # multi-probe: query also visits buckets at Hamming distance <= bits
     probes = [F.col("bucket")] + [
         F.col("bucket").bitwiseXOR(F.lit(m))
         for m in probe_masks(n_planes, multiprobe_bits)
     ]
-    explode_factor = 1 + len(probe_masks(n_planes, multiprobe_bits))
-    if broadcast_queries is True:
-        hint = True
-    elif broadcast_queries is False:
-        hint = False
-    else:
-        hint = queries.count() * explode_factor <= int(broadcast_queries)
-    q = q.withColumn("probe", F.explode(F.array(*probes)))
-    q_side = F.broadcast(q) if hint else q
+    q_side = F.broadcast(q.withColumn("probe", F.explode(F.array(*probes))))
     dot = "aggregate(zip_with(qv, cv, (x, y) -> x * y), 0D, (acc, x) -> acc + x)"
     scored = (
         c.join(q_side, c["bucket"] == q_side["probe"])

@@ -28,11 +28,11 @@ def token_count_col(text_col: str = "text") -> Column:
     )
 
 
-def subword_count_col(text_col: str = "text", piece: int = 4) -> Column:
-    """BPE-ish token estimate: each word contributes
-    ceil(len(word)/piece) pieces (mirrors the wordpiece stub)."""
+def subword_count_col(text_col: str = "text") -> Column:
+    """BPE-ish token estimate: each word contributes ceil(len(word)/4)
+    pieces (mirrors the wordpiece stub)."""
     return F.expr(
-        f"aggregate(transform(split({text_col}, ' '), w -> int(ceil(length(w) / {piece}.0D))),"
+        f"aggregate(transform(split({text_col}, ' '), w -> int(ceil(length(w) / 4.0D))),"
         f" 0, (acc, x) -> acc + x)"
     )
 
@@ -44,11 +44,11 @@ def non_ascii_ratio_col(text_col: str = "text") -> Column:
     )
 
 
-def lang_id_col(text_col: str = "text", zh_threshold: float = 0.3) -> Column:
-    """'zh' when the non-ASCII character ratio crosses the threshold,
-    else 'en' — the deterministic sandbox heuristic (production swaps
-    a fastText-style model into the same column slot)."""
-    return F.when(non_ascii_ratio_col(text_col) > zh_threshold, F.lit("zh")).otherwise(F.lit("en"))
+def lang_id_col(text_col: str = "text") -> Column:
+    """'zh' when the non-ASCII character ratio exceeds 0.3, else
+    'en' — the deterministic sandbox heuristic (production swaps a
+    fastText-style model into the same column slot)."""
+    return F.when(non_ascii_ratio_col(text_col) > 0.3, F.lit("zh")).otherwise(F.lit("en"))
 
 
 def punct_ratio_col(text_col: str = "text") -> Column:
@@ -107,10 +107,8 @@ def fingerprint_col(text_col: str = "text") -> Column:
     return F.md5(F.lower(F.regexp_replace(F.trim(F.col(text_col)), r"\s+", " ")))
 
 
-def tfidf_top_terms(
-    docs: DataFrame, k: int = 3, id_col: str = "doc_id", text_col: str = "text",
-) -> DataFrame:
-    """Top-``k`` TF-IDF terms per document — the classic corpus-level
+def tfidf_top_terms(docs: DataFrame, k: int = 3) -> DataFrame:
+    """Top-``k`` TF-IDF terms per (doc_id, text) document — the classic corpus-level
     keyword extractor a training-data pipeline runs for topic
     filtering / diversity sampling (no reference analog; SURVEY §2.10
     beyond-reference family).
@@ -134,10 +132,10 @@ def tfidf_top_terms(
     # table (tokens x docs rows) itself never shuffles (guide §2.4;
     # previously the plan exchanged the token-level table twice: once
     # keyed (doc, term) for tf, once keyed doc for the window).
-    toks = docs.select(F.col(id_col), F.col(text_col)) \
-        .repartition(F.col(id_col)) \
-        .select(F.col(id_col), F.explode(F.split(F.col(text_col), " ")).alias("term"))
-    tf = toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
+    toks = docs.select(F.col("doc_id"), F.col("text")) \
+        .repartition(F.col("doc_id")) \
+        .select(F.col("doc_id"), F.explode(F.split(F.col("text"), " ")).alias("term"))
+    tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n = docs.groupBy().agg(F.count(F.lit(1)).alias("_n"))
     scored = (
@@ -149,11 +147,11 @@ def tfidf_top_terms(
                                 / (F.lit(1) + F.col("df"))),
         )
     )
-    w = Window.partitionBy(id_col).orderBy(
+    w = Window.partitionBy("doc_id").orderBy(
         F.desc("tfidf"), F.asc("term")
     )
     return (
         scored.withColumn("rnk", F.row_number().over(w))
         .where(F.col("rnk") <= k)
-        .select(id_col, "rnk", "term", "tf", "df")
+        .select("doc_id", "rnk", "term", "tf", "df")
     )

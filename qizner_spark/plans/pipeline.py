@@ -28,7 +28,8 @@ detection is whole-stage codegen; detection is one Arrow pass.
 
 Cache ownership: :func:`build_kg` and :func:`assemble_kg` return a
 :class:`KGStages` — the named stages plus the DataFrames the build
-persisted. The caller calls ``release()`` once every action over the
+persisted and, on the large-graph path, the local checkpoint its
+component map reads. The caller calls ``release()`` once every action over the
 stages has run (:func:`~qizner_spark.plans.checkpoint.run_resumable`
 does so in a ``finally``). Spark matches a cached plan by the root
 paths it reads, not by their file listing, so a cache left behind
@@ -53,20 +54,50 @@ def default_scorer_factory():
     return GazetteerScorer(GAZ, token_deli=" ")
 
 
-def extract_pages_text(pages: DataFrame, validate: bool = True) -> DataFrame:
+def extract_pages_text(pages: DataFrame) -> DataFrame:
     """html -> text with the byte-identity invariant enforced IN the
     plan: rows whose extraction mismatches the stored text are routed
     to an error flag column (kept 0 at all times in tests). The heavy
     html column is dropped immediately after."""
-    out = pages.withColumn("extracted", extract_text_col("html"))
-    if validate:
-        out = out.withColumn(
-            "extract_ok", (F.col("extracted") == F.col("text")).cast("int")
-        )
-    return out.select(
-        "url", "warc_ts", F.col("extracted").alias("text"), "lang",
-        *(["extract_ok"] if validate else []),
+    out = pages.withColumn("extracted", extract_text_col("html")).withColumn(
+        "extract_ok", (F.col("extracted") == F.col("text")).cast("int")
     )
+    return out.select("url", "warc_ts", F.col("extracted").alias("text"), "lang", "extract_ok")
+
+
+def page_mentions(pages: DataFrame, scorer_factory, **detect_kw) -> tuple[DataFrame, DataFrame]:
+    """The per-page detection step of the batch and the streaming
+    build, defined once so they cannot drift: html -> text, pages that
+    fail the byte-identity check dropped, then the Arrow detection
+    pass keyed by url. Returns ``(docs, mentions)``.
+
+    A batch source is widened
+    (:func:`~qizner_spark.session.ensure_scan_parallelism`) when
+    it is under-split (single-row-group sandbox parquet: guide §2.5
+    "one huge unsplittable file"), so the Arrow detection pass uses
+    every core — placed AFTER the html drop so only the narrow
+    extracted columns ever cross the exchange, and after any
+    caller-side limit so row selection stays deterministic. At
+    production layouts (input pre-split >= parallelism) it's a
+    no-op; a streaming source has no partitions to count and is not
+    widened.
+
+    Provenance (warc_ts) rides THROUGH the Arrow pass on every
+    mention row instead of a join back to the pages table: a
+    passthrough value costs bytes in the mention rows; the join it
+    replaces is a full mention-table shuffle at 10^12 docs.
+    ``detect_kw`` goes to
+    :func:`~qizner_spark.operators.mentions.detect_mentions`."""
+    from qizner_spark.session import ensure_scan_parallelism
+
+    docs = extract_pages_text(pages).where(F.col("extract_ok") == 1).drop("extract_ok")
+    if not docs.isStreaming:
+        docs = ensure_scan_parallelism(docs)
+    mentions = detect_mentions(
+        docs, scorer_factory or default_scorer_factory, key_col="url", text_col="text",
+        lang_col="lang", passthrough_cols=["warc_ts"], **detect_kw,
+    ).withColumnRenamed("doc_key", "url")
+    return docs, mentions
 
 
 # Per-doc distinct-entity ceiling for the co-mention pair
@@ -84,18 +115,26 @@ DEFAULT_MAX_ENTITIES_PER_DOC = 1000
 class KGStages(dict):
     """The KG build's named stages (``stages["triples"]``, ...) and the
     owner of the caches the build persisted (``mentions``, ``ent_pre``
-    and, on the large-graph path, ``pre_canon``). A ``dict`` so stage
-    lookups and ``**stages`` read as before; ``release()`` unpersists
-    every owned cache, after the last action over the stages."""
+    and, on the large-graph path, ``pre_canon``) and of the local
+    checkpoint the distributed component map reads (``checkpointed``:
+    the maps whose checkpoints it frees). A ``dict`` so stage lookups
+    and ``**stages`` read as before; ``release()`` frees every owned
+    cache and checkpoint, after the last action over the stages."""
 
-    def __init__(self, stages: dict, persisted: list[DataFrame]):
+    def __init__(self, stages: dict, persisted: list[DataFrame],
+                 checkpointed: list[DataFrame]):
         super().__init__(stages)
         self.persisted = persisted
+        self.checkpointed = checkpointed
 
     def release(self) -> None:
+        from qizner_spark.operators.graph import unpersist_checkpoints
+
         for df in self.persisted:
             df.unpersist()
-        self.persisted = []
+        for df in self.checkpointed:
+            unpersist_checkpoints(df)
+        self.persisted, self.checkpointed = [], []
 
 
 def build_kg(
@@ -105,7 +144,7 @@ def build_kg(
     max_seg_len: int = 512,
     decode_threshold: float = 0.5,
     salt_buckets: int | None = None,
-    broadcast_alias: bool | int = False,
+    broadcast_alias: bool = False,
     max_entities_per_doc: int = DEFAULT_MAX_ENTITIES_PER_DOC,
 ) -> KGStages:
     """Run the full DAG; returns every intermediate plus ``triples``.
@@ -120,34 +159,14 @@ def build_kg(
     ``broadcast_alias`` (default False): the mention-surface
     vocabulary of an open corpus is Zipfian-unbounded, so the public
     ``linked`` stage's join is unhinted by default (AQE decides); True
-    force-broadcasts a KNOWN-bounded curated dictionary; an int ``f``
-    takes the hybrid hot/cold path (see
+    force-broadcasts a KNOWN-bounded curated dictionary (see
     :func:`~qizner_spark.operators.linking.link_mentions`). The
     triples link by projection and do not read it."""
-    scorer_factory = scorer_factory or default_scorer_factory
-
     from pyspark import StorageLevel
 
-    from qizner_spark.session import ensure_scan_parallelism
-
-    docs = extract_pages_text(pages).where(F.col("extract_ok") == 1).drop("extract_ok")
-    # Widen an under-split source (single-row-group sandbox parquet:
-    # guide §2.5 "one huge unsplittable file") so the Arrow detection
-    # pass below uses every core — placed AFTER the html drop so only
-    # the narrow extracted columns ever cross the exchange, and after
-    # any caller-side limit so row selection stays deterministic. At
-    # production layouts (input pre-split >= parallelism) it's a no-op.
-    docs = ensure_scan_parallelism(docs)
-
-    # provenance (warc_ts) rides THROUGH the Arrow pass on every
-    # mention row instead of a join back to the pages table: a
-    # passthrough value costs bytes in the mention rows; the join it
-    # replaces is a full mention-table shuffle at 10^12 docs.
-    mentions = detect_mentions(
-        docs, scorer_factory, key_col="url", text_col="text", lang_col="lang",
-        max_seg_len=max_seg_len, threshold=decode_threshold,
-        passthrough_cols=["warc_ts"],
-    ).withColumnRenamed("doc_key", "url").persist(StorageLevel.MEMORY_AND_DISK)
+    docs, mentions = page_mentions(pages, scorer_factory, max_seg_len=max_seg_len,
+                                   threshold=decode_threshold)
+    mentions = mentions.persist(StorageLevel.MEMORY_AND_DISK)
     # Materialization BARRIER (round 6): build the cache under one
     # controlled job before anything references it. Concurrent stage
     # futures otherwise race to materialize the same uncached
@@ -164,7 +183,7 @@ def build_kg(
         max_entities_per_doc=max_entities_per_doc,
     )
     return KGStages({"docs": docs, "mentions": mentions, **assembled},
-                    [mentions, *assembled.persisted])
+                    [mentions, *assembled.persisted], assembled.checkpointed)
 
 
 def _capped_entities(rollup: DataFrame, cap: int, *payload: str) -> DataFrame:
@@ -188,7 +207,7 @@ def _capped_entities(rollup: DataFrame, cap: int, *payload: str) -> DataFrame:
 def assemble_kg(
     mentions: DataFrame,
     salt_buckets: int | None = None,
-    broadcast_alias: bool | int = False,
+    broadcast_alias: bool = False,
     max_entities_per_doc: int = DEFAULT_MAX_ENTITIES_PER_DOC,
 ) -> KGStages:
     """Corpus-GLOBAL compaction half of the KG DAG — alias dictionary
@@ -412,7 +431,7 @@ def assemble_kg(
         "edges": edges,
         "components": components,
         "triples": triples,
-    }, persisted)
+    }, persisted, [comp])
 
 
 def build_kg_from_sf_dir(spark: SparkSession, sf_dir: str, **kw) -> KGStages:

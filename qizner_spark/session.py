@@ -11,6 +11,10 @@ is nevertheless chosen for a 1000-executor cluster reading ~100 TB:
   datautils.py:1371-1437) stays well inside executor memory.
 * ``spark.sql.files.maxPartitionBytes`` left at default 128 MB: pages
   tables are wide (html binary) so a scan task stays ~O(100 MB).
+
+Two environment variables are read: ``QIZNER_SPARK_MASTER`` (the
+deployment's master address) and ``QIZNER_DRIVER_MEM``. Everything
+else is a constant here or an explicit ``get_spark`` argument.
 """
 
 from __future__ import annotations
@@ -22,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
-def ensure_scan_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
+def ensure_scan_parallelism(df: DataFrame) -> DataFrame:
     """Round-robin repartition a NARROW source up to the session's
     default parallelism when the file layout under-splits it.
 
@@ -40,7 +44,7 @@ def ensure_scan_parallelism(df: DataFrame, min_partitions: int | None = None) ->
     signatures) must be computed AFTER this call so only source bytes
     shuffle."""
     sc = df.sparkSession.sparkContext
-    target = int(min_partitions or sc.defaultParallelism)
+    target = sc.defaultParallelism
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)
@@ -82,9 +86,7 @@ def get_spark(
     master = master or os.environ.get("QIZNER_SPARK_MASTER")
     if not master and not _launcher_has_master():
         master = "local[*]"  # plain `python x.py` needs SOME master
-    shuffle_partitions = shuffle_partitions or int(
-        os.environ.get("QIZNER_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)
-    )
+    shuffle_partitions = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
     builder = SparkSession.builder.appName(app_name)
     if master:
         builder = builder.master(master)
@@ -112,19 +114,12 @@ def get_spark(
         # are CPU-bound, not IO-bound: a "small" 1 MB partition can
         # still carry seconds of compute, and coalescing below the
         # machine's parallelism serializes it. At warehouse scale both
-        # knobs are inert (partitions sit >= the 64 MB advisory size);
-        # override via env for cluster-specific tuning.
+        # knobs are inert (partitions sit >= the 64 MB advisory size).
         .config(
             "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            os.environ.get(
-                "QIZNER_INITIAL_SHUFFLE_PARTITIONS",
-                str(max(shuffle_partitions, 2 * (os.cpu_count() or 16))),
-            ),
+            str(max(shuffle_partitions, 2 * (os.cpu_count() or 16))),
         )
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("QIZNER_MIN_PARTITION_SIZE", "128k"),
-        )
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "128k")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")

@@ -24,15 +24,16 @@ from __future__ import annotations
 import numpy as np
 
 
-def clustered_embedding_matrix(
-    n_clusters: int = 20, per_cluster: int = 25, dim: int = 64,
-    tightness: float = 0.85, seed: int = 11,
-) -> np.ndarray:
-    """(n_clusters * per_cluster, dim) float64 matrix; rows are
-    grouped by cluster (row i belongs to cluster i // per_cluster)."""
-    rng = np.random.RandomState(seed)
-    centers = rng.randn(n_clusters, dim)
+#: the corpus shape: clusters, members per cluster, dimensions
+N_CLUSTERS, PER_CLUSTER, DIM = 20, 25, 64
+
+
+def clustered_embedding_matrix(tightness: float = 0.85) -> np.ndarray:
+    """(N_CLUSTERS * PER_CLUSTER, DIM) float64 matrix (seed 11); rows
+    are grouped by cluster (row i belongs to cluster i // PER_CLUSTER)."""
+    rng = np.random.RandomState(11)
+    centers = rng.randn(N_CLUSTERS, DIM)
     centers /= np.linalg.norm(centers, axis=1, keepdims=True)
-    s = float(np.sqrt((1.0 / tightness - 1.0) / dim))
-    blocks = [c + s * rng.randn(per_cluster, dim) for c in centers]
+    s = float(np.sqrt((1.0 / tightness - 1.0) / DIM))
+    blocks = [c + s * rng.randn(PER_CLUSTER, DIM) for c in centers]
     return np.vstack(blocks)

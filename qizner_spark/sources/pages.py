@@ -91,30 +91,24 @@ def _sql_vocab_array() -> str:
     return f"array({inner})"
 
 
-def synthetic_pages(
-    spark: SparkSession,
-    n_pages: int,
-    words_per_page: int = 60,
-    n_domains: int = 20,
-    hot_domain_fraction: float = 0.3,
-    seed: int = 42,
-) -> DataFrame:
+def synthetic_pages(spark: SparkSession, n_pages: int, words_per_page: int = 60) -> DataFrame:
     """Seeded arbitrary-scale pages — pure native expressions.
 
     Each page's text is ``words_per_page`` vocabulary words chosen by
-    a per-(page, position) multiplicative hash; ~``hot_domain_fraction``
-    of pages land on domain 0 (hot-key skew to exercise AQE/salting).
-    Scales to any ``n_pages`` with zero driver-side data movement.
+    a per-(page, position) multiplicative hash (seed 42); ~30% of
+    pages land on domain 0 of 20 (hot-key skew to exercise
+    AQE/salting). Scales to any ``n_pages`` with zero driver-side
+    data movement.
     """
+    seed, n_domains, hot_per_mille = 42, 20, 300
     base = spark.range(n_pages).withColumnRenamed("id", "page_id")
     word_expr = (
         f"array_join(transform(sequence(0, {words_per_page - 1}), i -> "
         f"element_at({_sql_vocab_array()}, "
         f"1 + int((page_id * 2654435761 + i * 40503 + {seed}) % {len(VOCAB)}))), ' ')"
     )
-    hot_cut = int(hot_domain_fraction * 1000)
     domain_expr = (
-        f"CASE WHEN (page_id * 1103515245 + {seed}) % 1000 < {hot_cut} THEN 0 "
+        f"CASE WHEN (page_id * 1103515245 + {seed}) % 1000 < {hot_per_mille} THEN 0 "
         f"ELSE 1 + int((page_id * 69069 + {seed}) % {n_domains - 1}) END"
     )
     lang_expr = "CASE WHEN (page_id * 48271) % 5 = 0 THEN 'zh' ELSE 'en' END"

@@ -33,7 +33,6 @@ def stream_kg_increments(
     input_dir: str,
     work_dir: str,
     scorer_factory=None,
-    max_files_per_trigger: int | None = 1,
     assemble_kw: dict | None = None,
 ) -> dict:
     """Incremental KG construction over a continuously-landing crawl,
@@ -42,8 +41,8 @@ def stream_kg_increments(
     The DAG splits on a principled line (see
     :func:`qizner_spark.plans.pipeline.assemble_kg`): mention
     detection is per-document and ~all of the compute at 10^12 docs,
-    so it streams — each micro-batch runs the Arrow detection pass on
-    newly-landed pages only and APPENDS to a mention staging sink
+    so it streams — each micro-batch (one landed file per trigger)
+    runs the Arrow detection pass on newly-landed pages only and APPENDS to a mention staging sink
     (exactly-once via the streaming checkpoint; a restart never
     re-scores processed pages). Everything downstream (alias
     dictionary, linking, co-mention graph, canonicalization, triple
@@ -62,29 +61,15 @@ def stream_kg_increments(
     ``release()`` once done with the stages."""
     import posixpath
 
-    from pyspark.sql import functions as F
-
-    from qizner_spark.operators.mentions import detect_mentions
-    from qizner_spark.plans.pipeline import (
-        assemble_kg, default_scorer_factory, extract_pages_text,
-    )
+    from qizner_spark.plans.pipeline import assemble_kg, page_mentions
 
     mentions_dir = posixpath.join(work_dir, "mentions")
     checkpoint_dir = posixpath.join(work_dir, "_stream_checkpoint")
 
-    reader = spark.readStream.schema(PAGES_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    pages = reader.parquet(input_dir)
-    # identical per-row prep to the batch DAG: byte-identity check,
-    # html dropped, warc_ts provenance riding through the Arrow pass
-    docs = extract_pages_text(pages).where(F.col("extract_ok") == 1) \
-        .drop("extract_ok")
-    mentions = detect_mentions(
-        docs, scorer_factory or default_scorer_factory,
-        key_col="url", text_col="text", lang_col="lang",
-        passthrough_cols=["warc_ts"],
-    ).withColumnRenamed("doc_key", "url")
+    pages = spark.readStream.schema(PAGES_SCHEMA) \
+        .option("maxFilesPerTrigger", 1).parquet(input_dir)
+    # the batch DAG's own per-page step
+    _, mentions = page_mentions(pages, scorer_factory)
     # availableNow: process every file that has landed, then stop;
     # exactly-once via the streaming checkpoint
     q = (

@@ -16,7 +16,12 @@ on the object it returns.
 Only reachable code: every top-level definition in qizner_spark/ is
 reached from an entry point, or is a cited reference-parity port on
 the allowlist. One exact-dedup key: the normalized-text md5 lives in
-textstats.fingerprint_col. Scripts import only names that exist."""
+textstats.fingerprint_col. Scripts import only names that exist and
+pass only keywords that name a parameter.
+
+Every option has a caller: every keyword option of the engine layers
+is set by an entry point, script, benchmark or package caller, or is
+an allowlisted test seam or QizNER config mirror."""
 
 from __future__ import annotations
 
@@ -287,3 +292,316 @@ def test_script_imports_resolve():
                 and not _resolves(aliases[node.value.id], node.attr)
             ]
     assert not missing, f"script imports that do not resolve: {missing}"
+
+
+# -- options -----------------------------------------------------------------
+
+# The engine layers: the package outside the reference-parity ports
+# (core/) and the reference corpus IO.
+def _engine_module(rel: str) -> bool:
+    return not rel.startswith(("qizner_spark/core/", "qizner_spark/sources/corpus.py"))
+
+
+# Options no entry point sets, each kept for a stated reason: a test
+# seam (the value names the test file that sets it) or a mirror of a
+# QizNER config (the value is the reference line its docstring cites).
+_OPTION_ALLOWLIST = {
+    "plans/checkpoint.py:run_resumable.crash_after": "test seam: tests/test_streaming_resume.py",
+    "operators/graph.py:connected_components.driver_threshold": "test seam: tests/test_graph.py",
+    "operators/linking.py:count_unlabeled_occurrences.max_surfaces":
+        "test seam: tests/test_graph.py",
+    "operators/mentions.py:detect_mentions.prefix_context_len": "datautils.py:1371-1422",
+}
+_SEAM = "test seam: "
+
+
+class _Def:
+    """A top-level function or method: its positional parameters (no
+    ``self``), its options (defaulted parameters, ``_`` names
+    excluded) and its ``**kwargs`` name."""
+
+    def __init__(self, key: str, node: ast.AST, method: bool):
+        a = node.args
+        pos = [p.arg for p in a.posonlyargs + a.args]
+        defaulted = pos[len(pos) - len(a.defaults):] if a.defaults else []
+        defaulted += [p.arg for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+        static = any(isinstance(d, ast.Name) and d.id == "staticmethod"
+                     for d in node.decorator_list)
+        self.key, self.node = key, node
+        self.pos = pos[1:] if method and not static else pos
+        self.params = set(self.pos) | {p.arg for p in a.kwonlyargs}
+        self.options = {p for p in defaulted if not p.startswith("_")}
+        self.kwarg = a.kwarg.arg if a.kwarg else None
+
+
+def _package_defs() -> tuple[dict[str, _Def], dict[str, list[str]]]:
+    """(``"<module path>:<qualname>" -> _Def`` for the package and the
+    driver contract, callee name -> keys: a function or method by its
+    name, a class by its name to its ``__init__``)."""
+    files = sorted(glob.glob("qizner_spark/**/*.py", root_dir=REPO, recursive=True))
+    defs: dict[str, _Def] = {}
+    by_name: dict[str, list[str]] = {}
+    for rel in files + ["__spark_entry__.py"]:
+        mod = os.path.relpath(rel, "qizner_spark") if rel.startswith("qizner_spark") else rel
+        for stmt in _parse(rel).body:
+            funcs = []
+            if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                funcs.append((stmt.name, stmt, False, stmt.name))
+            elif isinstance(stmt, ast.ClassDef):
+                funcs += [(f"{stmt.name}.{f.name}", f, True,
+                           stmt.name if f.name == "__init__" else f.name)
+                          for f in stmt.body
+                          if isinstance(f, (ast.FunctionDef, ast.AsyncFunctionDef))]
+            for qual, node, method, callee in funcs:
+                key = f"{mod}:{qual}"
+                defs[key] = _Def(key, node, method)
+                by_name.setdefault(callee, []).append(key)
+    return defs, by_name
+
+
+def _callee(call: ast.Call) -> str | None:
+    f = call.func
+    return f.id if isinstance(f, ast.Name) else f.attr if isinstance(f, ast.Attribute) else None
+
+
+def _splat_param(value: ast.AST) -> str | None:
+    """``p`` for a ``**p`` or ``**(p or {})`` argument, else None."""
+    if isinstance(value, ast.BoolOp) and isinstance(value.op, ast.Or):
+        value = value.values[0]
+    return value.id if isinstance(value, ast.Name) else None
+
+
+def _dict_keys(value: ast.AST) -> list[str] | None:
+    """The keys of a ``dict(k=...)`` or ``{"k": ...}`` literal."""
+    if isinstance(value, ast.Dict) and all(
+            isinstance(k, ast.Constant) and isinstance(k.value, str) for k in value.keys):
+        return [k.value for k in value.keys]
+    if (isinstance(value, ast.Call) and _callee(value) == "dict" and not value.args
+            and all(k.arg for k in value.keywords)):
+        return [k.arg for k in value.keywords]
+    return None
+
+
+def _mapping_keys(tree: ast.Module, value: ast.AST) -> list[str] | None:
+    """The keys of a ``**mapping`` argument that names a variable or
+    attribute the file assigns only dict literals to (directly, or as
+    the return of one of its own functions); None when it cannot tell."""
+    def target(n):
+        return (n.id if isinstance(n, ast.Name)
+                else n.attr if isinstance(n, ast.Attribute) else None)
+
+    funcs = {f.name: f for f in tree.body if isinstance(f, ast.FunctionDef)}
+    assigned = [a.value for a in ast.walk(tree) if isinstance(a, ast.Assign)
+                and any(target(t) == target(value) for t in a.targets)]
+    keys: list[str] = []
+    for v in assigned:
+        if isinstance(v, ast.Call) and _callee(v) in funcs:
+            returns = [r.value for r in ast.walk(funcs[_callee(v)])
+                       if isinstance(r, ast.Return)]
+        else:
+            returns = [v]
+        for r in returns:
+            if (k := _dict_keys(r)) is None:
+                return None
+            keys += k
+    return keys if assigned and target(value) else None
+
+
+def _forwards(defs, by_name) -> dict[tuple[str, str], list[str]]:
+    """(function key, parameter) -> the keys of the functions it
+    passes that parameter to as ``**parameter``."""
+    out: dict[tuple[str, str], list[str]] = {}
+    for key, d in defs.items():
+        names = d.params | {d.kwarg}
+        for call in ast.walk(d.node):
+            if isinstance(call, ast.Call):
+                for kw in call.keywords:
+                    if kw.arg is None and (p := _splat_param(kw.value)) in names:
+                        out.setdefault((key, p), []).extend(by_name.get(_callee(call), []))
+    return out
+
+
+def _keyword_targets(key, kw, defs, forwards, seen=()) -> list[str]:
+    """The keys of the functions on which keyword ``kw`` passed to
+    ``key`` lands: ``key`` itself, or through ``**kwargs`` forwarding
+    the functions it forwards to ([] when it lands nowhere)."""
+    d = defs[key]
+    if kw in d.params:
+        return [key]
+    if d.kwarg is None or key in seen:
+        return []
+    targets = forwards.get((key, d.kwarg))
+    if not targets:
+        return [key]  # forwarded somewhere the test cannot see: accept
+    return [t for k in targets for t in _keyword_targets(k, kw, defs, forwards, (*seen, key))]
+
+
+def _option_settings(defs, by_name):
+    """Every call site's settings, as (target key, option, source):
+    source None sets the option; ``(key, param)`` forwards the
+    enclosing engine function's own option ``param`` unchanged, which
+    sets the target's option only where that one is set."""
+    forwards = _forwards(defs, by_name)
+    files = [rel for pattern in _ROOT_GLOBS for rel in sorted(glob.glob(pattern, root_dir=REPO))]
+    files += sorted(glob.glob("qizner_spark/**/*.py", root_dir=REPO, recursive=True))
+    settings = []
+    for rel in dict.fromkeys(files):
+        mod = os.path.relpath(rel, "qizner_spark") if rel.startswith("qizner_spark") else rel
+        tree = _parse(rel)
+        scopes = [(None, tree)]
+        for stmt in tree.body:
+            if isinstance(stmt, ast.ClassDef):
+                scopes += [(f"{mod}:{stmt.name}.{f.name}", f) for f in stmt.body
+                           if isinstance(f, (ast.FunctionDef, ast.AsyncFunctionDef))]
+            elif isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                scopes.append((f"{mod}:{stmt.name}", stmt))
+        # each node's enclosing top-level function or method (the
+        # module's, None, is walked first and overridden)
+        owner = {id(n): scope_key for scope_key, scope in scopes for n in ast.walk(scope)}
+
+        for call in ast.walk(tree):
+            if not isinstance(call, ast.Call):
+                continue
+            enclosing = defs.get(owner.get(id(call)))
+
+            def source(value):
+                if (enclosing and isinstance(value, ast.Name)
+                        and value.id in enclosing.options):
+                    return (enclosing.key, value.id)
+                return None
+
+            for key in by_name.get(_callee(call), []):
+                d = defs[key]
+                for i, arg in enumerate(call.args):
+                    if isinstance(arg, ast.Starred):  # *args: cannot tell
+                        settings += [(key, p, None) for p in d.pos[i:]]
+                        break
+                    if i < len(d.pos):
+                        settings.append((key, d.pos[i], source(arg)))
+                for kw in call.keywords:
+                    if kw.arg is None:
+                        p = _splat_param(kw.value)
+                        if enclosing and (enclosing.key, p) in forwards:
+                            continue  # a forward: its callers set it
+                        keys = _mapping_keys(tree, kw.value)
+                        if keys is None:  # cannot tell
+                            settings += [(key, o, None) for o in d.options]
+                        settings += [(t, k, None) for k in keys or ()
+                                     for t in _keyword_targets(key, k, defs, forwards)]
+                        continue
+                    for t in _keyword_targets(key, kw.arg, defs, forwards):
+                        settings.append((t, kw.arg, source(kw.value)))
+                    keys = _dict_keys(kw.value)
+                    for fwd in forwards.get((key, kw.arg), []) if keys else []:
+                        settings += [(t, k, None) for k in keys
+                                     for t in _keyword_targets(fwd, k, defs, forwards)]
+    return settings
+
+
+def _option_key(key: str, option: str) -> str:
+    return f"{key}.{option}"
+
+
+def _unset_options() -> tuple[set[str], set[str]]:
+    """(every option of the engine layers, the options no root sets)."""
+    defs, by_name = _package_defs()
+    options = {
+        _option_key(key, o) for key, d in defs.items() for o in d.options
+        if not key.startswith("__spark_entry__") and _engine_module(f"qizner_spark/{key}")
+    }
+    settings = _option_settings(defs, by_name)
+    is_set: set[str] = set()
+    while True:
+        new = {_option_key(t, o) for t, o, src in settings
+               if src is None or _option_key(*src) in is_set} - is_set
+        if not new:
+            return options, options - is_set
+        is_set |= new
+
+
+def test_every_option_is_set():
+    """Every keyword option of the engine layers is set by some entry
+    point, script, benchmark or package caller, or sits on the
+    allowlist with its reason. An option no caller sets is dead
+    weight: a constant or a literal says the same with less code."""
+    options, unset = _unset_options()
+    flagged = sorted(unset - set(_OPTION_ALLOWLIST))
+    assert not flagged, (
+        f"options no caller sets: {flagged} — inline them as constants, or "
+        "allowlist a test seam or a reference-config mirror with its reason"
+    )
+    stale = sorted(set(_OPTION_ALLOWLIST) - unset)
+    assert not stale, f"option allowlist entries that are gone or now set: {stale}"
+    defs, _ = _package_defs()
+    for key, reason in _OPTION_ALLOWLIST.items():
+        fn, option = key.rsplit(".", 1)
+        if reason.startswith(_SEAM):
+            with open(os.path.join(REPO, reason[len(_SEAM):])) as f:
+                assert f"{option}=" in f.read(), f"{key}: {reason} does not set it"
+        else:
+            docs = (ast.get_docstring(defs[fn].node) or "") + (ast.get_docstring(
+                _parse(os.path.join("qizner_spark", fn.split(":")[0]))) or "")
+            assert reason in docs, f"{key}: citation {reason!r} not in its docstrings"
+
+
+# -- script keywords ---------------------------------------------------------
+def _def_key(obj) -> str | None:
+    """The ``_package_defs`` key of a package function or class."""
+    import inspect
+
+    try:
+        rel = os.path.relpath(inspect.getsourcefile(obj), REPO)
+    except TypeError:
+        return None
+    mod = os.path.relpath(rel, "qizner_spark") if rel.startswith("qizner_spark") else rel
+    return f"{mod}:{obj.__qualname__}" + (".__init__" if inspect.isclass(obj) else "")
+
+
+def test_script_keywords_resolve():
+    """Every keyword a root file passes to a package function (or a
+    driver-contract function) names one of its parameters, directly
+    or through ``**kwargs`` forwarding — including the keys of a
+    ``**mapping`` built from dict literals and of a dict literal
+    handed to a forwarded parameter (``assemble_kw=dict(...)``). A
+    deleted option otherwise breaks a script silently."""
+    defs, by_name = _package_defs()
+    forwards = _forwards(defs, by_name)
+    missing = []
+    for pattern in _ROOT_GLOBS:
+        for rel in sorted(glob.glob(pattern, root_dir=REPO)):
+            tree = _parse(rel)
+            own = {s.name for s in tree.body if isinstance(s, _DEFS)}
+            bound = {}  # local name -> imported package module or object
+            for node in ast.walk(tree):
+                if isinstance(node, ast.ImportFrom) and node.level == 0 and _ours(node.module):
+                    mod = importlib.import_module(node.module)
+                    for a in node.names:
+                        bound[a.asname or a.name] = getattr(mod, a.name, None) or \
+                            importlib.import_module(f"{node.module}.{a.name}")
+                elif isinstance(node, ast.Import):
+                    bound.update({a.asname or a.name: importlib.import_module(a.name)
+                                  for a in node.names if _ours(a.name) and a.asname})
+            for call in ast.walk(tree):
+                if not isinstance(call, ast.Call):
+                    continue
+                f = call.func
+                if isinstance(f, ast.Name) and f.id not in own:
+                    obj = bound.get(f.id)
+                elif isinstance(f, ast.Attribute) and isinstance(f.value, ast.Name) \
+                        and f.value.id in bound:
+                    obj = getattr(bound[f.value.id], f.attr, None)
+                else:
+                    continue
+                if (key := _def_key(obj) if callable(obj) else None) not in defs:
+                    continue
+                passed = [kw.arg for kw in call.keywords if kw.arg]
+                passed += [k for kw in call.keywords if kw.arg is None
+                           for k in _mapping_keys(tree, kw.value) or ()]
+                bad = [k for k in passed if not _keyword_targets(key, k, defs, forwards)]
+                for kw in call.keywords:  # assemble_kw=dict(...) and the like
+                    fwd = forwards.get((key, kw.arg), []) if kw.arg else []
+                    bad += [f"{kw.arg}[{k}]" for k in (_dict_keys(kw.value) or []) if fwd
+                            and not any(_keyword_targets(t, k, defs, forwards) for t in fwd)]
+                missing += [f"{rel}:{call.lineno} {key}({k}=)" for k in bad]
+    assert not missing, f"keywords that name no parameter: {missing}"
+

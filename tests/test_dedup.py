@@ -82,7 +82,7 @@ class TestMinhash:
 
     def test_lsh_finds_near_dups(self, spark, docs):
         sigs = minhash_signatures(docs, num_hashes=64)
-        pairs = minhash_dedup_pairs(sigs, threshold=0.5, num_hashes=64, bands=16)
+        pairs = minhash_dedup_pairs(sigs, threshold=0.5)
         got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
         assert (0, 1) in got and (0, 3) in got
 

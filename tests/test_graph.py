@@ -59,22 +59,23 @@ def test_component_map_plan_names_its_path(spark):
     assert not connected_components(chain, driver_threshold=0).isLocal()
 
 
-def test_salted_equals_unsalted_on_skewed_hub(spark):
+def test_salted_equals_unsalted_on_skewed_hub(spark, monkeypatch):
     """Explicit skew salting (north_rule): a hub node with ~200
     neighbors plus chained tails. The salted distributed path
     (salt_buckets=16), the window path (salt_buckets=1), and the
     driver union-find must all emit identical components."""
+    from qizner_spark.operators import graph
+
     edges = [("hub", f"n{i:03d}") for i in range(200)]           # star skew
     edges += [(f"n{i:03d}", f"n{i:03d}x") for i in range(0, 200, 7)]  # tails
     edges += [("za", "zb"), ("zb", "zc")]                        # separate comp
     df = spark.createDataFrame(edges, ["src", "dst"])
-    # hot_threshold=10 FORCES the hub (200 rows) onto the salted hot
+    # HOT_THRESHOLD=10 FORCES the hub (200 rows) onto the salted hot
     # path while the tail keys stay cold — both code paths exercised
+    monkeypatch.setattr(graph, "HOT_THRESHOLD", 10)
     salted = {
         (r["node"], r["component"])
-        for r in connected_components(
-            df, driver_threshold=0, salt_buckets=16, hot_threshold=10
-        ).collect()
+        for r in connected_components(df, driver_threshold=0, salt_buckets=16).collect()
     }
     window = {
         (r["node"], r["component"])

@@ -13,8 +13,7 @@ Rules encoded here:
   * The components join is UNHINTED on both assembly paths, and the
     alias-dictionary join is UNHINTED by default (AQE decides); its
     ``broadcast_alias`` flag must actually add the hint when forced
-    (no dead flag), and the hybrid alias hot/cold path must stay
-    equi-join only.
+    (no dead flag).
 
 Plans are inspected AFTER an action so AQE's runtime replanning is
 final (the string still contains the initial plan as a subtree, so
@@ -161,10 +160,9 @@ class TestAliasBroadcastGuard:
         mentions, alias = _alias_fixture(spark, sf_dir)
         cols = ["doc_id", "pos", "mention", "ent_type", "entity_id"]
         base = link_mentions(mentions, alias).select(cols)
-        for strategy in (True, 2):  # forced broadcast; hybrid floor=2
-            other = link_mentions(mentions, alias, broadcast_alias=strategy).select(cols)
-            assert base.exceptAll(other).count() == 0, strategy
-            assert other.exceptAll(base).count() == 0, strategy
+        forced = link_mentions(mentions, alias, broadcast_alias=True).select(cols)
+        assert base.exceptAll(forced).count() == 0
+        assert forced.exceptAll(base).count() == 0
 
     def test_default_is_unhinted(self, spark, sf_dir):
         from qizner_spark.operators.linking import link_mentions
@@ -183,15 +181,10 @@ class TestAliasBroadcastGuard:
         assert hints() == input_hints, "default link join added a broadcast hint"
         assert hints(broadcast_alias=True) == input_hints + 1, \
             "broadcast_alias=True is a dead flag"
-        # hybrid: adds hot-head hint(s) only (subtree duplication in
-        # the analyzed string makes the exact count brittle); the
-        # cold tail staying a plain equi-join is covered by the
-        # no-BNLJ plan test below
-        assert hints(broadcast_alias=2) > input_hints
 
     def test_flagship_parity_across_alias_strategies(self, spark, sf_dir):
-        """build_kg threads broadcast_alias; forced-hint and hybrid
-        hot/cold must emit the same triples as the unhinted default."""
+        """build_kg threads broadcast_alias; the forced hint must emit
+        the same triples as the unhinted default."""
         from qizner_spark.plans.pipeline import build_kg_from_sf_dir
 
         def triples(**kw):
@@ -200,20 +193,15 @@ class TestAliasBroadcastGuard:
             stages.release()
             return rows
 
-        base = triples()
-        for strategy in (True, 2):
-            assert triples(broadcast_alias=strategy) == base, strategy
+        assert triples(broadcast_alias=True) == triples()
 
-    def test_hybrid_plans_no_bnlj_and_default_still_broadcasts_via_aqe(self, spark, sf_dir):
+    def test_default_still_broadcasts_via_aqe(self, spark, sf_dir):
         from qizner_spark.operators.linking import link_mentions
 
         mentions, alias = _alias_fixture(spark, sf_dir)
         default_plan = final_plan(link_mentions(mentions, alias))
         # tiny dictionary: AQE's size stats still pick broadcast-hash
         assert "BroadcastHashJoin" in default_plan
-        hybrid_plan = final_plan(link_mentions(mentions, alias, broadcast_alias=2))
-        assert "BroadcastNestedLoopJoin" not in hybrid_plan
-        assert "CartesianProduct" not in hybrid_plan
 
 
 class TestComponentsLargeGraphPath:
@@ -256,67 +244,63 @@ class TestComponentsLargeGraphPath:
         stages.release()
         assert all(df.storageLevel == StorageLevel.NONE for df in owned)
 
+    def test_release_frees_the_distributed_checkpoints(self, spark, sf_dir, monkeypatch):
+        """The distributed rounds localCheckpoint the edge set: each
+        round frees the one it supersedes, and ``release()`` frees the
+        last, which the component map reads — after the triples action
+        and ``release()`` the session holds no more persistent RDDs
+        than before the build. The map still shows its path to the
+        benchmark's tracer."""
+        import importlib.util
+        import os
+        import sys
+
+        from qizner_spark.operators import graph
+        from qizner_spark.plans.pipeline import build_kg_from_sf_dir
+
+        path = os.path.join(os.path.dirname(os.path.dirname(__file__)), "perfbench", "spans.py")
+        spec = importlib.util.spec_from_file_location("perfbench_spans", path)
+        spans = importlib.util.module_from_spec(spec)
+        monkeypatch.setitem(sys.modules, spec.name, spans)  # its dataclasses look it up
+        spec.loader.exec_module(spans)
+
+        maps = []
+        cc = graph.connected_components
+
+        def distributed(edges, **kw):
+            maps.append(cc(edges, driver_threshold=0, **kw))
+            return maps[-1]
+
+        monkeypatch.setattr(graph, "connected_components", distributed)
+        jsc = spark.sparkContext._jsc
+        before = jsc.getPersistentRDDs().size()
+        stages = build_kg_from_sf_dir(spark, sf_dir)
+        stages["triples"].write.format("noop").mode("overwrite").save()
+        assert spans.plan_path(maps[-1]) == "distributed"
+        stages.release()
+        assert jsc.getPersistentRDDs().size() <= before, \
+            "the build left persistent RDDs behind after release()"
+
 
 class TestAnnQueryBroadcastGuard:
-    """Mirror of TestAliasBroadcastGuard for ann_topk's query side:
-    self-ANN (queries = corpus, the natural 100-TB dedup shape) makes
-    the query side caller-sized, so the operator must not carry an
-    unconditional broadcast hint. NOTE the multiprobe explode
-    multiplies the query side by 1+|probe_masks| before the join —
-    the int guard accounts for it."""
+    """ann_topk broadcasts its query side — its documented precondition
+    is a bounded-small query set (the multiprobe explode multiplies it
+    by 1+|probe_masks| before the join)."""
 
     @staticmethod
     def _emb(spark, sf_dir):
         return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-
-    def test_self_ann_default_is_unhinted_equi_join(self, spark, sf_dir):
-        from qizner_spark.operators.similarity import ann_topk
-
-        emb = self._emb(spark, sf_dir)
-        df = ann_topk(emb, emb, k=5, n_planes=4, dim=64)
-        analyzed = df._jdf.queryExecution().analyzed().toString()
-        assert "ResolvedHint" not in analyzed, \
-            "self-ANN default plan carries a broadcast hint"
-        plan = final_plan(df)
-        assert "BroadcastNestedLoopJoin" not in plan
-        assert "CartesianProduct" not in plan
 
     def test_forced_hint_is_not_dead(self, spark, sf_dir):
         from qizner_spark.operators.similarity import ann_topk
 
         emb = self._emb(spark, sf_dir)
         q = emb.where("vec_id < 5")
-        hinted = ann_topk(emb, q, k=5, n_planes=4, dim=64,
-                          broadcast_queries=True)
+        hinted = ann_topk(emb, q, k=5, n_planes=4, dim=64)
         assert "ResolvedHint" in hinted._jdf.queryExecution().analyzed().toString()
-
-    def test_int_guard_hints_only_when_bounded(self, spark, sf_dir):
-        from qizner_spark.operators.similarity import ann_topk, probe_masks
-
-        emb = self._emb(spark, sf_dir)
-        q = emb.where("vec_id < 5")
-        factor = 1 + len(probe_masks(4, 1))
-
-        def hints(limit: int) -> int:
-            df = ann_topk(emb, q, k=5, n_planes=4, dim=64,
-                          broadcast_queries=limit)
-            return df._jdf.queryExecution().analyzed().toString().count(
-                "ResolvedHint")
-
-        assert hints(5 * factor) == 1        # exactly at the bound
-        assert hints(5 * factor - 1) == 0    # explode factor counted
-
-    def test_parity_across_strategies(self, spark, sf_dir):
-        from qizner_spark.operators.similarity import ann_topk
-
-        emb = self._emb(spark, sf_dir)
-        q = emb.where("vec_id < 5")
-        base = ann_topk(emb, q, k=5, n_planes=4, dim=64)
-        for strategy in (True, 10_000):
-            other = ann_topk(emb, q, k=5, n_planes=4, dim=64,
-                             broadcast_queries=strategy)
-            assert base.exceptAll(other).count() == 0, strategy
-            assert other.exceptAll(base).count() == 0, strategy
+        plan = final_plan(hinted)
+        assert "BroadcastNestedLoopJoin" not in plan
+        assert "CartesianProduct" not in plan
 
 
 class TestExchangeShapes:

@@ -24,15 +24,14 @@ from pyspark.sql import functions as F
 SF001 = "/root/testdata/sf0.01"
 
 
-def clustered_embeddings(spark, n_clusters=20, per_cluster=25, dim=64,
-                         tightness=0.85, seed=11):
+def clustered_embeddings(spark, tightness=0.85):
     """The clustered corpus as a DataFrame (vec_id, cluster_id,
     embedding ARRAY<DOUBLE>) — the shape the retrieval operators
     consume."""
-    from qizner_spark.sources.embeddings import clustered_embedding_matrix
+    from qizner_spark.sources.embeddings import PER_CLUSTER, clustered_embedding_matrix
 
-    X = clustered_embedding_matrix(n_clusters, per_cluster, dim, tightness, seed)
-    rows = [(i, i // per_cluster, [float(x) for x in X[i]]) for i in range(X.shape[0])]
+    X = clustered_embedding_matrix(tightness)
+    rows = [(i, i // PER_CLUSTER, [float(x) for x in X[i]]) for i in range(X.shape[0])]
     return spark.createDataFrame(
         rows, "vec_id long, cluster_id long, embedding array<double>"
     )

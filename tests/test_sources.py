@@ -145,7 +145,7 @@ class TestPages:
         assert bad == 0
 
     def test_synthetic_skew(self, spark):
-        p = synthetic_pages(spark, 1000, words_per_page=4, hot_domain_fraction=0.3)
+        p = synthetic_pages(spark, 1000, words_per_page=4)
         hot = p.where(F.col("url").startswith("https://src0.")).count()
         assert 200 < hot < 420  # ~30% on the hot domain
 

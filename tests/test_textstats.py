@@ -6,7 +6,6 @@ from pyspark.sql import functions as F
 from qizner_spark.operators.multimodal import (
     attach_fake_media,
     decode_fake,
-    decode_real,
     extract_features,
 )
 from qizner_spark.operators.textstats import (
@@ -101,10 +100,6 @@ class TestMultimodal:
         a = decode_fake(b"hello world", "image")
         b = decode_fake(b"hello world", "image")
         assert (a[0] == b[0]).all() and a[1:] == b[1:]
-
-    def test_decode_real_raises_without_libs(self):
-        with pytest.raises(NotImplementedError):
-            decode_real(b"\x89PNG", "image")
 
 
 class TestTfidf:
